@@ -1,5 +1,8 @@
 package graft.operators
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.functions._
@@ -22,14 +25,24 @@ import graft.sources.TableIO
   *      :340-341). Conflict losers simply don't appear in the next
   *      snapshot — the declarative form of the reference's 409-parse +
   *      DELETE (:508-582);
-  *   4. stage BOTH outputs, then commit both, then commit the
-  *      watermark — and only on success, fixing the reference's
-  *      write-even-on-error gap (:138).
+  *   4. stage BOTH outputs concurrently, then commit both
+  *      concurrently, then commit the watermark — and only on success,
+  *      fixing the reference's write-even-on-error gap (:138). Each
+  *      output is computed from both stores' OLD snapshots, so neither
+  *      leg waits on the other; if either stage fails, every stage
+  *      that succeeded is aborted and no store is touched.
+  *
+  * `runAll` runs the specs of a config that share no store at the
+  * same time: specs that share a store, directly or through other
+  * specs, form one group that runs one after another in config order,
+  * so a hub store (A↔H, H↔B) never loses an update.
   *
   * Scale: each leg is one shuffle on the id columns (the LWW hash
   * aggregate with map-side combine); the window filter is a pushed
   * predicate; with a date-partitioned TableIO layout it becomes
-  * partition pruning. Nothing is collected to the driver.
+  * partition pruning. Nothing is collected to the driver. A tick's
+  * jobs are small (AQE folds each leg to a task or two), so running
+  * independent legs and specs side by side is what fills the cores.
   */
 object SyncRunner {
 
@@ -84,12 +97,14 @@ object SyncRunner {
     val newL = LwwMerge.merge(dest = l, incoming = inR, ids, spec.versionCol)
 
     // 4. stage both before committing either: each output is computed
-    // from both stores' OLD snapshots.
-    val pR = sides.right.prepare(newR)
-    val pL =
-      try sides.left.prepare(newL)
-      catch { case NonFatal(e) => pR.abort(); throw e }
-    pR.commit(); pL.commit()
+    // from both stores' OLD snapshots, so the two stages run together.
+    val staged = concurrently(spark,
+      Seq(() => sides.right.prepare(newR), () => sides.left.prepare(newL)))
+    staged.collectFirst { case Failure(e) => e }.foreach { e =>
+      staged.foreach(_.foreach(_.abort()))
+      throw e
+    }
+    concurrently(spark, staged.map(p => () => p.get.commit())).foreach(_.get)
 
     // the staging writes were the observed actions; metrics are ready
     val stats =
@@ -107,9 +122,14 @@ object SyncRunner {
   def specWmPath(wmPath: String, specName: String): String =
     wmPath + "." + specName.replaceAll("[^A-Za-z0-9._-]", "_")
 
-  /** All specs of a config, reference order; one spec failing must not
-    * abort its siblings (the reference's deliberately-broken third
-    * sync, tests/testConfig.json "this will fail!!").
+  /** All specs of a config; one spec failing must not abort its
+    * siblings (the reference's deliberately-broken third sync,
+    * tests/testConfig.json "this will fail!!"). Reports come back in
+    * config order.
+    *
+    * Specs that share no store run concurrently ([[storeGroups]]);
+    * specs that do share one run one after another in config order, so
+    * each reads the other's committed output.
     *
     * Each spec owns its own watermark (`specWmPath`), committed when
     * THAT spec succeeds. A single shared watermark gated on every spec
@@ -127,7 +147,7 @@ object SyncRunner {
       specs: Seq[(SyncSpec, Sides)],
       wmPath: String,
       nowMillis: Long): Seq[RunReport] = {
-    specs.map { case (spec, sides) =>
+    def run(spec: SyncSpec, sides: Sides): RunReport = {
       val wm = specWmPath(wmPath, spec.name)
       try {
         val span = Watermark.nextSpan(wm, nowMillis)
@@ -140,5 +160,54 @@ object SyncRunner {
         RunReport(spec.name, Nil, Some(e.toString))
       }
     }
+    val groups = storeGroups(specs.map(_._2))
+    concurrently(spark, groups.map(g => () => g.map { i =>
+      val (spec, sides) = specs(i)
+      i -> run(spec, sides)
+    })).flatMap(_.get).sortBy(_._1).map(_._2)
+  }
+
+  /** Indices of `sides` grouped so that two specs sharing a store,
+    * directly or through other specs, land in the same group. Stores
+    * are keyed on their normalized location ([[TableIO.key]]), so two
+    * spellings of one directory are one store. Each group lists its
+    * specs in input order; groups are ordered by their first spec.
+    */
+  private def storeGroups(sides: Seq[Sides]): Seq[Seq[Int]] =
+    sides.zipWithIndex.foldLeft(Vector.empty[(Set[String], Vector[Int])]) {
+      case (groups, (s, i)) =>
+        val keys = Set(TableIO.key(s.left.path), TableIO.key(s.right.path))
+        val (joined, rest) = groups.partition(_._1.exists(keys))
+        rest :+ (joined.flatMap(_._1).toSet ++ keys -> (joined.flatMap(_._2).sorted :+ i))
+    }.map(_._2).sortBy(_.head)
+
+  /** Runs `thunks` on threads created for this call, at most
+    * `defaultParallelism` at once, and returns every outcome in input
+    * order (fatal errors included, as `Failure`s). A new thread
+    * inherits the caller's Spark local properties (job group,
+    * scheduler pool, description) through Spark's inheritable
+    * thread-local, so `cancelJobGroup` and listener attribution keep
+    * covering the work; it also runs with the caller's session active.
+    */
+  private def concurrently[T](spark: SparkSession,
+      thunks: Seq[() => T]): Seq[Try[T]] = {
+    val out = new Array[Try[T]](thunks.size)
+    val next = new AtomicInteger()
+    val workers =
+      Seq.fill(math.min(thunks.size, spark.sparkContext.defaultParallelism)) {
+        val t = new Thread(() => {
+          SparkSession.setActiveSession(spark)
+          var i = next.getAndIncrement()
+          while (i < thunks.size) {
+            out(i) = try Success(thunks(i)()) catch { case e: Throwable => Failure(e) }
+            i = next.getAndIncrement()
+          }
+        }, "graft-sync")
+        t.setDaemon(true)
+        t.start()
+        t
+      }
+    workers.foreach(_.join())
+    out.toSeq
   }
 }

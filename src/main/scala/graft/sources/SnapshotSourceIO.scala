@@ -19,11 +19,12 @@ import graft.sources.v2.GraftSnapshotDataSource
   *    leaves the store on the old version with no partial state);
   *  - computed-from-old-state safety needs no cross-store staging
   *    here, because the connector PINS each read to the snapshot that
-  *    was live when the DataFrame was defined: the second leg's plan
-  *    keeps reading the first store's pre-commit version (the one
-  *    commit of grace the store retains) even after leg one publishes;
-  *  - cross-store atomicity degrades to per-store atomic + idempotent
-  *    retry: if leg two's write fails after leg one committed, the
+  *    was live when the DataFrame was defined: each leg's plan keeps
+  *    reading the other store's pre-commit version (the one commit of
+  *    grace the store retains) even after that store publishes, so
+  *    the sync runner commits both legs concurrently;
+  *  - cross-store atomicity stays per-store atomic + idempotent
+  *    retry: if one leg's write fails while the other's commits, the
   *    tick is half-applied — the watermark does NOT advance, and the
   *    retried tick re-merges the same window, which LWW absorbs
   *    (T5's at-least-once discipline; the reference's sequential

@@ -19,6 +19,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * swapped. Single-phase `overwrite` is prepare+commit.
   */
 trait TableIO {
+  /** Location of the store; [[TableIO.key]] is its identity. */
+  def path: String
   def read(spark: SparkSession): DataFrame
   def exists: Boolean
   def prepare(df: DataFrame): TableIO.Prepared
@@ -27,6 +29,11 @@ trait TableIO {
 
 object TableIO {
   trait Prepared { def commit(): Unit; def abort(): Unit }
+
+  /** A location in absolute, normalized form: two spellings of one
+    * directory (relative, `./`, `../`) map to the same key.
+    */
+  def key(path: String): String = Paths.get(path).toAbsolutePath.normalize.toString
 }
 
 /** Parquet snapshot store with versioned-snapshot + atomic-pointer
@@ -136,9 +143,11 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
     // EVERY call, so a new snapshot is picked up immediately (its dir
     // is a different cache key). The adopted plain layout (dir ==
     // path) is not versioned and stays uncached. No results are
-    // cached: the value is an unexecuted plan.
+    // cached: the value is an unexecuted plan. The key is the dir's
+    // normalized location, so a store opened through another spelling
+    // of its path shares the entry and its eviction.
     if (dir == path) spark.read.parquet(dir)
-    else ParquetTableIO.planCache.computeIfAbsent((spark, dir),
+    else ParquetTableIO.planCache.computeIfAbsent((spark, TableIO.key(dir)),
       _ => spark.read.parquet(dir))
   }
 
@@ -262,8 +271,10 @@ object ParquetTableIO {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), org.apache.spark.sql.DataFrame]()
 
   /** Drop every session's cached plan for a retired snapshot dir. */
-  private[sources] def evictPlans(dir: String): Unit =
-    planCache.keySet.removeIf(_._2 == dir)
+  private[sources] def evictPlans(dir: String): Unit = {
+    val k = TableIO.key(dir)
+    planCache.keySet.removeIf(_._2 == k)
+  }
 
   /** Version number of a "v-<n>[-uid]" snapshot dir name — THE parser
     * for that naming contract (the artifact store's vacuum uses it

@@ -121,4 +121,61 @@ class DaemonSpec extends SparkSpec {
     assert(l.currentDir.get.contains("v-"))
     new java.io.File(l.currentDir.get).list().count(_.startsWith("_day=")) shouldBe 1
   }
+
+  test("every job of a tick carries the caller's job group") {
+    val base = Files.createTempDirectory("daemon-group")
+    val dataRoot = base.resolve("data").toString
+    // two specs over four stores: the legs and the specs of the tick
+    // run on threads the tick creates
+    Seq("s1_l", "s1_r", "s2_l", "s2_r").zipWithIndex.foreach { case (t, i) =>
+      Seq((s"id-$i", 10L + i, t)).toDF("id", "version", "text")
+        .write.parquet(s"$dataRoot/$t")
+    }
+    val cfgPath = base.resolve("config.json")
+    Files.writeString(cfgPath,
+      """{ "period": 1, "syncs": [
+        |  { "name": "s1", "cassandra": { "table": "s1_l" },
+        |    "elasticsearch": { "index": "s1_r" } },
+        |  { "name": "s2", "day_col": "_day", "cassandra": { "table": "s2_l" },
+        |    "elasticsearch": { "index": "s2_r" } } ] }""".stripMargin)
+    val cfg = core.SyncConfig.load(spark, cfgPath.toString)
+
+    // detached folds of other suites would submit jobs with no group
+    val idle = System.currentTimeMillis() + 60000L
+    while (sources.IncrementalDocArtifact.Maintenance.queueDepth > 0 &&
+        System.currentTimeMillis() < idle) Thread.sleep(50L)
+
+    val sc = spark.sparkContext
+    val group = s"tick-${java.util.UUID.randomUUID()}"
+    val barrier = s"$group-barrier"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "daemon tick")
+      val reports = Daemon.tick(spark, cfg, base.resolve("wm.json").toString,
+        dataRoot, System.currentTimeMillis())
+      reports.map(_.failed) shouldBe Seq(false, false)
+      // the bus delivers in order: once the barrier job's start is
+      // seen, so is every job of the tick
+      sc.setJobGroup(barrier, "listener barrier")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!groups.contains(barrier) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20L)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    groups.contains(barrier) shouldBe true
+    val tickJobs = groups.toArray.map(String.valueOf(_)).filterNot(_ == barrier)
+    tickJobs should not be empty
+    all(tickJobs.toSeq) shouldBe group
+  }
 }
+

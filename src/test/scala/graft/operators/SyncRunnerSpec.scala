@@ -1,12 +1,12 @@
 package graft.operators
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.SparkSpec
 import graft.core.{SideSpec, SyncSpec, Watermark}
-import graft.sources.ParquetTableIO
+import graft.sources.{ParquetTableIO, TableIO}
 
 /** End-to-end run-tick scenarios mirroring the reference's five
   * integration tests (tests/testSyncClass.py:111-268) on parquet
@@ -111,6 +111,86 @@ class SyncRunnerSpec extends SparkSpec {
     Watermark.read(SyncRunner.specWmPath(wm, "broken")) shouldBe None
     // legacy shared file is a read-only seed, never rewritten
     Watermark.read(wm) shouldBe Some(Watermark.truncToMinute(last))
+  }
+
+  test("hub config: specs sharing a store run in order and the hub loses no update") {
+    val d = Files.createTempDirectory("hub")
+    val wm = d.resolve("wm.log").toString
+    Watermark.write(wm, last)
+    def io(p: Path) = new ParquetTableIO(p.toString)
+    val (l, h, r) = (io(d.resolve("left")), io(d.resolve("hub")), io(d.resolve("right")))
+    // the second spec names the hub through another spelling of its path
+    val hubAlias = io(d.resolve(".").resolve("..").resolve(d.getFileName).resolve("hub"))
+    val (x, y) = stores()
+    l.overwrite(df(("a", inWin, "from-l", "L")))
+    h.overwrite(df(("h", inWin, "on-hub", "H")))
+    r.overwrite(df(("b", inWin, "from-r", "R")))
+    x.overwrite(df(("s", inWin, "solo", "L"))); y.overwrite(df())
+    def side(t: String, src: String) = SideSpec(t, Some(src))
+    val lh = spec.copy(name = "lh", left = side("left", "L"), right = side("hub", "H"))
+    val hr = spec.copy(name = "hr", left = side("hub", "H"), right = side("right", "R"))
+    val reports = SyncRunner.runAll(spark, Seq(
+      lh -> SyncRunner.Sides(l, h),
+      spec.copy(name = "solo") -> SyncRunner.Sides(x, y), // shares no store
+      hr -> SyncRunner.Sides(hubAlias, r)), wm, nowMillis = now)
+    reports.map(_.spec) shouldBe Seq("lh", "solo", "hr")
+    reports.map(_.failed) shouldBe Seq(false, false, false)
+    def ids(t: TableIO) = t.read(spark).select("id").as[String].collect().toSet
+    // hr ran after lh committed: the hub keeps both specs' merges...
+    ids(h) shouldBe Set("a", "h", "b")
+    // ...and L's in-window row travelled on through the hub to R
+    ids(r) shouldBe Set("a", "h", "b")
+    ids(l) shouldBe Set("a", "h")
+    ids(y) shouldBe Set("s")
+  }
+
+  test("a failed stage aborts the other leg's stage; a healthy sibling still commits") {
+    val d = Files.createTempDirectory("abort")
+    val wm = d.resolve("wm.log").toString
+    Watermark.write(wm, last)
+    val (l1, r1) = stores()
+    l1.overwrite(df(("a", inWin, "t", "L"))); r1.overwrite(df())
+    val (l, r) = stores()
+    l.overwrite(df(("x", inWin, "t", "L")))
+    r.overwrite(df(("y", inWin, "u", "R")))
+    def versionDirs(io: ParquetTableIO): Set[String] = {
+      val ls = Files.list(Paths.get(io.path))
+      try ls.toArray.map(_.asInstanceOf[Path].getFileName.toString)
+        .filter(_.startsWith("v-")).toSet
+      finally ls.close()
+    }
+    def state(io: ParquetTableIO) =
+      (Files.readString(Paths.get(io.path, "_current")), versionDirs(io))
+    val before = Seq(state(l), state(r))
+    @volatile var sawLeftStage = false
+    // the right side stages nothing: it fails once the left leg's stage
+    // is on disk, so the abort path has a staged dir to remove
+    val failingRight = new TableIO {
+      def path: String = r.path
+      def exists: Boolean = r.exists
+      def read(spark: SparkSession): DataFrame = r.read(spark)
+      def prepare(df: DataFrame): TableIO.Prepared = {
+        val deadline = System.currentTimeMillis() + 30000L
+        while (!sawLeftStage && System.currentTimeMillis() < deadline) {
+          sawLeftStage = versionDirs(l) != before.head._2
+          if (!sawLeftStage) Thread.sleep(10L)
+        }
+        throw new IllegalStateException("right stage failed")
+      }
+    }
+    val reports = SyncRunner.runAll(spark, Seq(
+      spec.copy(name = "bad") -> SyncRunner.Sides(l, failingRight),
+      spec -> SyncRunner.Sides(l1, r1)), wm, nowMillis = now)
+    reports.map(_.failed) shouldBe Seq(true, false)
+    reports.head.error.get should include("right stage failed")
+    sawLeftStage shouldBe true
+    // the left leg's staged v-* dir is gone and neither pointer moved
+    Seq(state(l), state(r)) shouldBe before
+    Watermark.read(SyncRunner.specWmPath(wm, "bad")) shouldBe None
+    // the sibling shares no store with the failing spec and committed
+    r1.read(spark).select("id").as[String].collect() shouldBe Array("a")
+    Watermark.read(SyncRunner.specWmPath(wm, spec.name)) shouldBe
+      Some(Watermark.truncToMinute(now))
   }
 
   test("a corrupt watermark file fails its spec's report, not the whole run") {

@@ -207,4 +207,26 @@ class TableIOSpec extends SparkSpec {
       .anyMatch(k => k._2 == v1Dir) shouldBe false
     io.read(spark).select("v").as[String].collect() shouldBe Array("v3")
   }
+
+  test("plan cache keys are normalized: a store opened through another path spelling evicts its retired dir") {
+    val dir = tmp
+    val io = new ParquetTableIO(dir)
+    // the same store through a non-normalized spelling of its path
+    val parent = java.nio.file.Paths.get(dir).getParent
+    val alias = new ParquetTableIO(parent.resolve(".").resolve("..")
+      .resolve(parent.getFileName).resolve("t").toString)
+    alias.path should not be TableIO.key(dir)
+    alias.overwrite(Seq((1, "v1")).toDF("id", "v"))
+    io.read(spark).count() // cached through the normalized path...
+    alias.read(spark).count() // ...and through the alias: one entry
+    val v1Dir = TableIO.key(io.currentDir.get)
+    ParquetTableIO.planCache.keySet.stream()
+      .filter(k => TableIO.key(k._2) == v1Dir).count() shouldBe 1
+    // two commits through the alias retire v-1
+    alias.overwrite(Seq((1, "v2")).toDF("id", "v"))
+    alias.overwrite(Seq((1, "v3")).toDF("id", "v"))
+    ParquetTableIO.planCache.keySet.stream()
+      .anyMatch(k => TableIO.key(k._2) == v1Dir) shouldBe false
+    io.read(spark).select("v").as[String].collect() shouldBe Array("v3")
+  }
 }
