@@ -295,14 +295,7 @@ object Bench {
           val art = java.nio.file.Paths.get(
             graft.streaming.StreamingAcceptIngest
               .screenArtifactDir(out, "doc_id", "text"))
-          Seq(art, base).foreach { d =>
-            if (java.nio.file.Files.exists(d)) {
-              val s = java.nio.file.Files.walk(d)
-              try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-                .forEach(f => java.nio.file.Files.delete(f))
-              finally s.close()
-            }
-          }
+          Seq(art, base).foreach(graft.sources.ParquetTableIO.deleteTree)
         } catch { case NonFatal(e) =>
           System.err.println(s"bench accept cleanup: $e") }
         r
@@ -360,14 +353,7 @@ object Bench {
           // accumulate dead stores there
           val art = java.nio.file.Paths.get(graft.sources.ArtifactStore.root,
             graft.sources.ArtifactStore.pathKey(corpus) + "_bt1")
-          Seq(art, base).foreach { d =>
-            if (java.nio.file.Files.exists(d)) {
-              val s = java.nio.file.Files.walk(d)
-              try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-                .forEach(f => java.nio.file.Files.delete(f))
-              finally s.close()
-            }
-          }
+          Seq(art, base).foreach(graft.sources.ParquetTableIO.deleteTree)
         } catch { case NonFatal(e) =>
           System.err.println(s"bench tick cleanup: $e") }
         walls.sorted

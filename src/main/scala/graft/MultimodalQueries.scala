@@ -267,11 +267,14 @@ object MultimodalQueries {
       // whole per-row codec decode downstream would run 2-wide. The
       // r16 measured-wrong fanOut shuffled the PAYLOAD-carrying rows;
       // this spreads 16-byte id rows and lets the broadcast attach the
-      // payload in place.
+      // payload in place. The broadcast side keeps only the ids `_src`
+      // can take (doc_id % 400 < 400), so it stays 400 rows at any
+      // corpus size.
       val media = graft.operators.SkewTools.spreadByKey(
           d.select(col("doc_id").as("media_id"),
             (col("doc_id") % 400).as("_src")), col("media_id"))
-        .join(broadcast(d.select(col("doc_id").as("_src"), col("text"))),
+        .join(broadcast(d.filter(col("doc_id") < 400)
+            .select(col("doc_id").as("_src"), col("text"))),
           "_src")
         .select(col("media_id"), lit("image").as("modality"),
           col("text").cast("binary").as("bytes"), lit("png").as("format"),
@@ -336,13 +339,14 @@ object MultimodalQueries {
       }) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       // same narrow-side spread as m7: ids spread wide FIRST, the
-      // payload attaches via broadcast, the batch decode runs at the
-      // session's parallelism
+      // payload attaches via a broadcast bounded to the 300 ids `_src`
+      // can take, the batch decode runs at the session's parallelism
       val batch = graft.operators.SkewTools.spreadByKey(
           d.filter(col("doc_id") >= 250)
             .select(col("doc_id").as("media_id"),
               (col("doc_id") % 300).as("_src")), col("media_id"))
-        .join(broadcast(d.select(col("doc_id").as("_src"), col("text"))),
+        .join(broadcast(d.filter(col("doc_id") < 300)
+            .select(col("doc_id").as("_src"), col("text"))),
           "_src")
         .select(col("media_id"), col("text").cast("binary").as("bytes"))
       MediaScreen.screen(s, dir, "documents", batch,

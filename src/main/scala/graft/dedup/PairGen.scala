@@ -56,7 +56,10 @@ object PairGen {
     * `df.distinct()` + [[pairsWithin]] pays two full passes (the
     * distinct exchange on (key, payload), then the regroup on key).
     * `maxBucket` keeps the smallest `maxBucket` distinct members —
-    * the same deterministic truncation [[pairsWithin]] applies.
+    * the same result as [[pairsWithin]]'s truncation, but applied by
+    * slicing AFTER the full `collect_set`: every distinct member of a
+    * bucket is still collected on its reducer, so here `maxBucket`
+    * bounds the output, not memory.
     * Output: (keys..., `_members`).
     */
   def distinctBuckets(df: DataFrame, keys: Seq[String], payload: Column,

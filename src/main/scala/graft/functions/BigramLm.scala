@@ -56,9 +56,10 @@ object BigramLm {
     // bc feeds FOUR consumers (cw1, pc, types, the scoring join) and
     // its lineage is the full bigram explode — checkpoint the small
     // (distinct bigrams) table once instead of recomputing it per
-    // consumer (r17)
+    // consumer (r17). Lazily: the first consumer is a full aggregate
+    // anyway, so building the plan runs no count job of its own.
     val bc = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .localCheckpoint(false)
     val cw1 = bc.groupBy("w1")
       .agg(sum("c").as("ctx"), count(lit(1)).as("n1f"))
     val pc = bc.groupBy("w2").agg(count(lit(1)).as("n1p"))

@@ -106,6 +106,27 @@ object BigramLmStore {
         round(avg(log(p)), 4).as("mean_logprob"))
   }
 
+  /** Perplexity gate over `batch`: [[scoreBatch]] plus a keep flag
+    * `mean_logprob >= threshold`. OOV-heavy docs score low but
+    * finitely (the add-one continuation backoff above), so the gate
+    * never NaN-poisons the comparison.
+    *
+    * EVERY batch doc lands exactly once — including docs with fewer
+    * than 2 tokens, which produce no bigrams and so cannot be scored
+    * by a bigram LM. Scores left-join back to the batch ids: an
+    * unscorable doc is emitted with `n_bigrams = 0`,
+    * `mean_logprob = null`, `keep = null` — an explicit "no evidence"
+    * verdict the consumer routes by policy (`keep IS NULL`), never a
+    * silently missing row.
+    */
+  def gate(spark: SparkSession, sfDir: String, table: String,
+      batch: DataFrame, idCol: String, threshold: Double): DataFrame =
+    batch.select(col(idCol))
+      .join(scoreBatch(spark, sfDir, table, batch, idCol), Seq(idCol), "left")
+      .withColumn("n_bigrams", coalesce(col("n_bigrams"), lit(0L)))
+      .withColumn("keep",
+        when(col("mean_logprob").isNotNull, col("mean_logprob") >= threshold))
+
   /** Offline compaction hook. */
   def compact(spark: SparkSession, corpusPath: String): Unit =
     handle(corpusPath).compact(spark)

@@ -95,6 +95,20 @@ object QualityClassifier {
       col("y").cast("int").as("label") :+
       round(sigmoid(z(m)), 4).as("score"): _*)
 
+  /** Ingest gate: score the raw `docs` (text in `text`) under a
+    * frozen model and flag `keep = score >= threshold`. The model is
+    * passed in frozen (a gate must score consistently across a
+    * release; retraining yields a NEW model for the next one).
+    * Output: (idCol, label, score, keep) — label rides along where
+    * the input carries it so calibration monitoring costs one
+    * aggregate.
+    */
+  def gate(docs: DataFrame, idCol: String, m: LrModel, threshold: Double,
+      labelCol: String, positive: String): DataFrame =
+    score(features(docs, idCol, col("text"), col(labelCol), positive), m)
+      .select(col(idCol), col("label"), col("score"),
+        (col("score") >= threshold).as("keep"))
+
   /** Mean log-loss of a model over a feature table, 6 decimals — the
     * convergence telemetry a training loop monitors (one aggregate,
     * same shape as a gradient step).

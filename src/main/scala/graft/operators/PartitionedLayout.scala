@@ -1,11 +1,11 @@
 package graft.operators
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.sources.ArtifactStore
+import graft.sources.ParquetTableIO.deleteTree
 
 /** Directory-partitioned (hive-style) table layout — the scan-time
   * complement of [[Bucketing]]: where bucketing pre-satisfies a JOIN's
@@ -544,13 +544,5 @@ object PartitionedLayout {
         }
         deleted
       }
-    }
-
-  private def deleteTree(dir: Path): Unit =
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try s.sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-      finally s.close()
     }
 }

@@ -1,10 +1,11 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+
+import graft.sources.ParquetTableIO.deleteTree
 
 /** THE micro-batch → corpus-generation landing protocol — the bridge
   * between Structured Streaming's at-least-once batch delivery and
@@ -171,12 +172,4 @@ object CorpusLanding {
       ()
     }
   }
-
-  private def deleteTree(dir: Path): Unit =
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try s.sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-      finally s.close()
-    }
 }

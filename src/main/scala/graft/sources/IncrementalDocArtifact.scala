@@ -1,11 +1,12 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, lit, row_number}
+
+import graft.sources.ParquetTableIO.deleteTree
 
 /** Generic incremental maintenance for derived artifacts — the
   * base+delta ledger discipline `TextIndexStore` proved, extracted so
@@ -1889,13 +1890,6 @@ object IncrementalDocArtifact {
         }, gens.isEmpty)
       } else fresh()
     }
-
-    private def deleteTree(dir: Path): Unit =
-      if (Files.exists(dir)) {
-        val s = Files.walk(dir)
-        try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-        finally s.close()
-      }
   }
 
   def apply(corpusPath: String, key: String, pieces: Seq[Piece],

@@ -194,7 +194,7 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
             s"version-less entry $f (not a v-<n> snapshot)")
         else if (n.startsWith("v-") && versionOf(n) < s.prev &&
             !keepVersionDir(n)) {
-          deleteTree(f)
+          ParquetTableIO.deleteTree(f)
           ParquetTableIO.evictPlans(f.toString)
         }
         else if (s.prev >= 1 && !Files.isDirectory(f) && n != "_current")
@@ -203,7 +203,8 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
     }
   }
 
-  private[graft] def abortStaged(s: Staged): Unit = deleteTree(s.vDir)
+  private[graft] def abortStaged(s: Staged): Unit =
+    ParquetTableIO.deleteTree(s.vDir)
 
   override def prepare(df: DataFrame): TableIO.Prepared = {
     val staged = stage()
@@ -248,16 +249,19 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
     overwrite(read(spark).coalesce(n))
     (files.size.toLong, parquetFiles(Paths.get(currentDir.get)).size.toLong)
   }
+}
 
-  private def deleteTree(dir: Path): Unit =
+object ParquetTableIO {
+
+  /** Delete `dir` and everything under it, children first; a missing
+    * dir is a no-op. THE recursive delete of the engine's file layouts.
+    */
+  def deleteTree(dir: Path): Unit =
     if (Files.exists(dir)) {
       val s = Files.walk(dir)
       try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
       finally s.close()
     }
-}
-
-object ParquetTableIO {
 
   /** Plan cache for immutable versioned snapshot dirs — see
     * [[ParquetTableIO.read]]. Entries are unexecuted DataFrame plans

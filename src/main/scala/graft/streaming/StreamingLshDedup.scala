@@ -1,10 +1,9 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.MinHashLSH
@@ -93,7 +92,7 @@ object StreamingLshDedup {
     val deltaDf = spark.read.parquet(delta.toString).drop("_batch")
     val merged = if (base.exists) base.read(spark).unionByName(deltaDf) else deltaDf
     base.overwrite(merged.distinct())
-    absorbed.foreach(deleteTree)
+    absorbed.foreach(ParquetTableIO.deleteTree)
   }
 
   /** Start the pipeline on a streaming documents DataFrame.
@@ -139,30 +138,16 @@ object StreamingLshDedup {
           // cold start probes an empty index of the batch's own schema
           val index = readIndexOpt(batch.sparkSession, indexDir)
             .getOrElse(bands.limit(0))
-          MinHashLSH.probeCandidatesBanded(index, bands, idCol,
-              maxIndexPerBucket)
-            .withColumn("_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(candidatesDir)
+          BatchReportSink.writeBatch(
+            MinHashLSH.probeCandidatesBanded(index, bands, idCol,
+              maxIndexPerBucket), batchId, candidatesDir)
           // O(batch) append: only this batch's partition is written
-          bands.withColumn("_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(deltaDir(indexDir).toString)
+          BatchReportSink.writeBatch(bands, batchId,
+            deltaDir(indexDir).toString)
           if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
             compactIndex(batch.sparkSession, indexDir)
         }
         ()
       }
       .start()
-
-  private def deleteTree(dir: Path): Unit =
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-      finally s.close()
-    }
 }

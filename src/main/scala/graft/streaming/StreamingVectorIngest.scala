@@ -1,10 +1,9 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.similarity.{IvfKnn, ProductQuantizer}
@@ -106,7 +105,8 @@ object StreamingVectorIngest {
   def compactIndex(spark: SparkSession, indexDir: String): Unit = {
     // GC partitions a previous compaction absorbed but failed to delete
     val deadFirst = foldedBatches(indexDir)
-    deadFirst.foreach(b => deleteTree(deltaDir(indexDir).resolve(b)))
+    deadFirst.foreach(b =>
+      ParquetTableIO.deleteTree(deltaDir(indexDir).resolve(b)))
     val absorbed = liveBatches(indexDir)
     if (absorbed.isEmpty) return
     val base = baseIO(indexDir)
@@ -120,7 +120,7 @@ object StreamingVectorIngest {
       (deadFirst ++ absorbed.map(_.getFileName.toString)).toSeq.sorted
         .mkString("\n"))
     base.commitStaged(staged)
-    absorbed.foreach(deleteTree) // tidy; a crash here is GC-covered
+    absorbed.foreach(ParquetTableIO.deleteTree) // tidy; a crash here is GC-covered
   }
 
   /** Start the ingest on a streaming (id, embedding) DataFrame.
@@ -158,25 +158,15 @@ object StreamingVectorIngest {
               (ProductQuantizer.withResidual(assigned, embCol, "_cell",
                 coarseBook.toDF("cell", "centroid"), "_res"), "_res")
             else (assigned, embCol)
-          ProductQuantizer.encoded(toEncode, srcCol, subDim, books)
-            .select(col(idCol) +: col("_cell") +:
-              books.map(b => col(s"pq_${b.subspace}")): _*)
-            .withColumn("_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(deltaDir(indexDir).toString)
+          BatchReportSink.writeBatch(
+            ProductQuantizer.encoded(toEncode, srcCol, subDim, books)
+              .select(col(idCol) +: col("_cell") +:
+                books.map(b => col(s"pq_${b.subspace}")): _*),
+            batchId, deltaDir(indexDir).toString)
           if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
             compactIndex(s, indexDir)
         }
         ()
       }
       .start()
-
-  private def deleteTree(dir: Path): Unit =
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-      finally s.close()
-    }
 }

@@ -56,4 +56,52 @@ class BigramLmSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     out shouldBe Set(3L)
   }
+
+  test("building the scorer runs no action: the bigram table checkpoints lazily") {
+    // count only THIS thread's jobs (the job group is thread-local, so
+    // suites running beside this one on the shared session can't
+    // pollute). AQE materializes a checkpointed plan's shuffle-map
+    // stage at build time whether the checkpoint is eager or lazy; an
+    // eager checkpoint ALSO runs a count — the only result tasks a
+    // build could run
+    val sc = spark.sparkContext
+    val group = s"bigram-lazy-${java.util.UUID.randomUUID()}"
+    val barrier = s"$group-barrier"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val resultTasks = new java.util.concurrent.atomic.AtomicInteger()
+    val seenBarrier = new java.util.concurrent.atomic.AtomicBoolean()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+        if (g.contains(group)) e.stageIds.foreach(stages.add)
+        if (g.contains(barrier)) seenBarrier.set(true)
+      }
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskType == "ResultTask")
+          resultTasks.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val scored = try {
+      sc.setJobGroup(group, "build scoreDocs")
+      val df = BigramLm.scoreDocs(docs, "doc_id", col("text"))
+      // the bus delivers in order: once the barrier job's start is
+      // seen, so is every task of the build
+      sc.setJobGroup(barrier, "listener barrier")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!seenBarrier.get && System.currentTimeMillis() < deadline)
+        Thread.sleep(20L)
+      df
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    seenBarrier.get shouldBe true
+    resultTasks.get shouldBe 0
+    // the lazily pinned table still serves every consumer
+    scored.select("doc_id").as[Long].collect().toSet shouldBe
+      Set(1L, 2L, 3L, 4L)
+  }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
@@ -748,10 +749,11 @@ class StreamingDecontamSpec extends SparkSpec {
 
     val outDir = base.resolve("out").toString
     val mem = MemoryStream[(Long, String)]
-    val q = StreamingDecontam.start(
-      mem.toDF().toDF("doc_id", "text"), "doc_id",
-      evalGrams, n = 5, outDir,
-      base.resolve("ckpt").toString, Trigger.ProcessingTime("50 milliseconds"))
+    val q = BatchReportSink.start(mem.toDF().toDF("doc_id", "text"), outDir,
+        base.resolve("ckpt").toString, Trigger.ProcessingTime("50 milliseconds")) {
+      batch => graft.dedup.Decontam.reportAgainstGrams(batch, evalGrams,
+        "doc_id", graft.functions.TextFunctions.normalize(col("text")), n = 5)
+    }
 
     // batch 1: one verbatim eval leak, one fresh doc
     mem.addData(
@@ -788,11 +790,13 @@ class StreamingMediaScreenSpec extends SparkSpec {
 
     val outDir = base.resolve("out").toString
     val mem = MemoryStream[(Long, String)]
-    val q = StreamingMediaScreen.start(
-      mem.toDF().toDF("media_id", "_t")
-        .select(col("media_id"), col("_t").cast("binary").as("bytes")),
-      sf, "documents", outDir,
-      base.resolve("ckpt").toString, Trigger.ProcessingTime("50 milliseconds"))
+    val q = BatchReportSink.start(
+        mem.toDF().toDF("media_id", "_t")
+          .select(col("media_id"), col("_t").cast("binary").as("bytes")),
+        outDir, base.resolve("ckpt").toString,
+        Trigger.ProcessingTime("50 milliseconds")) {
+      batch => graft.multimodal.MediaScreen.screen(spark, sf, "documents", batch)
+    }
 
     mem.addData((10L, "an already ingested image payload"),
       (11L, "a brand new clip"))
@@ -801,7 +805,7 @@ class StreamingMediaScreenSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val rep = StreamingMediaScreen.report(spark, outDir)
+    val rep = spark.read.parquet(outDir)
       .select("media_id", "status").as[(Long, String)].collect().toMap
     rep shouldBe Map(10L -> "exact_dup", 11L -> "fresh", 12L -> "exact_dup")
   }
@@ -819,10 +823,12 @@ class StreamingQualityGateSpec extends SparkSpec {
     val m = QualityClassifier.LrModel(-2.0, 0.0, 0.0, 8.0)
     val outDir = base.resolve("out").toString
     val mem = MemoryStream[(Long, String, String)]
-    val q = StreamingQualityGate.start(
-      mem.toDF().toDF("doc_id", "text", "lang"), "doc_id", m,
-      threshold = 0.5, "lang", "en", outDir,
-      base.resolve("ckpt").toString, Trigger.ProcessingTime("50 milliseconds"))
+    val q = BatchReportSink.start(mem.toDF().toDF("doc_id", "text", "lang"),
+        outDir, base.resolve("ckpt").toString,
+        Trigger.ProcessingTime("50 milliseconds")) {
+      batch => QualityClassifier.gate(batch, "doc_id", m, threshold = 0.5,
+        "lang", "en")
+    }
 
     mem.addData(
       (1L, "the cat is on the mat and it is the best of the lot", "en"),
@@ -862,11 +868,12 @@ class StreamingPrefixScreenSpec extends SparkSpec {
 
     val outDir = base.resolve("out").toString
     val mem = MemoryStream[(Long, String)]
-    val q = StreamingPrefixScreen.start(
-      mem.toDF().toDF("doc_id", "text"), "doc_id",
-      sf, "documents", tauNum = 7, tauDen = 10,
-      outDir, base.resolve("ckpt").toString,
-      Trigger.ProcessingTime("50 milliseconds"))
+    val q = BatchReportSink.start(mem.toDF().toDF("doc_id", "text"),
+        outDir, base.resolve("ckpt").toString,
+        Trigger.ProcessingTime("50 milliseconds")) {
+      batch => graft.dedup.PrefixStore.screen(batch.sparkSession, sf,
+        "documents", batch, "doc_id", tauNum = 7, tauDen = 10)
+    }
 
     // batch 0: one near-dup of corpus doc 1, one novel-vocab doc
     mem.addData((10L, "alpha beta gamma delta epsilon theta"),
@@ -898,10 +905,18 @@ class StreamingSnapshotEnrichSpec extends SparkSpec {
 
     val outDir = base.resolve("out").toString
     val mem = MemoryStream[(Long, String)]
-    val q = StreamingSnapshotEnrich.start(
-      mem.toDF().toDF("event_id", "k"), Seq("k"), store,
-      outDir, base.resolve("ckpt").toString,
-      Trigger.ProcessingTime("50 milliseconds"))
+    // stream-static enrichment: each batch left-joins the dimension
+    // read through the snapshot connector — the pointer re-resolves
+    // per batch unless `version` pins one snapshot
+    def enrich(version: Option[Long])(batch: DataFrame): DataFrame = {
+      val reader = batch.sparkSession.read
+        .format(graft.sources.v2.GraftSnapshotDataSource.Name)
+      batch.join(version.fold(reader)(v => reader.option("version", v))
+        .load(store), Seq("k"), "left")
+    }
+    val q = BatchReportSink.start(mem.toDF().toDF("event_id", "k"),
+        outDir, base.resolve("ckpt").toString,
+        Trigger.ProcessingTime("50 milliseconds"))(enrich(None))
 
     mem.addData((1L, "k1"), (2L, "k9")) // k9 has no dimension row
     q.processAllAvailable()
@@ -922,10 +937,9 @@ class StreamingSnapshotEnrichSpec extends SparkSpec {
     val out2 = base.resolve("out2").toString
     val mem2 = MemoryStream[(Long, String)]
     val v1 = io.currentVersion - 1
-    val q2 = StreamingSnapshotEnrich.start(
-      mem2.toDF().toDF("event_id", "k"), Seq("k"), store,
-      out2, base.resolve("ckpt2").toString,
-      Trigger.ProcessingTime("50 milliseconds"), version = Some(v1))
+    val q2 = BatchReportSink.start(mem2.toDF().toDF("event_id", "k"),
+        out2, base.resolve("ckpt2").toString,
+        Trigger.ProcessingTime("50 milliseconds"))(enrich(Some(v1)))
     mem2.addData((9L, "k1"))
     q2.processAllAvailable()
     q2.stop()
@@ -946,11 +960,12 @@ class StreamingEditScreenSpec extends SparkSpec {
 
     val outDir = base.resolve("out").toString
     val mem = MemoryStream[(Long, String)]
-    val q = StreamingEditScreen.start(
-      mem.toDF().toDF("sid", "name"), "sid", col("name"),
-      corpus, "name", "sid", col("name"), k = 2,
-      outDir, base.resolve("ckpt").toString,
-      Trigger.ProcessingTime("50 milliseconds"))
+    val q = BatchReportSink.start(mem.toDF().toDF("sid", "name"),
+        outDir, base.resolve("ckpt").toString,
+        Trigger.ProcessingTime("50 milliseconds")) {
+      batch => graft.dedup.EditStore.screen(batch.sparkSession, corpus,
+        "name", "sid", col("name"), batch, "sid", col("name"), k = 2)
+    }
 
     // batch 0: dist-1 typo of walter + something unrelated;
     // batch 1: a SHORTER string whose corpus partner is longer
@@ -983,11 +998,12 @@ class StreamingFullScreenSpec extends SparkSpec {
 
     val outDir = base.resolve("out").toString
     val mem = MemoryStream[(Long, String)]
-    val q = StreamingFullScreen.start(
-      mem.toDF().toDF("doc_id", "text"), "doc_id",
-      sf, "documents",
-      outDir, base.resolve("ckpt").toString,
-      Trigger.ProcessingTime("50 milliseconds"))
+    val q = BatchReportSink.start(mem.toDF().toDF("doc_id", "text"),
+        outDir, base.resolve("ckpt").toString,
+        Trigger.ProcessingTime("50 milliseconds")) {
+      batch => graft.dedup.FullScreen.screen(batch.sparkSession, sf,
+        "documents", batch, "doc_id")
+    }
 
     // batch 0: an exact dup of corpus doc 1 + a fresh doc;
     // batch 1: a doc contained in corpus doc 2
@@ -1038,11 +1054,12 @@ class StreamingLmGateSpec extends SparkSpec {
 
     val outDir = base.resolve("out").toString
     val mem = MemoryStream[(Long, String)]
-    val q = StreamingLmGate.start(
-      mem.toDF().toDF("doc_id", "text"), "doc_id",
-      sf, "documents", threshold = -2.5,
-      outDir, base.resolve("ckpt").toString,
-      Trigger.ProcessingTime("50 milliseconds"))
+    val q = BatchReportSink.start(mem.toDF().toDF("doc_id", "text"),
+        outDir, base.resolve("ckpt").toString,
+        Trigger.ProcessingTime("50 milliseconds")) {
+      batch => graft.functions.BigramLmStore.gate(batch.sparkSession, sf,
+        "documents", batch, "doc_id", threshold = -2.5)
+    }
 
     mem.addData((10L, "the cat sat on the mat"))
     q.processAllAvailable()
