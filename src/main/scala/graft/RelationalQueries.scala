@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.operators.PartitionedLayout
+import graft.operators.{PartitionedLayout, Pin}
 
 /** Relational coverage over the TPC-H-ish tables: aggregation, joins
   * (broadcast + shuffle + semi/anti/outer), windows, top-k, set ops,
@@ -1106,12 +1106,11 @@ object RelationalQueries {
       // the recursive member would otherwise re-plan and re-execute
       // its window on EVERY UnionLoop iteration — 8 windows over the
       // full orders table instead of one (measured 5.9 s → this form)
-      s.sql(
+      Pin(s.sql(
         """SELECT o_custkey, o_orderkey, round(o_totalprice, 2) AS price,
           |       row_number() OVER (PARTITION BY o_custkey
           |         ORDER BY o_orderdate, o_orderkey) AS rn
-          |FROM orders""".stripMargin)
-        .localCheckpoint()
+          |FROM orders""".stripMargin))
         .createOrReplaceTempView("seq")
       s.sql(
         """WITH RECURSIVE walk(custkey, orderkey, rn, step, running) AS (
@@ -1568,11 +1567,10 @@ object RelationalQueries {
       // pair expansion each re-read the checkpointed basket frame
       // (~|orders| rows) where the pre-r17 form re-ran the full
       // lineitem distinct once per consumer
-      val baskets = graft.dedup.PairGen.distinctBuckets(
+      val baskets = Pin(graft.dedup.PairGen.distinctBuckets(
           Tables.load(s, dir, "lineitem")
             .select(col("l_orderkey").as("o"), col("l_suppkey").as("s")),
-          Seq("o"), col("s"))
-        .localCheckpoint()
+          Seq("o"), col("s")))
       val nOrders = baskets
         .agg(count(lit(1)).cast("double").as("n_orders"))
       val supp = baskets.select(explode(col("_members")).as("s"))
@@ -1906,13 +1904,12 @@ object RelationalQueries {
         |FROM supplier JOIN rev ON s_suppkey = l_suppkey, m
         |WHERE cents = mc
         |ORDER BY s_suppkey""".stripMargin) { (s, dir) =>
-      val rev = Tables.load(s, dir, "lineitem")
+      val rev = Pin(Tables.load(s, dir, "lineitem")
         .where(col("l_shipdate") >= lit("2000-01-01 00:00:00").cast("timestamp")
           && col("l_shipdate") < lit("2000-04-01 00:00:00").cast("timestamp"))
         .groupBy("l_suppkey")
         .agg(sum(floor(col("l_extendedprice")
-          * (lit(1) - col("l_discount")) * 100 + 0.5)).as("cents"))
-        .localCheckpoint()
+          * (lit(1) - col("l_discount")) * 100 + 0.5)).as("cents")))
       rev.crossJoin(broadcast(rev.agg(max("cents").as("mc"))))
         .where(col("cents") === col("mc"))
         .join(Tables.load(s, dir, "supplier")
@@ -2068,13 +2065,12 @@ object RelationalQueries {
       // two-sided self-join (order sizes are bounded, so the
       // collected member lists are too); checkpointed because the
       // count reuses the edge set four times
-      val co = graft.dedup.PairGen
+      val co = Pin(graft.dedup.PairGen
         .pairsWithinDistinct(
           Tables.load(s, dir, "lineitem").select("l_orderkey", "l_suppkey"),
           Seq("l_orderkey"), col("l_suppkey"))
         .groupBy("a", "b").agg(count(lit(1)).as("n"))
-        .where(col("n") >= 5).select("a", "b")
-        .localCheckpoint()
+        .where(col("n") >= 5).select("a", "b"))
       graft.operators.Triangles.count(co)
     },
 
@@ -2893,10 +2889,9 @@ object RelationalQueries {
       // wedges columns (plan-asserted in PlanShapeSpec — the operator
       // would otherwise recompute the identical exchange). Pinned so
       // both consumers read the computed frame, not re-run the union.
-      val deg = co.select(col("a").as("node"))
+      val deg = Pin(co.select(col("a").as("node"))
         .unionAll(co.select(col("b").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
+        .groupBy("node").agg(count(lit(1)).as("deg")))
       deg.where(col("deg") >= 2)
         .join(graft.operators.Triangles.perNode(co, Some(deg)),
           Seq("node"), "left")
@@ -2967,9 +2962,8 @@ object RelationalQueries {
     * three consumers iterate over it.
     */
   private def partCoPurchaseEdges(s: SparkSession, dir: String): DataFrame =
-    graft.operators.CoOccurStore
-      .edges(s, dir, "lineitem", "l_orderkey", "l_partkey", minCount = 2)
-      .localCheckpoint()
+    Pin(graft.operators.CoOccurStore
+      .edges(s, dir, "lineitem", "l_orderkey", "l_partkey", minCount = 2))
 
   /** DuckDB unroll of [[graft.operators.KCore.peelRounds]]: stage r
     * keeps the degree->=k survivors of stage r-1 and semi-filters the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.functions.{HybridSearch, TextFunctions, TextIndexStore, TextSearch}
+import graft.operators.Pin
 import graft.similarity.{BruteForceKnn, CodebookStore, IvfKnn, ProductQuantizer, Quantize, SignLSH, VectorOps}
 
 /** Similarity-search queries over the `embeddings` table (64-dim
@@ -864,10 +865,9 @@ object SimilarityQueries {
       val k = math.max(1, (e.count() / 64).toInt)
       val codebook = CodebookStore.trained(s, dir, "embeddings",
         "vec_id", "embedding", k, iters = 2)
-      val assigned = IvfKnn.assignCells(e, "embedding",
+      val assigned = Pin(IvfKnn.assignCells(e, "embedding",
           IvfKnn.collectCodebook(codebook, "cell"), "topic")
-        .select("vec_id", "topic")
-        .localCheckpoint()
+        .select("vec_id", "topic"))
       val kept = graft.operators.Sampling.mixture(assigned, "vec_id", "topic",
           alpha = 0.5, targetFraction = 0.3)
         .groupBy("topic").agg(count(lit(1)).as("n_kept"))

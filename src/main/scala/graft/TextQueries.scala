@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.dedup.MinHashLSH
 import graft.functions.{QualityFunnel, TextFunctions, TextIndexStore, TextOps, TextSearch, TfIdfStore}
-import graft.operators.Sampling
+import graft.operators.{Pin, Sampling}
 import graft.sketch.CountMin
 
 /** Text-analysis queries over the `documents` table — language ID,
@@ -782,8 +782,7 @@ object TextQueries {
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val d = Tables.load(s, dir, "documents")
-      val kept = QualityFunnel.kept(d, QualityFunnel.defaultRules(col("text")))
-        .localCheckpoint()
+      val kept = Pin(QualityFunnel.kept(d, QualityFunnel.defaultRules(col("text"))))
       val cut = graft.dedup.SpanDedup.cutText(kept, "doc_id", col("text"), n = 8)
       cut
         .withColumn("fp", TextFunctions.fingerprint(col("text_dedup")))
@@ -860,10 +859,9 @@ object TextQueries {
       import org.apache.spark.sql.expressions.Window
       val d = Tables.load(s, dir, "documents")
       val norm = TextFunctions.normalize(col("text"))
-      val kept = QualityFunnel.kept(d, QualityFunnel.defaultRules(col("text")))
+      val kept = Pin(QualityFunnel.kept(d, QualityFunnel.defaultRules(col("text")))
         .select(col("doc_id"), norm.as("_norm"),
-          TextFunctions.fingerprint(norm).as("fp"))
-        .localCheckpoint()
+          TextFunctions.fingerprint(norm).as("fp")))
       val seen = kept.filter(col("doc_id") < 250).select("fp").distinct()
       kept.filter(col("doc_id") >= 250)
         .withColumn("_keep", min(col("doc_id")).over(Window.partitionBy("fp")))
@@ -1187,12 +1185,11 @@ object TextQueries {
         .select(explode(TextFunctions.tokens(
           TextFunctions.normalize(col("text")))).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("c"))
-      val j = counts(col("doc_id") < 250).withColumnRenamed("c", "ca")
+      val j = Pin(counts(col("doc_id") < 250).withColumnRenamed("c", "ca")
         .join(counts(col("doc_id") >= 250).withColumnRenamed("c", "cb"),
           Seq("tok"), "full_outer")
         .select(coalesce(col("ca"), lit(0L)).as("a"),
-          coalesce(col("cb"), lit(0L)).as("b"))
-        .localCheckpoint()
+          coalesce(col("cb"), lit(0L)).as("b")))
       val t = j.agg((sum("a") * 1.0).as("na"), (sum("b") * 1.0).as("nb"),
         (count(lit(1)) * 1.0).as("v"),
         sum(when(col("a") > 0 && col("b") > 0, 1).otherwise(0)).as("n_shared"))

@@ -1,8 +1,11 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.sources.ParquetTableIO
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query's
+  * output dir is deleted before it runs, so a query that throws leaves
+  * no output (never a stale dump from an earlier run). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -19,6 +22,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(name.contains) }
       .foreach { case (name, fn) =>
+      ParquetTableIO.deleteTree(Paths.get(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -58,15 +58,14 @@ object ClusterStore {
     * increment), never a re-aggregation of the whole signature table.
     */
   private def advanceLabels(ctx: AdvanceCtx, maxDist: Int): DataFrame = {
-    val newSigs = SimHash.compute(ctx.newDocs, "doc_id", norm)
-      .localCheckpoint(true)
+    val newSigs = ctx.pin(SimHash.compute(ctx.newDocs, "doc_id", norm))
     val oldLabels = ctx.stored("labels")
     val newReps = newSigs.groupBy(col("simhash")).agg(min("doc_id").as("doc_id"))
     val oldReps = ctx.stored("reps")
-    val crossEdges = SimHash.probePairs(oldReps, newReps, "doc_id", maxDist)
-      .select("id_a", "id_b").localCheckpoint(true)
-    val newEdges = SimHash.nearPairs(newReps, "doc_id", maxDist)
-      .select("id_a", "id_b").localCheckpoint(true)
+    val crossEdges = ctx.pin(SimHash.probePairs(oldReps, newReps, "doc_id",
+      maxDist).select("id_a", "id_b"))
+    val newEdges = ctx.pin(SimHash.nearPairs(newReps, "doc_id", maxDist)
+      .select("id_a", "id_b"))
     // same-signature new docs hook onto their representative
     val docRep = newSigs
       .join(newReps.withColumnRenamed("doc_id", "_rep"), "simhash")
@@ -83,9 +82,8 @@ object ClusterStore {
     // member, so the star center is in the node set
     val touched = crossEdges.select(col("id_a").as("doc_id")).distinct()
       .join(oldLabels, "doc_id").select("cluster_id").distinct()
-    val affected = oldLabels.join(touched, "cluster_id")
-      .select(col("doc_id"), col("cluster_id"))
-      .localCheckpoint(true)
+    val affected = ctx.pin(oldLabels.join(touched, "cluster_id")
+      .select(col("doc_id"), col("cluster_id")))
     val nodes = ctx.newDocs.select(col("doc_id"))
       .union(affected.select("doc_id"))
     val edges = crossEdges

@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Pin
+
 /** Connected components over a near-duplicate pair list — the cluster
   * resolution step of a dedup pipeline: candidate pairs (MinHash LSH,
   * SimHash blocks, …) are edges; each document's cluster id is the
@@ -22,9 +24,8 @@ import org.apache.spark.sql.functions._
   *  - `labels` is one row per node (id, lbl) — tiny next to the corpus;
   *  - the join with the (pre-symmetrized, pre-partitioned) edge list
   *    shuffles on the node id, the natural key;
-  *  - `localCheckpoint` truncates the growing lineage each round so
-  *    round N's plan doesn't replay rounds 1..N-1 (the classic
-  *    iterative-algorithm trap on Spark);
+  *  - each round's labels are pinned through [[Pin]] (its scaladoc
+  *    states the lineage and lost-executor rules);
   *  - convergence is checked with one small aggregate per round.
   *
   * Deterministic: min is order-insensitive; replays converge to the
@@ -46,18 +47,18 @@ object DupClusters {
       maxRounds: Int = 20): DataFrame = {
     val e = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
     // symmetrize once; this small table is reused every round. LAZY
-    // checkpoints throughout this loop (r17): the aggregate that
-    // follows each pin full-scans it, which materializes the cache in
-    // the SAME scheduled job (an eager pin is a second serial job per
-    // round; the truncation-safety condition is the full scan — see
-    // IterPin.pinLazy).
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(false)
+    // pins throughout this loop (r17): the aggregate that follows each
+    // pin full-scans it, which materializes the cache in the SAME
+    // scheduled job (an eager pin is a second serial job per round;
+    // the truncation-safety condition is the full scan — see
+    // Pin.pinLazy).
+    val pin = Pin.loop()
+    val sym = pin.pinLazy(
+      e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct(),
+      "edges")
 
-    var labels = nodes.select(col(idCol).as("id")).distinct()
-      .withColumn("lbl", col("id"))
-      .localCheckpoint(false)
+    var labels = pin.pinLazy(nodes.select(col(idCol).as("id")).distinct()
+      .withColumn("lbl", col("id")), "labels")
 
     // a label only ever decreases, so "changed" == "sum decreased":
     // one tiny aggregate per round instead of a join against the old
@@ -84,7 +85,7 @@ object DupClusters {
     // costs more than the saved checkpoint/aggregate fixed cost.
     while (round < maxRounds && !converged) {
       // lazy pin: lblSum's full-scan aggregate materializes it
-      val next = prop(labels).localCheckpoint(false)
+      val next = pin.pinLazy(prop(labels), "labels")
       val nextSum = lblSum(next)
       // compareTo, not equals: BigDecimal.equals is scale-sensitive
       converged = (nextSum, prevSum) match {
@@ -102,7 +103,7 @@ object DupClusters {
       s"label propagation did not converge in $maxRounds rounds — " +
         "the pair graph has a longer chain than expected; raise maxRounds " +
         "or switch to large-star/small-star contraction")
-    labels.select(col("id").as(idCol), col("lbl").as("cluster_id"))
+    pin.seal(labels).select(col("id").as(idCol), col("lbl").as("cluster_id"))
   }
 
   /** Connected components by ALTERNATING large-star/small-star
@@ -119,7 +120,7 @@ object DupClusters {
     * shuffle volume as one propagation round, but ~log n of them
     * total. No per-node adjacency lists are ever materialized
     * (`collect_list` on a million-member star center would be the
-    * classic OOM), and `localCheckpoint` truncates lineage per round.
+    * classic OOM), and each round is pinned through [[Pin]].
     *
     * Same contract as `components`: cluster_id = min reachable id,
     * singletons label themselves, deterministic under replay.
@@ -128,14 +129,14 @@ object DupClusters {
       nodes: DataFrame, idCol: String,
       edges: DataFrame, aCol: String, bCol: String,
       maxRounds: Int = 30): DataFrame = {
-    // canonical larger→smaller edges; self-loops vanish
-    var e = edges
+    val pin = Pin.loop()
+    // canonical larger→smaller edges; self-loops vanish. Lazy:
+    // sig(e)'s aggregate below full-scans and materializes it
+    var e = pin.pinLazy(edges
       .select(greatest(col(aCol), col(bCol)).as("u"),
         least(col(aCol), col(bCol)).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      // lazy: sig(e)'s aggregate below full-scans and materializes it
-      .localCheckpoint(false)
+      .distinct(), "edges")
 
     // edge-set signature: (count, order-insensitive hash sum) — one
     // tiny aggregate per round. A signature MATCH is then confirmed
@@ -170,15 +171,14 @@ object DupClusters {
         .select(col("y").as("u"), col("m").as("v"))
       // SMALL-STAR: u and all its smaller neighbors hook onto the min
       val sMin = large.groupBy("u").agg(min("v").as("m"))
-      val small = large.join(sMin, "u")
+      // lazy: sig(small) full-scans and materializes it
+      val small = pin.pinLazy(large.join(sMin, "u")
         .select(explode(array(
           struct(col("u").as("a"), col("m").as("b")),
           struct(col("v").as("a"), col("m").as("b")))).as("p"))
         .select(col("p.a").as("u"), col("p.b").as("v"))
         .filter(col("u") =!= col("v"))
-        .distinct()
-        // lazy: sig(small) full-scans and materializes it
-        .localCheckpoint(false)
+        .distinct(), "edges")
       val next = sig(small)
       val sigMatch = next._1 == prev._1 && ((next._2, prev._2) match {
         case (Some(a), Some(b)) => a.compareTo(b) == 0
@@ -194,7 +194,8 @@ object DupClusters {
     if (!converged) throw new IllegalStateException(
       s"star contraction did not converge in $maxRounds rounds")
     nodes.select(col(idCol).as("id")).distinct()
-      .join(e.groupBy("u").agg(min("v").as("m")), col("id") === col("u"), "left")
+      .join(pin.seal(e).groupBy("u").agg(min("v").as("m")),
+        col("id") === col("u"), "left")
       .select(col("id").as(idCol), coalesce(col("m"), col("id")).as("cluster_id"))
   }
 
@@ -242,9 +243,9 @@ object DupClusters {
     // re-executes per consumer
     // lazy pins: building reps full-scans simsM; the contraction's
     // first edge-set signature aggregate full-scans reps
-    val simsM = sims.select(col(idCol), col(sigCol)).localCheckpoint(false)
-    val reps = simsM.groupBy(col(sigCol)).agg(min(col(idCol)).as(idCol))
-      .localCheckpoint(false)
+    val simsM = Pin.lazily(sims.select(col(idCol), col(sigCol)))
+    val reps = Pin.lazily(
+      simsM.groupBy(col(sigCol)).agg(min(col(idCol)).as(idCol)))
     val repPairs = pairsOf(reps.select(col(idCol), col(sigCol)))
     val repLabels = componentsAlternating(
       reps.select(col(idCol)), idCol, repPairs, "id_a", "id_b", maxRounds)

@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Pin
+
 /** Exact edit-distance (Levenshtein ≤ k) similarity self-join — the
   * short-string dedup rung (titles, names, URLs) the set-similarity
   * family cannot cover: token-set Jaccard is blind to within-token
@@ -161,11 +163,10 @@ object EditJoin {
     val id = col(idCol)
     // --- contraction: one representative per distinct string
     val withS = strs.select(id, strCol.as("s"))
-    val members = withS.select(id.as("mid"), col("s")).localCheckpoint()
-    val reps = withS.groupBy("s").agg(min(id).as("rid"))
+    val members = Pin(withS.select(id.as("mid"), col("s")))
+    val reps = Pin(withS.groupBy("s").agg(min(id).as("rid"))
       .select(col("rid").as("sid"), col("s"),
-        length(col("s")).cast("int").as("l"))
-      .localCheckpoint()
+        length(col("s")).cast("int").as("l")))
     // --- index side, optionally capped per segment bucket
     val segs = segmentsOf(reps, k)
       .withColumnRenamed("sid", "rid_a")

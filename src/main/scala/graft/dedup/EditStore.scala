@@ -60,9 +60,9 @@ object EditStore {
     df.repartition(col("seg")).sortWithinPartitions("seg")
 
   // ---------------------------------------------------------------
-  // Per-increment screen, computed once per reconcile (AdvanceCtx-
-  // keyed memo of eagerly-checkpointed frames, the PrefixStore
-  // pattern) — shared by the reps/pairs/labels advances.
+  // Per-increment screen, computed once per advance (ctx memo of
+  // ctx-pinned frames, the PrefixStore pattern) — shared by the
+  // reps/pairs/labels advances.
   // ---------------------------------------------------------------
 
   private final case class IncCore(
@@ -71,35 +71,12 @@ object EditStore {
       crossRep: DataFrame, // (rid_n, rid_o, dist) new-rep × old-rep
       withinRep: DataFrame) // (id_a, id_b, dist) among new reps
 
-  private val incMemo = new java.util.WeakHashMap[AnyRef, IncCore]()
-  // checkpointed scratch frames, freed when the engine signals the
-  // advance is done (onAdvanceDone) — without this, blocks of past
-  // increments pin executor storage until the ctx key is GC'd
-  private val scratch = new graft.sources.CheckpointUtil.Scratch
-  private def track(ctx: AdvanceCtx, df: DataFrame): DataFrame =
-    scratch.track(ctx, df)
-
   private def incCore(ctx: AdvanceCtx, idCol: String, strCol: Column,
-      k: Int): IncCore = {
-    val hit = incMemo.synchronized(incMemo.get(ctx))
-    if (hit != null) hit
-    else {
-      // computed OUTSIDE the monitor — see PrefixStore.incCore
-      val v = computeIncCore(ctx, idCol, strCol, k)
-      incMemo.synchronized {
-        val prior = incMemo.get(ctx)
-        if (prior != null) prior else { incMemo.put(ctx, v); v }
-      }
-    }
-  }
-
-  private def computeIncCore(ctx: AdvanceCtx, idCol: String,
-      strCol: Column, k: Int): IncCore = {
-    val newStrs = track(ctx,
-      withLen(ctx.newDocs, idCol, strCol).localCheckpoint(true))
-    val newReps = track(ctx, newStrs.groupBy("s").agg(min("sid").as("sid"),
+      k: Int): IncCore = ctx.memo("inc") {
+    val newStrs = ctx.pin(withLen(ctx.newDocs, idCol, strCol))
+    val newReps = ctx.pin(newStrs.groupBy("s").agg(min("sid").as("sid"),
         first("l").as("l"))
-      .select("sid", "s", "l").localCheckpoint(true))
+      .select("sid", "s", "l"))
     // stored side restricted to representatives
     val storedReps = ctx.stored("reps")
     val repIds = storedReps.select(col("rid").as("sid"))
@@ -122,10 +99,8 @@ object EditStore {
       .where(col("dist") <= k)
       .select(col("new_id").as("rid_n"), col("dup_id").as("rid_o"),
         col("dist"))
-    val crossCk = track(ctx, crossRep.localCheckpoint(true))
-    val withinRep = track(ctx,
-      EditJoin.similarPairs(newReps, "sid", col("s"), k).localCheckpoint(true))
-    IncCore(newStrs, newReps, crossCk, withinRep)
+    IncCore(newStrs, newReps, ctx.pin(crossRep),
+      ctx.pin(EditJoin.similarPairs(newReps, "sid", col("s"), k)))
   }
 
   // ---------------------------------------------------------------
@@ -179,7 +154,7 @@ object EditStore {
 
   private def buildFullLabels(ctx: AdvanceCtx): DataFrame = {
     val strs = ctx.stored("strs")
-    val reps = track(ctx, ctx.stored("reps").localCheckpoint())
+    val reps = ctx.pin(ctx.stored("reps"))
     val m = strs.select(col("sid"), col("s"))
     val repEdges = ctx.stored("pairs")
       .join(m.select(col("sid").as("id_a"), col("s").as("s_a")), "id_a")
@@ -211,9 +186,8 @@ object EditStore {
     val oldLabels = ctx.stored("labels")
     val touched = cross.select(col("id_b").as("sid")).distinct()
       .join(oldLabels, "sid").select("cluster_id").distinct()
-    val affected = track(ctx, oldLabels.join(touched, "cluster_id")
-      .select(col("sid"), col("cluster_id"))
-      .localCheckpoint(true))
+    val affected = ctx.pin(oldLabels.join(touched, "cluster_id")
+      .select(col("sid"), col("cluster_id")))
     val nodes = c.newStrs.select(col("sid"))
       .union(affected.select("sid"))
     val edges = cross.union(within).union(docRep)
@@ -250,11 +224,7 @@ object EditStore {
       // pairs/labels surfaces catch up on first read (the engine's
       // lazy-merge contract — sound because the advances are
       // generation-chunking invariant)
-      lazyMerges = true,
-      onAdvanceDone = ctx => {
-        incMemo.synchronized(incMemo.remove(ctx))
-        scratch.freeAll(ctx)
-      })
+      lazyMerges = true)
 
   /** Stored (id_a, id_b, dist) pairs over the whole corpus — a scan
     * of the persisted `pairs` merge piece.

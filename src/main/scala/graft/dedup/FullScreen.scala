@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{BigramLmStore, TextFunctions}
+import graft.operators.Pin
 
 /** The FULL stored-screen stack as ONE ingest call — the actual front
   * door of a large-scale corpus: a production batch wants the exact
@@ -48,9 +49,8 @@ object FullScreen {
       batch: DataFrame, idCol: String,
       corpusFilter: Column = lit(true)): DataFrame = {
     // THE normalization pass — every stage below reads this checkpoint
-    val b = batch
-      .select(col(idCol), TextFunctions.normalize(col("text")).as("text"))
-      .localCheckpoint(true)
+    val b = Pin(batch
+      .select(col(idCol), TextFunctions.normalize(col("text")).as("text")))
     val triage = IngestScreen.screen(spark, sfDir, table, b, idCol,
       corpusFilter)
     val jacc = PrefixStore.screen(spark, sfDir, table, b, idCol,

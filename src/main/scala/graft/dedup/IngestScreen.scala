@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.operators.Pin
 
 /** The per-batch ingest screen — ONE call a production pipeline makes
   * for every incoming batch, against the STORED corpus artifacts:
@@ -31,9 +32,9 @@ object IngestScreen {
       batch: DataFrame, idCol: String,
       corpusFilter: org.apache.spark.sql.Column = lit(true)): DataFrame = {
     val norm = TextFunctions.normalize(col("text"))
-    val b = batch.select(col(idCol), norm.as("_norm"))
-      .withColumn("fp", TextFunctions.fingerprint(col("_norm")))
-      .localCheckpoint(true) // one normalization pass feeds both screens
+    // one normalization pass feeds both screens
+    val b = Pin(batch.select(col(idCol), norm.as("_norm"))
+      .withColumn("fp", TextFunctions.fingerprint(col("_norm"))))
     val exact = b.join(
         DigestStore.digests(spark, sfDir, table).filter(corpusFilter)
           .select("fp").distinct(),

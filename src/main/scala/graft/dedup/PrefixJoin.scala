@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.operators.Pin
 
 /** Exact set-similarity self-join via prefix filtering — the
   * AllPairs / PPJoin family (Bayardo et al., WWW 2007; Vernica et
@@ -70,20 +71,19 @@ object PrefixJoin {
       array_distinct(split(TextFunctions.normalize(text), " ")).as("toks"))
     // --- contraction: one representative per distinct token set.
     // Both tables are consumed by several downstream joins;
-    // localCheckpoint pins them so the scan+normalize+md5 lineage
+    // pinning them makes the scan+normalize+md5 lineage
     // runs once, not once per consumer (the §9.15 discipline).
     val withFp = sets.select(id, col("toks"),
       md5(concat_ws(" ", sort_array(col("toks")))).as("fp"))
-    val members = withFp.select(id.as("mid"), col("fp")).localCheckpoint()
+    val members = Pin(withFp.select(id.as("mid"), col("fp")))
     // the representative token array is SORTED: group members share a
     // token SET but not an order, and everything downstream (df
     // counts, prefix keys, interned intersects) is set-semantics —
     // sort_array makes that invariant structural, so a future
     // consumer reading token order off `reps` can't silently depend
     // on which member happened to come first
-    val reps = withFp.groupBy("fp")
-      .agg(min(id).as("rid"), sort_array(first(col("toks"))).as("toks"))
-      .localCheckpoint()
+    val reps = Pin(withFp.groupBy("fp")
+      .agg(min(id).as("rid"), sort_array(first(col("toks"))).as("toks")))
     val exploded = reps.select(col("rid"), explode(col("toks")).as("tok"))
     val dfreq = exploded.groupBy("tok").agg(count(lit(1)).as("df"))
     // (df asc, token asc) composite sort key; df < 10^10 by lpad width
@@ -121,7 +121,7 @@ object PrefixJoin {
     // is purely numeric (the fps re-attach after the distinct;
     // carrying the 32-char strings through the pair volume measured
     // 2-3x the whole join's wall).
-    val pref = prefCapped.localCheckpoint()
+    val pref = Pin(prefCapped)
     val aSide = pref.select(col("rid").as("rid_a"), col("sz").as("sz_a"),
       col("pos").as("pos_a"), col("k"))
     val bSide = pref.select(col("rid").as("rid_b"), col("sz").as("sz_b"),

@@ -180,10 +180,9 @@ object PrefixStore {
   }
 
   // ---------------------------------------------------------------
-  // Per-increment screen, computed once per reconcile (memoized on
-  // the AdvanceCtx identity — each reconcile constructs a fresh ctx,
-  // and every frame is eagerly checkpointed so the three merge
-  // advances share the physical work).
+  // Per-increment screen, computed once per advance (ctx memo; every
+  // frame is ctx-pinned so the three merge advances share the
+  // physical work).
   // ---------------------------------------------------------------
 
   private final case class IncCore(
@@ -192,62 +191,34 @@ object PrefixStore {
       crossRep: DataFrame, // (rid_n, rid_o, jaccard) new-rep × old-rep
       withinRep: DataFrame) // (rid_a, rid_b, jaccard) among new reps
 
-  private val incMemo =
-    new java.util.WeakHashMap[AnyRef, IncCore]()
-  // checkpointed scratch frames, freed when the engine signals the
-  // advance is done — past increments must not pin executor storage
-  private val scratch = new graft.sources.CheckpointUtil.Scratch
-  private def track(ctx: AdvanceCtx, df: DataFrame): DataFrame =
-    scratch.track(ctx, df)
-
-  private def incCore(ctx: AdvanceCtx, tauNum: Int, tauDen: Int): IncCore = {
-    val hit = incMemo.synchronized(incMemo.get(ctx))
-    if (hit != null) hit
-    else {
-      // computed OUTSIDE the monitor (it runs real Spark jobs): a
-      // concurrent advance of an unrelated artifact must not
-      // serialize behind it; a racing duplicate compute is
-      // deterministic and benign
-      val v = computeIncCore(ctx, tauNum, tauDen)
-      incMemo.synchronized {
-        val prior = incMemo.get(ctx)
-        if (prior != null) prior else { incMemo.put(ctx, v); v }
-      }
-    }
-  }
-
-  private def computeIncCore(ctx: AdvanceCtx,
-      tauNum: Int, tauDen: Int): IncCore = {
-    val newSets = track(ctx, interned(ctx.newDocs).localCheckpoint(true))
-    val newReps = track(ctx,
+  private def incCore(ctx: AdvanceCtx, tauNum: Int,
+      tauDen: Int): IncCore = ctx.memo("inc") {
+    val newSets = ctx.pin(interned(ctx.newDocs))
+    val newReps = ctx.pin(
       newSets.groupBy("fp").agg(min("doc_id").as("rid"))
         .join(newSets.select(col("doc_id").as("rid"), col("ht"), col("n")),
-          "rid")
-        .localCheckpoint(true))
+          "rid"))
     // probe prefixes for the new reps under the STORED frozen order
     val order = ctx.stored("order")
     val repDocs = ctx.newDocs
       .join(newReps.select(col("rid").as("doc_id")), "doc_id")
-    val probePref = track(ctx, prefixEntries(repDocs, "doc_id", col("text"),
-      order, tauNum, tauDen).localCheckpoint(true))
+    val probePref = ctx.pin(prefixEntries(repDocs, "doc_id", col("text"),
+      order, tauNum, tauDen))
     // stored side restricted to representatives — contraction on both
     // sides keeps candidate volume following distinct-set structure
     val storedReps = ctx.stored("reps")
-    val oldRepSets = track(ctx, ctx.stored("sets")
-      .join(storedReps.select(col("rid").as("doc_id")), "doc_id")
-      .localCheckpoint(true))
+    val oldRepSets = ctx.pin(ctx.stored("sets")
+      .join(storedReps.select(col("rid").as("doc_id")), "doc_id"))
     val oldRepPref = ctx.stored("prefix")
       .join(storedReps.select(col("rid").as("doc_id")), "doc_id")
-    val crossRep = track(ctx, verifyPairs(
+    val crossRep = ctx.pin(verifyPairs(
       candPairs(probePref, oldRepPref, tauNum, tauDen, ordered = false),
       newSets, oldRepSets, tauNum, tauDen)
       .select(col("rid_a").as("rid_n"), col("rid_b").as("rid_o"),
-        col("jaccard"))
-      .localCheckpoint(true))
-    val withinRep = track(ctx, verifyPairs(
+        col("jaccard")))
+    val withinRep = ctx.pin(verifyPairs(
       candPairs(probePref, probePref, tauNum, tauDen, ordered = true),
-      newSets, newSets, tauNum, tauDen)
-      .localCheckpoint(true))
+      newSets, newSets, tauNum, tauDen))
     IncCore(newSets, newReps, crossRep, withinRep)
   }
 
@@ -275,14 +246,13 @@ object PrefixStore {
     */
   private def buildFullPairs(ctx: AdvanceCtx,
       tauNum: Int, tauDen: Int): DataFrame = {
-    val sets = track(ctx, ctx.stored("sets").localCheckpoint())
-    val reps = track(ctx, ctx.stored("reps").localCheckpoint())
+    val sets = ctx.pin(ctx.stored("sets"))
+    val reps = ctx.pin(ctx.stored("reps"))
     val repSets = sets
       .join(reps.select(col("rid").as("doc_id"), col("fp").as("_f")), "doc_id")
       .drop("_f")
-    val repPref = track(ctx, ctx.stored("prefix")
-      .join(reps.select(col("rid").as("doc_id")), "doc_id")
-      .localCheckpoint())
+    val repPref = ctx.pin(ctx.stored("prefix")
+      .join(reps.select(col("rid").as("doc_id")), "doc_id"))
     val rp = verifyPairs(
       candPairs(repPref, repPref, tauNum, tauDen, ordered = true),
       repSets, repSets, tauNum, tauDen)
@@ -345,7 +315,7 @@ object PrefixStore {
     */
   private def buildFullLabels(ctx: AdvanceCtx): DataFrame = {
     val sets = ctx.stored("sets")
-    val reps = track(ctx, ctx.stored("reps").localCheckpoint())
+    val reps = ctx.pin(ctx.stored("reps"))
     val m = sets.select(col("doc_id"), col("fp"))
     val repEdges = ctx.stored("pairs")
       .join(m.select(col("doc_id").as("id_a"), col("fp").as("fp_a")), "id_a")
@@ -386,9 +356,8 @@ object PrefixStore {
     val oldLabels = ctx.stored("labels")
     val touched = cross.select(col("id_b").as("doc_id")).distinct()
       .join(oldLabels, "doc_id").select("cluster_id").distinct()
-    val affected = track(ctx, oldLabels.join(touched, "cluster_id")
-      .select(col("doc_id"), col("cluster_id"))
-      .localCheckpoint(true))
+    val affected = ctx.pin(oldLabels.join(touched, "cluster_id")
+      .select(col("doc_id"), col("cluster_id")))
     val nodes = ctx.newDocs.select(col("doc_id"))
       .union(affected.select("doc_id"))
     val edges = cross
@@ -424,11 +393,7 @@ object PrefixStore {
       compactEvery = 8,
       // surface scoping: appends advance only the screen pieces; the
       // reps/pairs/labels result surfaces catch up on first read
-      lazyMerges = true,
-      onAdvanceDone = ctx => {
-        incMemo.synchronized(incMemo.remove(ctx))
-        scratch.freeAll(ctx)
-      })
+      lazyMerges = true)
 
   /** All (new_id, dup_id, jaccard) pairs between `batch` docs and
     * stored corpus docs with word-set Jaccard >= tauNum/tauDen —

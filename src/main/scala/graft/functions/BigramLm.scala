@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Pin
+
 /** Interpolated Kneser-Ney bigram language model — the proper-LM
   * upgrade of [[TextOps.unigramLogProb]]'s CCNet-style filter (KN
   * smoothing: Kneser & Ney 1995; the fixed-discount interpolated
@@ -54,12 +56,11 @@ object BigramLm {
           element_at(col("a"), i + 1).as("w2")))).as("b"))
       .select(id, col("b.w1").as("w1"), col("b.w2").as("w2"))
     // bc feeds FOUR consumers (cw1, pc, types, the scoring join) and
-    // its lineage is the full bigram explode — checkpoint the small
+    // its lineage is the full bigram explode — pin the small
     // (distinct bigrams) table once instead of recomputing it per
     // consumer (r17). Lazily: the first consumer is a full aggregate
     // anyway, so building the plan runs no count job of its own.
-    val bc = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+    val bc = Pin.lazily(bg.groupBy("w1", "w2").agg(count(lit(1)).as("c")))
     val cw1 = bc.groupBy("w1")
       .agg(sum("c").as("ctx"), count(lit(1)).as("n1f"))
     val pc = bc.groupBy("w2").agg(count(lit(1)).as("n1p"))

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Pin
 import graft.sources.IncrementalDocArtifact
 import graft.sources.IncrementalDocArtifact.Piece
 
@@ -78,7 +79,7 @@ object BigramLmStore {
   def scoreBatch(spark: SparkSession, sfDir: String, table: String,
       batch: DataFrame, idCol: String, discount: Double = 0.75,
       corpusFilter: Column = lit(true)): DataFrame = {
-    val bc = counts(spark, sfDir, table, corpusFilter).localCheckpoint()
+    val bc = Pin(counts(spark, sfDir, table, corpusFilter))
     val cw1 = bc.groupBy("w1").agg(sum("c").as("ctx"), count(lit(1)).as("n1f"))
     val pcT = bc.groupBy("w2").agg(count(lit(1)).as("n1p"))
     val totals = bc.agg(count(lit(1)).cast("double").as("t_types"))

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Pin
+
 /** Feature-hashed TF-IDF document embeddings — the "hashing trick"
   * (Weinberger et al., ICML 2009; the standard scalable text
   * vectorizer). Closes the raw-text → vector loop: everything
@@ -163,9 +165,8 @@ object HashedTfIdf {
   def topKCosinePruned(features: DataFrame, queryFeatures: DataFrame,
       k: Int, fallbackFrac: Double = 0.5,
       gateCap: Int = maxGateRows): DataFrame = {
-    val norms = features.groupBy("doc_id")
-      .agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
-      .localCheckpoint()
+    val norms = Pin(features.groupBy("doc_id")
+      .agg(sqrt(sum(col("w") * col("w"))).as("nrm")))
     // 1. per-bucket normalized impact ceiling (+ postings count for
     // the adaptive volume estimate)
     val ub = features.join(norms, "doc_id")

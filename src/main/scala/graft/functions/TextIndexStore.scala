@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.IncrementalDocArtifact
-import graft.sources.IncrementalDocArtifact.Piece
+import graft.sources.IncrementalDocArtifact.{AdvanceCtx, Piece}
 
 /** Persisted text-search index over a corpus directory, maintained
   * INCREMENTALLY — the base+delta discipline `StreamingLshDedup`
@@ -59,30 +59,15 @@ object TextIndexStore {
 
   // three pieces (postings, statsparts, termbounds) derive from the
   // SAME (doc, term) aggregation over the build's docs — memoize ONE
-  // checkpointed copy per build invocation (keyed on the docs frame
-  // the engine hands every builder) so the tokenize + doc×term
-  // shuffle runs once per increment, not three times
-  private val postMemo =
-    new java.util.WeakHashMap[AnyRef, DataFrame]()
-
-  private def postingsOf(docs: DataFrame): DataFrame = {
-    val hit = postMemo.synchronized(postMemo.get(docs))
-    if (hit != null) hit
-    else {
-      // computed OUTSIDE the monitor: a concurrent build of another
-      // artifact must not serialize behind this one's Spark jobs
-      val v = TextSearch.postings(docs, "doc_id", normCol).localCheckpoint()
-      postMemo.synchronized {
-        val prior = postMemo.get(docs)
-        if (prior != null) prior else { postMemo.put(docs, v); v }
-      }
-    }
-  }
+  // pinned copy per advance so the tokenize + doc×term shuffle runs
+  // once per increment, not three times
+  private def postingsOf(docs: DataFrame, ctx: AdvanceCtx): DataFrame =
+    ctx.memo("postings")(ctx.pin(TextSearch.postings(docs, "doc_id", normCol)))
 
   private def handle(corpusPath: String) =
     IncrementalDocArtifact(corpusPath, "inc3", Seq(
       Piece("postings",
-        (docs, _) => byTerm(postingsOf(docs)),
+        (docs, ctx) => byTerm(postingsOf(docs, ctx)),
         fold = Some(byTerm)),
       Piece("positional",
         (docs, _) => byTerm(TextSearch.positionalPostings(docs, "doc_id", normCol)),
@@ -93,8 +78,8 @@ object TextIndexStore {
       // on high-tf corpora and biased the scan-floor gate toward the
       // naive fallback
       Piece("statsparts",
-        (docs, _) => {
-          val p = postingsOf(docs)
+        (docs, ctx) => {
+          val p = postingsOf(docs, ctx)
           p.groupBy(col("doc_id")).agg(first("dl").as("dl"))
             .agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
             .crossJoin(p.agg(count(lit(1)).as("post_rows")))
@@ -106,15 +91,9 @@ object TextIndexStore {
       // sum/max/min partials fold additively, so increments keep the
       // ceilings valid O(new); see TextSearch.termBounds
       Piece("termbounds",
-        (docs, _) => TextSearch.termBounds(postingsOf(docs)),
+        (docs, ctx) => TextSearch.termBounds(postingsOf(docs, ctx)),
         fold = Some(foldBounds))),
-      merges = Nil,
-      compactEvery = compactEvery,
-      lazyMerges = false,
-      onAdvanceDone = ctx => {
-        val f = postMemo.synchronized(postMemo.remove(ctx.newDocs))
-        if (f != null) graft.sources.CheckpointUtil.free(f)
-      })
+      compactEvery = compactEvery)
 
   private def serve(spark: SparkSession, sfDir: String, piece: String): DataFrame =
     handle(s"$sfDir/documents.parquet").serve(spark, piece)

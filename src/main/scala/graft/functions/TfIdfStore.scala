@@ -3,8 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{CheckpointUtil, IncrementalDocArtifact}
-import graft.sources.IncrementalDocArtifact.Piece
+import graft.sources.IncrementalDocArtifact
+import graft.sources.IncrementalDocArtifact.{AdvanceCtx, Piece}
 
 /** Persisted hashed TF-IDF feature artifact — the sparse signed-hash
   * vectors of [[HashedTfIdf.sparseFeatures]] stored once and served as
@@ -53,27 +53,13 @@ object TfIdfStore {
   val compactEvery = 8
 
   /** (doc_id, tok, tf) term frequencies of `docs` — the shared input
-    * of every piece; memoized per build so the tokenize + (doc, tok)
+    * of every piece; memoized per advance so the tokenize + (doc, tok)
     * shuffle runs once per increment, not four times.
     */
-  private val tfMemo = new java.util.WeakHashMap[AnyRef, DataFrame]()
-
-  private def tfOf(docs: DataFrame): DataFrame = {
-    val hit = tfMemo.synchronized(tfMemo.get(docs))
-    if (hit != null) hit
-    else {
-      // computed OUTSIDE the monitor: a concurrent build of another
-      // artifact must not serialize behind this one's Spark jobs
-      val v = docs.select(col("doc_id"),
-          explode(split(TextFunctions.normalize(col("text")), " ")).as("tok"))
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-        .localCheckpoint()
-      tfMemo.synchronized {
-        val prior = tfMemo.get(docs)
-        if (prior != null) prior else { tfMemo.put(docs, v); v }
-      }
-    }
-  }
+  private def tfOf(docs: DataFrame, ctx: AdvanceCtx): DataFrame =
+    ctx.memo("tf")(ctx.pin(docs.select(col("doc_id"),
+        explode(split(TextFunctions.normalize(col("text")), " ")).as("tok"))
+      .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))))
 
   /** Per-generation feature rows: tf of the build's docs joined to the
     * PRE-INCREMENT df/N folds (whole-corpus folds at rebuild). Same
@@ -82,13 +68,8 @@ object TfIdfStore {
     * tokens carry df=0 — idf = ln(N+1)+1, the smoothing's natural
     * novel-token value.
     */
-  private val featsMemo = new java.util.WeakHashMap[AnyRef, DataFrame]()
-
-  private def featsOf(docs: DataFrame, ctx: IncrementalDocArtifact.AdvanceCtx,
-      dim: Int): DataFrame = {
-    val hit = featsMemo.synchronized(featsMemo.get(docs))
-    if (hit != null) hit
-    else {
+  private def featsOf(docs: DataFrame, ctx: AdvanceCtx, dim: Int): DataFrame =
+    ctx.memo("feats") {
       val dfreq = ctx.stored("dfparts").groupBy("tok")
         .agg(sum("df").as("df"))
       val n = ctx.stored("nparts")
@@ -98,19 +79,13 @@ object TfIdfStore {
         .cast("long") % dim
       val sign = when(conv(substring(md5(col("tok")), 16, 1), 16, 10)
         .cast("int") < 8, 1d).otherwise(-1d)
-      val v = tfOf(docs)
+      ctx.pin(tfOf(docs, ctx)
         .join(dfreq, Seq("tok"), "left")
         .crossJoin(broadcast(n))
         .groupBy(col("doc_id"), bucket.as("bucket"))
         .agg(sum(sign * col("tf") * idf).as("_w"))
-        .select(col("doc_id"), col("bucket"), round(col("_w"), 4).as("w"))
-        .localCheckpoint()
-      featsMemo.synchronized {
-        val prior = featsMemo.get(docs)
-        if (prior != null) prior else { featsMemo.put(docs, v); v }
-      }
+        .select(col("doc_id"), col("bucket"), round(col("_w"), 4).as("w")))
     }
-  }
 
   /** Cluster features by bucket so retrieval's matched-bucket reads
     * skip row groups (parquet min/max on the sorted column).
@@ -123,7 +98,7 @@ object TfIdfStore {
       // additive idf inputs — always current; feats of gen g read the
       // fold of gens < g (pre-increment views = the pinned-idf contract)
       Piece("dfparts",
-        (docs, _) => tfOf(docs).groupBy("tok").agg(count(lit(1)).as("df")),
+        (docs, ctx) => tfOf(docs, ctx).groupBy("tok").agg(count(lit(1)).as("df")),
         fold = Some(_.groupBy("tok").agg(sum("df").as("df")))),
       Piece("nparts",
         (docs, _) => docs.agg(count(lit(1)).as("n_docs")),
@@ -154,7 +129,7 @@ object TfIdfStore {
             .agg(sum("n_docs").cast("double").as("n_docs"))
           val idfp = log((col("n_docs") + 1d)
             / (coalesce(col("df"), lit(0L)) + 1d)) + 1d
-          tfOf(docs).groupBy("tok").agg(sum("tf").as("tfsum"))
+          tfOf(docs, ctx).groupBy("tok").agg(sum("tf").as("tfsum"))
             .join(dfreq, Seq("tok"), "left")
             .crossJoin(broadcast(n))
             .select(col("tok"), col("tfsum"), idfp.as("idfp"))
@@ -179,15 +154,7 @@ object TfIdfStore {
         },
         fold = Some(_.groupBy("bucket")
           .agg(max("u").as("u"), sum("cnt").as("cnt"))))),
-      merges = Nil,
-      compactEvery = compactEvery,
-      lazyMerges = false,
-      onAdvanceDone = ctx => {
-        Seq(tfMemo, featsMemo).foreach { memo =>
-          val f = memo.synchronized(memo.remove(ctx.newDocs))
-          if (f != null) CheckpointUtil.free(f)
-        }
-      })
+      compactEvery = compactEvery)
 
   private def serve(spark: SparkSession, sfDir: String, piece: String,
       dim: Int): DataFrame =

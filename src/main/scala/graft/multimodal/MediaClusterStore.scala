@@ -65,13 +65,13 @@ object MediaClusterStore {
 
   private def advanceLabels(ctx: AdvanceCtx, dim: Int,
       maxDist: Int): DataFrame = {
-    val newSigs = hashedOf(ctx.newDocs, dim).localCheckpoint(true)
+    val newSigs = ctx.pin(hashedOf(ctx.newDocs, dim))
     val oldLabels = ctx.stored("labels")
     val newReps = newSigs.groupBy("phash").agg(min("media_id").as("media_id"))
-    val crossEdges = Media.phashProbePairs(ctx.stored("reps"), newReps, maxDist)
-      .select(col("id_a"), col("id_b")).localCheckpoint(true)
-    val newEdges = Media.phashNearDups(newReps, maxDist)
-      .select("id_a", "id_b").localCheckpoint(true)
+    val crossEdges = ctx.pin(Media.phashProbePairs(ctx.stored("reps"), newReps,
+      maxDist).select(col("id_a"), col("id_b")))
+    val newEdges = ctx.pin(Media.phashNearDups(newReps, maxDist)
+      .select("id_a", "id_b"))
     val itemRep = newSigs
       .join(newReps.withColumnRenamed("media_id", "_rep"), "phash")
       .select(col("media_id").as("id_a"), col("_rep").as("id_b"))
@@ -82,9 +82,8 @@ object MediaClusterStore {
         col("id_b").as("cluster_id"))
     val touched = crossEdges.select(col("id_a").as("media_id")).distinct()
       .join(oldLabels, "media_id").select("cluster_id").distinct()
-    val affected = oldLabels.join(touched, "cluster_id")
-      .select(col("media_id"), col("cluster_id"))
-      .localCheckpoint(true)
+    val affected = ctx.pin(oldLabels.join(touched, "cluster_id")
+      .select(col("media_id"), col("cluster_id")))
     val nodes = ctx.newDocs.select(col("doc_id").as("media_id"))
       .union(affected.select("media_id"))
     val edges = crossEdges

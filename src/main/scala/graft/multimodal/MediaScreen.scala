@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Pin
 import graft.sources.IncrementalDocArtifact
 import graft.sources.IncrementalDocArtifact.Piece
 
@@ -73,7 +74,7 @@ object MediaScreen {
   def screen(spark: SparkSession, sfDir: String, table: String,
       batch: DataFrame, corpusFilter: Column = lit(true)): DataFrame = {
     val corpus = stored(spark, sfDir, table).filter(corpusFilter)
-    val b = hashed(batch).localCheckpoint(true) // one decode+hash pass
+    val b = Pin(hashed(batch)) // one decode+hash pass
     val exact = b.join(corpus.select("fp").distinct(), Seq("fp"), "left_semi")
       .select(col("media_id")).withColumn("_exact", lit(true))
     val near = blocks(b).withColumnRenamed("media_id", "_bid")

@@ -155,14 +155,14 @@ object CoOccurStore {
     */
   private[graft] def pairDeltaOf(inc: DataFrame,
       prior: DataFrame): DataFrame = {
-    val incC = inc.localCheckpoint()
+    val incC = Pin(inc)
     val affected = incC.select("g").distinct()
     val cap = 10000
     val gs = affected.limit(cap + 1).collect().map(_.get(0))
-    val pre = (if (gs.length <= cap)
+    // both pair passes read it; scan once
+    val pre = Pin(if (gs.length <= cap)
         prior.where(col("g").isInCollection(gs.toSeq))
       else prior.join(affected, Seq("g"), "left_semi"))
-      .localCheckpoint() // both pair passes read it; scan once
     val preN = pairCounts(pre).withColumnRenamed("n", "pre_n")
     // appends only grow distinct (g,i): post covers pre's keys
     pairCounts(pre.unionByName(incC))
@@ -220,31 +220,21 @@ object CoOccurStore {
       docs.select(col(groupCol).as("g"), col(itemCol).as("i"))
 
     // ---------------------------------------------------------------
-    // Per-advance shared computations. The additive build and both
-    // graph merges run sequentially inside ONE advance / catch-up
-    // (single writer per artifact root), so caching by ctx identity
-    // is safe and saves recomputing the delta three times.
+    // Per-advance shared computations (ctx memos): the additive build
+    // and both graph merges of ONE advance / catch-up share the delta
+    // instead of recomputing it three times.
     // ---------------------------------------------------------------
-    var deltaCache: Option[(AnyRef, DataFrame)] = None
-    var newEdgeCache: Option[(AnyRef, Option[Seq[(Any, Any)]])] = None
-    var edgesCache: Option[(AnyRef, DataFrame)] = None
 
     /** The increment's pair DELTA PARTIAL (`post − pre` per touched
       * canonical edge) — [[pairDeltaOf]] against the pre-increment
-      * stored rows, cached per ctx (the additive build and both graph
-      * merges consume it within one advance).
+      * stored rows, memoized per advance (the additive build and both
+      * graph merges consume it).
       */
-    def pairDelta(ctx: AdvanceCtx): DataFrame = deltaCache match {
-      case Some((k, df)) if k eq ctx => df
-      case _ =>
-        val df = pairDeltaOf(gi(ctx.newDocs), ctx.stored("gi"))
-          .localCheckpoint()
-        deltaCache = Some((ctx, df))
-        df
-    }
+    def pairDelta(ctx: AdvanceCtx): DataFrame = ctx.memo("delta")(
+      ctx.pin(pairDeltaOf(gi(ctx.newDocs), ctx.stored("gi"))))
 
     /** Post-increment WEIGHTED cut edges, materialized ONCE per
-      * advance (localCheckpoint) and shared by both graph advances:
+      * advance (ctx-pinned) and shared by both graph advances:
       * one map-side-combinable aggregate over the partials with a
       * graph-sized result — the same edge list every warm q74/q77
       * serve scans. A per-query capped-In scan of the raw partials
@@ -258,61 +248,53 @@ object CoOccurStore {
       * against the a-clustered folded base instead once the fold has
       * landed — the clustered layout already exists.
       */
-    def weightedAll(ctx: AdvanceCtx): DataFrame = edgesCache match {
-      case Some((k, df)) if k eq ctx => df
-      case _ =>
-        val stored = ctx.stored("pairparts")
-        val df =
-          if (ctx.isRebuild)
-            // the freshly-rebuilt base is key-unique (pairCounts
-            // aggregates) — a plain cut, no re-aggregation
-            recordPin(statsKey,
-              stored.where(col("n") >= GraphMinCount).localCheckpoint())
-          else if (ctx.storedBaseOnly("pairparts")) {
-            // post-fold steady state: the base is key-unique, so the
-            // delta merges in with SCAN-ONLY broadcast joins — no
-            // full exchange of the pair artifact per advance (the
-            // advance-side sibling of the serve's fold-skip). Cap
-            // discipline: an oversized delta falls back to the
-            // aggregate.
-            val dp = pairDelta(ctx)
-            val collected = dp.limit(edgeCap + 1).collect()
-            if (collected.length > edgeCap)
-              recordPin(statsKey, sumPairs(stored.unionByName(dp))
-                .where(col("n") >= GraphMinCount).localCheckpoint())
-            else {
-              // dp keys already present in the base merge via a
-              // broadcast left join; brand-new keys append. The
-              // membership lookup prunes by In(a) on the a-clustered
-              // fold layout when the touched-a set is bounded —
-              // row-group skipping instead of a second full scan.
-              val dpAs = collected.map(_.get(0)).distinct.toSeq
-              val probe =
-                if (dpAs.length <= nodeCap)
-                  stored.where(col("a").isInCollection(dpAs))
-                else stored
-              val matched = probe
-                .join(broadcast(dp.select("a", "b")), Seq("a", "b"),
-                  "left_semi")
-                .collect().map(r => (r.get(0), r.get(1))).toSet
-              val dpOnly = collected.filterNot(r =>
-                matched((r.get(0), r.get(1))))
-              val dpOnlyDF = ctx.spark.createDataFrame(
-                dpOnly.toSeq.asJava, dp.schema)
-              recordPin(statsKey, stored
-                .join(broadcast(dp.withColumnRenamed("n", "dn")),
-                  Seq("a", "b"), "left")
-                .select(col("a"), col("b"),
-                  (col("n") + coalesce(col("dn"), lit(0L))).as("n"))
-                .unionByName(dpOnlyDF)
-                .where(col("n") >= GraphMinCount)
-                .localCheckpoint())
-            }
-          } else
-            recordPin(statsKey, sumPairs(stored.unionByName(pairDelta(ctx)))
-              .where(col("n") >= GraphMinCount).localCheckpoint())
-        edgesCache = Some((ctx, df))
-        df
+    def weightedAll(ctx: AdvanceCtx): DataFrame = ctx.memo("edges") {
+      val stored = ctx.stored("pairparts")
+      def cut(df: DataFrame): DataFrame = recordPin(statsKey,
+        ctx.pin(df.where(col("n") >= GraphMinCount)))
+      if (ctx.isRebuild)
+        // the freshly-rebuilt base is key-unique (pairCounts
+        // aggregates) — a plain cut, no re-aggregation
+        cut(stored)
+      else if (ctx.storedBaseOnly("pairparts")) {
+        // post-fold steady state: the base is key-unique, so the
+        // delta merges in with SCAN-ONLY broadcast joins — no
+        // full exchange of the pair artifact per advance (the
+        // advance-side sibling of the serve's fold-skip). Cap
+        // discipline: an oversized delta falls back to the
+        // aggregate.
+        val dp = pairDelta(ctx)
+        val collected = dp.limit(edgeCap + 1).collect()
+        if (collected.length > edgeCap)
+          cut(sumPairs(stored.unionByName(dp)))
+        else {
+          // dp keys already present in the base merge via a
+          // broadcast left join; brand-new keys append. The
+          // membership lookup prunes by In(a) on the a-clustered
+          // fold layout when the touched-a set is bounded —
+          // row-group skipping instead of a second full scan.
+          val dpAs = collected.map(_.get(0)).distinct.toSeq
+          val probe =
+            if (dpAs.length <= nodeCap)
+              stored.where(col("a").isInCollection(dpAs))
+            else stored
+          val matched = probe
+            .join(broadcast(dp.select("a", "b")), Seq("a", "b"),
+              "left_semi")
+            .collect().map(r => (r.get(0), r.get(1))).toSet
+          val dpOnly = collected.filterNot(r =>
+            matched((r.get(0), r.get(1))))
+          val dpOnlyDF = ctx.spark.createDataFrame(
+            dpOnly.toSeq.asJava, dp.schema)
+          cut(stored
+            .join(broadcast(dp.withColumnRenamed("n", "dn")),
+              Seq("a", "b"), "left")
+            .select(col("a"), col("b"),
+              (col("n") + coalesce(col("dn"), lit(0L))).as("n"))
+            .unionByName(dpOnlyDF))
+        }
+      } else
+        cut(sumPairs(stored.unionByName(pairDelta(ctx))))
     }
 
     /** All post-increment edges at the cut (the fallback / rebuild
@@ -329,20 +311,15 @@ object CoOccurStore {
       * delta partial, no extra artifact pass.
       */
     def collectNewEdges(ctx: AdvanceCtx): Option[Seq[(Any, Any)]] =
-      newEdgeCache match {
-        case Some((k, v)) if k eq ctx => v
-        case _ =>
-          val dp = pairDelta(ctx)
-          val rows = weightedAll(ctx)
-            .join(dp.withColumnRenamed("n", "dn"), Seq("a", "b"))
-            .where(col("n") - col("dn") < GraphMinCount)
-            .select("a", "b")
-            .limit(edgeCap + 1).collect()
-          val v: Option[Seq[(Any, Any)]] =
-            if (rows.length > edgeCap) None
-            else Some(rows.toSeq.map(r => (r.get(0), r.get(1))))
-          newEdgeCache = Some((ctx, v))
-          v
+      ctx.memo("newEdges") {
+        val dp = pairDelta(ctx)
+        val rows = weightedAll(ctx)
+          .join(dp.withColumnRenamed("n", "dn"), Seq("a", "b"))
+          .where(col("n") - col("dn") < GraphMinCount)
+          .select("a", "b")
+          .limit(edgeCap + 1).collect()
+        if (rows.length > edgeCap) None
+        else Some(rows.toSeq.map(r => (r.get(0), r.get(1))))
       }
 
     /** Post-increment cut edges incident to `nodes` — an in-memory
@@ -626,7 +603,7 @@ object CoOccurStore {
                 LpaRounds)
               .select(col("node"), col("lbl")),
           advance = ctx => lpaAdvance(ctx, ctx.spark))),
-      compactEvery = 8, lazyMerges = true, onAdvanceDone = _ => ())
+      compactEvery = 8, lazyMerges = true)
   }
 
   /** Stored canonical (a, b) edges of `table`'s (groupCol, itemCol)

@@ -13,12 +13,9 @@ import org.apache.spark.sql.functions._
   * Plan shape per round: one degree aggregate (two map-side projected
   * unions of the edge list, keyed on node) and two semi joins filtering
   * the edge list by the surviving node set — all keyed exchanges, no
-  * cartesians, no driver-side graph state; [[IterPin]] pins each
-  * round (the q34 UnionLoop lesson) — localCheckpoint by default,
-  * periodic RELIABLE checkpoints under
-  * `graft.graph.reliableCheckpointEvery` (executor-local blocks die
-  * with a lost executor on a real cluster, killing the loop's
-  * lineage). Rounds cost O(|surviving E|) and
+  * cartesians, no driver-side graph state; each round is pinned
+  * through [[Pin]] (its scaladoc states the lineage and lost-executor
+  * rules). Rounds cost O(|surviving E|) and
   * the edge list only shrinks, so total work is bounded by
   * rounds × |E| with the usual few-round convergence in practice.
   *
@@ -40,7 +37,7 @@ object KCore {
     * Nodes disappear implicitly — a node exists only through its
     * edges (an isolated node is in no k-core for k >= 1).
     */
-  private def peelOnce(e: DataFrame, k: Int, pin: IterPin): DataFrame = {
+  private def peelOnce(e: DataFrame, k: Int, pin: Pin): DataFrame = {
     val keep = degrees(e).where(col("deg") >= k).select("node")
     pin(e.join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
       .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi"), "e")
@@ -54,7 +51,7 @@ object KCore {
     */
   def peelRounds(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val pin = IterPin.loop()
+    val pin = Pin.loop()
     var e = pin(edges.select(col("a"), col("b")).distinct(), "e")
     var n = e.count()
     var r = 0
@@ -84,7 +81,7 @@ object KCore {
   def core(edges: DataFrame, k: Int, maxRounds: Int = 64): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val pin = IterPin.loop()
+    val pin = Pin.loop()
     var e = pin(edges.select(col("a"), col("b")).distinct(), "e")
     var n = e.count()
     var r = 0

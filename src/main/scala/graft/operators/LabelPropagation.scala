@@ -23,11 +23,8 @@ import org.apache.spark.sql.functions._
   * Plan shape per round: one edge⋈labels join keyed on dst (label
   * lookup), one (src, lbl) count aggregate, one row_number window
   * PARTITIONED by src (bounded per-group sort — never a global
-  * sort); [[IterPin]] pins each round's lineage flat (the q34
-  * UnionLoop lesson) — localCheckpoint by default, periodic RELIABLE
-  * checkpoints under `graft.graph.reliableCheckpointEvery` (a lost
-  * executor on a real cluster loses executor-local blocks and the
-  * loop's lineage with them). Per-round cost is O(E) with all
+  * sort); each round is pinned through [[Pin]] (its scaladoc states
+  * the lineage and lost-executor rules). Per-round cost is O(E) with all
   * exchanges keyed — no cartesians, no driver-side graph state.
   */
 object LabelPropagation {
@@ -46,7 +43,7 @@ object LabelPropagation {
     */
   def labels(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val pin = IterPin.loop()
+    val pin = Pin.loop()
     val e = pin(edges.select(col("src"), col("dst")).distinct(), "edges")
     var lbls = pin(e.select(col("src").as("node")).distinct()
       .withColumn("lbl", col("node")), "lbls")

@@ -49,7 +49,7 @@ object LinkPrediction {
   def commonNeighbors(edges: DataFrame, minCommon: Long,
       degreeCap: Option[Long] = None): DataFrame = {
     require(minCommon >= 1, s"minCommon must be >= 1, got $minCommon")
-    val canon = edges.select(col("a"), col("b")).distinct().localCheckpoint()
+    val canon = Pin(edges.select(col("a"), col("b")).distinct())
     val e = canon.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(canon.select(col("b").as("src"), col("a").as("dst")))
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))

@@ -24,11 +24,8 @@ import org.apache.spark.sql.functions._
   * Scale: per iteration the only corpus-sized exchanges are the
   * edge join (keyed on src) and the contribution aggregate (keyed on
   * dst, map-side combined); rank state is |nodes| rows. The loop is
-  * the cost — [[IterPin]] pins each iteration so lineage stays
-  * flat (the q34 UnionLoop lesson): localCheckpoint by default,
-  * periodic RELIABLE checkpoints under
-  * `graft.graph.reliableCheckpointEvery` for cluster mode, where a
-  * lost executor's localCheckpoint blocks would kill the loop.
+  * the cost — each iteration is pinned through [[Pin]] (its scaladoc
+  * states the lineage and lost-executor rules).
   */
 object PageRank {
 
@@ -44,7 +41,7 @@ object PageRank {
     * state⋈contrib (the state IS the node set). Two pins total
     * (guide §2.4: one exchange per fact, then reuse it).
     */
-  private def graphTables(edges: DataFrame, pin: IterPin)
+  private def graphTables(edges: DataFrame, pin: Pin)
       : (DataFrame, DataFrame, Double) = {
     val e = pin(edges.select(col("src"), col("dst")).distinct(), "edges")
     val nodes = e.select(col("src").as("node"))
@@ -79,7 +76,7 @@ object PageRank {
     * every round).
     */
   private def step(pr: DataFrame, e: DataFrame, n: Double, d: Double,
-      pin: IterPin): DataFrame = {
+      pin: Pin): DataFrame = {
     val dm = pr.filter(col("deg").isNull)
       .agg(coalesce(sum(col("pr")), lit(0.0)).as("dm"))
     val contrib = e
@@ -106,7 +103,7 @@ object PageRank {
     */
   def ranks(spark: SparkSession, edges: DataFrame,
       iters: Int = 5, d: Double = 0.85): DataFrame = {
-    val pin = IterPin.loop()
+    val pin = Pin.loop()
     val (e, base, n) = graphTables(edges, pin)
     // the uniform start is a pure projection of the pinned base — no
     // pin of its own (one localCheckpoint job saved; round 1's plan
@@ -135,7 +132,7 @@ object PageRank {
   def converged(spark: SparkSession, edges: DataFrame,
       init: Option[DataFrame] = None, tol: Double = 1e-9,
       maxIters: Int = 60, d: Double = 0.85): (DataFrame, Int) = {
-    val pin = IterPin.loop()
+    val pin = Pin.loop()
     val (e, base, n) = graphTables(edges, pin)
     var pr = init match {
       case None =>

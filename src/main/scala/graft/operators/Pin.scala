@@ -3,10 +3,15 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Round-pinning for the engine's iterative graph loops (PageRank,
-  * ShortestPath, KCore, LabelPropagation): every round's state is
-  * pinned so lineage stays flat (the q34 UnionLoop lesson — an
-  * unpinned loop's plan doubles per round).
+/** The engine's one lineage cut. Every frame pinned so a plan stays
+  * flat goes through here: `Pin(df)` (eager), `Pin.lazily(df)`
+  * (materialized by the frame's next full scan), and [[Pin.loop]]
+  * for iterative state (PageRank, ShortestPath, KCore,
+  * LabelPropagation, DupClusters), whose every round's state is
+  * pinned — an unpinned loop's plan doubles per round (the q34
+  * UnionLoop lesson). Frames that live for one artifact advance pin
+  * through `IncrementalDocArtifact.AdvanceCtx.pin`, which releases
+  * them when the advance ends.
   *
   * Default pin = `localCheckpoint`, the right local-mode choice (no
   * reliable-storage round trip). But localCheckpoint blocks live in
@@ -37,8 +42,9 @@ import org.apache.spark.storage.StorageLevel
   * stream would land on odd indices forever, its persisted plan
   * growing one union+aggregate per round past the documented ≤ N
   * bound). Callers name streams explicitly: `pin(df, "dist")`;
-  * frames pinned once (the edge list) get their own stream so their
-  * single pin IS a reliable cut.
+  * frames pinned once (the edge list, and every `Pin(df)` /
+  * `Pin.lazily(df)`) get their own stream so their single pin IS a
+  * reliable cut.
   *
   * CACHE DISCIPLINE (knob-on mode): persist registers the frame in
   * Spark's CacheManager, which holds it until an explicit unpersist —
@@ -47,12 +53,12 @@ import org.apache.spark.storage.StorageLevel
   * latest two persisted frames live PER STREAM (the round being built
   * reads the stream's previous frame; older rounds are recovery-only
   * and lineage covers them) and the loop MUST end with
-  * [[IterPin.seal]]: seal reliably checkpoints the final state,
+  * [[Pin.seal]]: seal reliably checkpoints the final state,
   * unpersists every tracked frame of every stream, and returns the
   * sealed result — a long-lived session leaks nothing. Knob-off, seal
   * is the identity.
   */
-final class IterPin private[operators] () {
+final class Pin private[operators] () {
   private val idx = scala.collection.mutable.Map[String, Int]()
   private val cached =
     scala.collection.mutable.Map[String, scala.collection.mutable.Queue[DataFrame]]()
@@ -62,8 +68,8 @@ final class IterPin private[operators] () {
   def apply(df: DataFrame, stream: String): DataFrame = {
     val i = idx.getOrElse(stream, -1) + 1
     idx(stream) = i
-    val pinned = IterPin.pinAt(df, i, stream)
-    if (IterPin.reliableMode) {
+    val pinned = Pin.pinAt(df, i, stream)
+    if (Pin.reliableMode) {
       // track persisted (between-cut) frames; reliable cuts need no
       // release. Keep the latest two per stream: the in-flight round
       // still reads the stream's predecessor; anything older is
@@ -88,11 +94,11 @@ final class IterPin private[operators] () {
     * (cluster knob) keeps the eager cadence unchanged.
     */
   def pinLazy(df: DataFrame, stream: String): DataFrame =
-    if (IterPin.reliableMode) apply(df, stream)
+    if (Pin.reliableMode) apply(df, stream)
     else {
       val i = idx.getOrElse(stream, -1) + 1
       idx(stream) = i
-      val t = IterPin.trace
+      val t = Pin.trace
       if (t != null) t(stream, i, false)
       df.localCheckpoint(eager = false)
     }
@@ -114,7 +120,7 @@ final class IterPin private[operators] () {
     * return the sealed result. Identity when the knob is off.
     */
   def seal(result: DataFrame): DataFrame =
-    if (!IterPin.reliableMode) result
+    if (!Pin.reliableMode) result
     else {
       val out = result.checkpoint()
       cached.valuesIterator.foreach(
@@ -123,13 +129,24 @@ final class IterPin private[operators] () {
     }
 }
 
-object IterPin {
+object Pin {
+
+  /** Eager one-shot pin: `localCheckpoint()` knob-off; pin index 0 of
+    * its own stream (a reliable `checkpoint()`) knob-on.
+    */
+  def apply(df: DataFrame): DataFrame = pinAt(df, 0, "")
+
+  /** Lazy one-shot pin (`localCheckpoint(eager = false)` knob-off) —
+    * the same full-scan-first safety condition as [[Pin.pinLazy]];
+    * eager reliable cut knob-on.
+    */
+  def lazily(df: DataFrame): DataFrame = loop().pinLazy(df, "")
 
   /** One pin sequence per operator invocation: per stream, pin index
     * 0 is the stream's first frame (edge list / initial state), then
     * one per round.
     */
-  def loop(): IterPin = new IterPin
+  def loop(): Pin = new Pin
 
   /** 0 = disabled (localCheckpoint only). A malformed property
     * degrades to disabled — config misreads must not kill the graph

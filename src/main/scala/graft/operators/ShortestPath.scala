@@ -22,12 +22,8 @@ import org.apache.spark.sql.functions._
   * Per iteration: ONE edge join keyed on src (the frontier is the
   * small side — broadcastable early on, AQE's call), one distinct on
   * the discovered set, one anti join against settled (both keyed on
-  * node). Rounds are pinned through [[IterPin]] so lineage stays
-  * flat (the q34 UnionLoop lesson): localCheckpoint by default, with
-  * `graft.graph.reliableCheckpointEvery` switching periodic pins to
-  * reliable checkpoints — localCheckpoint blocks are executor-local,
-  * so a lost executor on a real cluster would otherwise kill the
-  * lineage mid-loop. The loop exits early when a frontier is
+  * node). Rounds are pinned through [[Pin]] (its scaladoc states the
+  * lineage and lost-executor rules). The loop exits early when a frontier is
   * empty, which never changes the result — it only skips provably
   * empty rounds.
   *
@@ -81,7 +77,7 @@ object ShortestPath {
   private def weightedImpl(edges: DataFrame, seeds: DataFrame,
       rounds: Int, collectSizes: Boolean): (DataFrame, Seq[Long]) = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val pin = IterPin.loop()
+    val pin = Pin.loop()
     // per-stream cadence: imp and dist are SEPARATE state streams —
     // each must land a reliable cut every N of its own pins (a shared
     // index would let dist alias the between-cut slots forever).
@@ -130,7 +126,7 @@ object ShortestPath {
     */
   def hops(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val pin = IterPin.loop()
+    val pin = Pin.loop()
     // lazy + counted pins: one scheduled job per round instead of
     // 3-4 (see weightedImpl's r17 note); every lazily-pinned frame's
     // first action is a full scan (the next round's joins)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Pin
+
 /** Johnson–Lindenstrauss random-projection prefilter: score candidates
   * in a seeded ±1 (Rademacher) projection of the embedding space —
   * rd ≪ d multiply-adds per pair — keep the top `prefilterK` per
@@ -64,10 +66,9 @@ object RandomProjection {
     // scale the projected table is the thing to PERSIST as a keyed
     // artifact — rd doubles per row, d/rd-fold smaller than the
     // embeddings — and this materialization is its in-memory twin.)
-    val c = graft.operators.SkewTools.fanOut(
+    val c = Pin(graft.operators.SkewTools.fanOut(
       corpus.select(col(idCol).as("neighbor_id"), col(embCol).as("c_emb")))
-      .select(col("neighbor_id"), project(col("c_emb"), ps).as("c_proj"))
-      .localCheckpoint(true)
+      .select(col("neighbor_id"), project(col("c_emb"), ps).as("c_proj")))
     val q = queries
       .select(col(idCol).as("query_id"), col(embCol).as("q_emb"))
       .withColumn("q_proj", project(col("q_emb"), ps))

@@ -3,6 +3,8 @@ package graft.similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Pin
+
 /** Semantic (embedding-space) deduplication — SemDeDup-shaped: retire
   * documents whose embeddings are near-duplicates of a kept document,
   * comparing only WITHIN cells of a coarse partition (cluster id,
@@ -83,9 +85,8 @@ object SemanticDedup {
     // table is one scan task (r16 stage profile: the assignment
     // checkpoint ran 1.3 s single-task at sf0.1; same rationale as
     // IvfKnn.members' existing fanOut)
-    val assigned = IvfKnn.assignCells(graft.operators.SkewTools.fanOut(df),
-        vecCol, collected, "__ivf_cell")
-      .localCheckpoint()
+    val assigned = Pin(IvfKnn.assignCells(graft.operators.SkewTools.fanOut(df),
+        vecCol, collected, "__ivf_cell"))
     kept(assigned, idCol, vecCol, "__ivf_cell", minCosine).drop("__ivf_cell")
   }
 }

@@ -3,9 +3,11 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, lit, row_number}
 
+import graft.operators.Pin
 import graft.sources.ParquetTableIO.deleteTree
 
 /** Generic incremental maintenance for derived artifacts — the
@@ -428,7 +430,10 @@ object IncrementalDocArtifact {
     * rebuild) and a view of the stored pieces — pre-increment during
     * an advance (the generations being written/caught-up are excluded,
     * so a crash replay reads identical inputs), rebuilt-so-far during
-    * a rebuild.
+    * a rebuild. It also owns the advance's scratch: frames pinned
+    * through [[pin]] and values built through [[memo]] live for this
+    * one advance — the engine releases them when it ends, whether
+    * every piece was written or one threw.
     */
   final class AdvanceCtx private[IncrementalDocArtifact] (
       val spark: SparkSession,
@@ -454,6 +459,43 @@ object IncrementalDocArtifact {
       */
     def storedBaseOnly(name: String): Boolean =
       isRebuild || baseOnlyCheck(name)
+
+    private val pins = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    private val memos = scala.collection.mutable.Map[String, Any]()
+
+    /** Eager [[graft.operators.Pin]] of a scratch frame the advance's
+      * pieces share. Its blocks are the only copy of the data (the
+      * lineage is cut), so nothing may touch the frame after the
+      * advance ends.
+      */
+    def pin(df: DataFrame): DataFrame = {
+      val p = Pin(df)
+      synchronized(pins += p)
+      p
+    }
+
+    /** `build` once per advance: every piece that asks for `key` gets
+      * the first build's value (pin inside `build` to share the
+      * physical work, not just the plan).
+      */
+    def memo[T](key: String)(build: => T): T =
+      synchronized(memos.getOrElseUpdate(key, build).asInstanceOf[T])
+
+    /** Unpersist the blocks behind every [[pin]] (non-blocking) and
+      * drop the memos.
+      */
+    private[IncrementalDocArtifact] def release(): Unit = {
+      val ps = synchronized {
+        memos.clear()
+        val all = pins.toList
+        pins.clear()
+        all
+      }
+      ps.foreach(_.queryExecution.analyzed.foreach {
+        case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+        case _ => ()
+      })
+    }
   }
 
   /** `compactEvery = 8` is the measured default (SURVEY §9.20: serve
@@ -463,9 +505,7 @@ object IncrementalDocArtifact {
     * append-heavy/read-light artifacts, 0 disables auto-compaction.
     */
   final class Handle(corpusPath: String, key: String, pieces: Seq[Piece],
-      merges: Seq[MergePiece], compactEvery: Int,
-      lazyMerges: Boolean = false,
-      onAdvanceDone: AdvanceCtx => Unit = _ => ()) {
+      merges: Seq[MergePiece], compactEvery: Int, lazyMerges: Boolean) {
 
     private val allNames: Seq[String] = pieces.map(_.name) ++ merges.map(_.name)
     require(allNames.nonEmpty, "artifact needs at least one piece")
@@ -1082,16 +1122,18 @@ object IncrementalDocArtifact {
               (if (lazyMerges) Nil else merges.map(_.name)) ++
                 pieces.filterNot(_.pinned).map(_.name)
             writeGenEntries(gen, newEntries, seq, written)
-            if (lazyMerges)
-              // merge pieces stay behind; pin their coverage at the
-              // pre-append ledger if this is their first lazy skip
-              merges.foreach(mp => if (coveredEntries(mp.name).isEmpty)
-                writeCovered(mp.name, st.entries))
-            else
-              merges.foreach(mp => writeDelta(
-                mp.advance(ctx).withColumn("_seq", lit(seq)), mp.name, gen))
-            pieces.filterNot(_.pinned)
-              .foreach(p => writeDelta(p.build(newDocs, ctx), p.name, gen))
+            try {
+              if (lazyMerges)
+                // merge pieces stay behind; pin their coverage at the
+                // pre-append ledger if this is their first lazy skip
+                merges.foreach(mp => if (coveredEntries(mp.name).isEmpty)
+                  writeCovered(mp.name, st.entries))
+              else
+                merges.foreach(mp => writeDelta(
+                  mp.advance(ctx).withColumn("_seq", lit(seq)), mp.name, gen))
+              pieces.filterNot(_.pinned)
+                .foreach(p => writeDelta(p.build(newDocs, ctx), p.name, gen))
+            } finally ctx.release()
             // refresh #pieces to what actually materialized: an EMPTY
             // delta writes no partition dir (partitionBy writes
             // nothing for zero rows), and the time-travel reader must
@@ -1099,7 +1141,6 @@ object IncrementalDocArtifact {
             writeGenEntries(gen, newEntries, seq,
               written.filter(n =>
                 Files.exists(deltaDir(n).resolve("_gen=" + gen))))
-            onAdvanceDone(ctx)
             // ledger advance is the commit point — atomic rename, last
             writeLedger(current, carriedGens + gen)
             if (!lazyMerges)
@@ -1297,9 +1338,10 @@ object IncrementalDocArtifact {
       val docs = spark.read.parquet(corpusPath)
       val ctx = new AdvanceCtx(spark, docs, view(spark, Set.empty),
         isRebuild = true)
-      pieces.foreach(p => baseIO(p.name).overwrite(p.build(docs, ctx)))
-      merges.foreach(mp => baseIO(mp.name).overwrite(mp.buildFull(docs, ctx)))
-      onAdvanceDone(ctx)
+      try {
+        pieces.foreach(p => baseIO(p.name).overwrite(p.build(docs, ctx)))
+        merges.foreach(mp => baseIO(mp.name).overwrite(mp.buildFull(docs, ctx)))
+      } finally ctx.release()
       // coverage BEFORE the ledger commit: a crash in between leaves a
       // ledger that still mismatches (entries or base versions), so
       // the next reconcile rebuilds again — never a silently-ahead
@@ -1414,14 +1456,14 @@ object IncrementalDocArtifact {
           IncrementalDocArtifact.registerInFlight(rootKey, gen)
           try {
             writeGenEntries(gen, pending, seq, mps.map(_.name))
-            mps.foreach(mp => writeDelta(
+            try mps.foreach(mp => writeDelta(
               mp.advance(ctx).withColumn("_seq", lit(seq)), mp.name, gen))
+            finally ctx.release()
             // refresh #pieces to what actually materialized (an empty
             // advance writes no dir — see the append-path note)
             writeGenEntries(gen, pending, seq,
               mps.map(_.name).filter(n =>
                 Files.exists(deltaDir(n).resolve("_gen=" + gen))))
-            onAdvanceDone(ctx)
             val committed = lock.synchronized {
               val cur = readLedger()
               val ok = cur.baseVersions == st.baseVersions &&
@@ -1893,16 +1935,7 @@ object IncrementalDocArtifact {
   }
 
   def apply(corpusPath: String, key: String, pieces: Seq[Piece],
-      compactEvery: Int = 8): Handle =
-    new Handle(corpusPath, key, pieces, Nil, compactEvery)
-
-  def apply(corpusPath: String, key: String, pieces: Seq[Piece],
-      merges: Seq[MergePiece], compactEvery: Int): Handle =
-    new Handle(corpusPath, key, pieces, merges, compactEvery)
-
-  def apply(corpusPath: String, key: String, pieces: Seq[Piece],
-      merges: Seq[MergePiece], compactEvery: Int, lazyMerges: Boolean,
-      onAdvanceDone: AdvanceCtx => Unit): Handle =
-    new Handle(corpusPath, key, pieces, merges, compactEvery, lazyMerges,
-      onAdvanceDone)
+      merges: Seq[MergePiece] = Nil, compactEvery: Int = 8,
+      lazyMerges: Boolean = false): Handle =
+    new Handle(corpusPath, key, pieces, merges, compactEvery, lazyMerges)
 }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, LongType, StructField, StructType}
 
 import graft.functions.TextFunctions
+import graft.operators.Pin
 import graft.sources.{CorpusLanding, IncrementalDocArtifact}
 import graft.sources.IncrementalDocArtifact.Piece
 
@@ -590,11 +591,10 @@ object StreamingAcceptIngest {
         h.compactDetached(spark)
         val deltaHashes = deltaHalf.get
           .select(explode(col("hs")).as("_h64t")).distinct()
-        inBatch.withColumn("_h64", h64)
+        Pin(inBatch.withColumn("_h64", h64)
           .join(deltaHashes, col("_h64") === col("_h64t"), "left_outer")
           .withColumn("_might", sliceProbe || col("_h64t").isNotNull)
-          .drop("_h64", "_h64t")
-          .localCheckpoint()
+          .drop("_h64", "_h64t"))
       } else {
         val might =
           if (baseSlices == 0L && recent.isEmpty)
@@ -624,7 +624,7 @@ object StreamingAcceptIngest {
               }
             sliceProbe || recentProbe
           }
-        inBatch.withColumn("_might", might).localCheckpoint()
+        Pin(inBatch.withColumn("_might", might))
       }
     val definitelyNew = probed.filter(!col("_might")).drop("_might")
     val maybe = probed.filter(col("_might")).drop("_might")
@@ -823,8 +823,7 @@ object StreamingAcceptIngest {
       else inBatch
     // pinned: the emptiness check and the landing must read ONE
     // evaluation of the screen (not re-run the probe + residue join)
-    val survivors = fresh.withColumn("_ib", lit(batchId))
-      .localCheckpoint()
+    val survivors = Pin(fresh.withColumn("_ib", lit(batchId)))
     // survivors can be empty (an all-duplicate batch): nothing lands,
     // nothing advances — the replay of such a batch is trivially
     // idempotent (same screen, same empty survivor set)
@@ -863,38 +862,24 @@ object StreamingAcceptIngest {
     * ((band, bucket)-clustered — the probe pushes the batch's
     * (band, bucket) pairs). All additive: bands/signatures derive per
     * doc from the landed text — and from ONE shared shingle pass per
-    * advanced generation: the artifact invokes both builders with the
-    * same newDocs frame, so an identity-keyed cache of the pinned
-    * shingle frame collapses the two passes (a miss just restores the
-    * two-pass behavior; entries free with the frame). Rebuilds skip
-    * the pin — a whole-corpus shingle materialization is exactly the
-    * thing a streamed rebuild must not hold.
+    * advanced generation: both builders read one memoized, pinned
+    * signature table of the advance. Rebuilds skip the pin — a
+    * whole-corpus shingle materialization is exactly the thing a
+    * streamed rebuild must not hold.
     */
   private def nearHandle(corpusPath: String, idCol: String,
       textCol: String, expectedItems: Long) = {
     val norm = TextFunctions.normalize(col(textCol))
     // ONE shingle pass per advanced generation, shared by the sigs
-    // and bands builders: the artifact invokes both with the same
-    // newDocs frame, so an identity-keyed cache of the PINNED FUSED
-    // SIGNATURE TABLE (doc-sized — never the exploded shingle frame,
-    // measured trade §9.37) collapses the two passes into one; a miss
-    // just restores the two-pass behavior, entries free with the
-    // frame. Rebuilds skip the pin — each piece streams its own pass
-    // over the whole corpus instead of materializing any of it.
-    val fusedCache = new java.util.WeakHashMap[DataFrame, DataFrame]()
+    // and bands builders: a ctx memo of the PINNED FUSED SIGNATURE
+    // TABLE (doc-sized — never the exploded shingle frame, measured
+    // trade §9.37) collapses the two passes into one, released when
+    // the advance ends. Rebuilds skip the pin — each piece streams its
+    // own pass over the whole corpus instead of materializing any of it.
     def fusedOf(docs: DataFrame,
         ctx: IncrementalDocArtifact.AdvanceCtx): DataFrame =
       if (ctx.isRebuild) fusedInstanceSigTable(docs, idCol, norm)
-      else fusedCache.synchronized {
-        val c = fusedCache.get(docs)
-        if (c != null) c
-        else {
-          val f = fusedInstanceSigTable(docs, idCol, norm)
-            .localCheckpoint()
-          fusedCache.put(docs, f)
-          f
-        }
-      }
+      else ctx.memo("fused")(ctx.pin(fusedInstanceSigTable(docs, idCol, norm)))
     // the stored rows carry (id, _ib) flattened back out of the
     // instance key
     def unkey(df: DataFrame): DataFrame =
@@ -978,8 +963,8 @@ object StreamingAcceptIngest {
     // the signature table AND the final anti-join both read it — an
     // unpinned frame would re-run the bloom probe + residue join
     val exactFresh = traced(h.artifactDir, "exact_screen") {
-      (if (hasPrior) exactScreen(h, spark, inBatch, batchId, expectedItems)
-      else inBatch).localCheckpoint()
+      Pin(if (hasPrior) exactScreen(h, spark, inBatch, batchId, expectedItems)
+      else inBatch)
     }
     val dupId = traced(h.artifactDir, "dup_id_check") {
       exactFresh.groupBy(col(idCol)).count()
@@ -999,7 +984,7 @@ object StreamingAcceptIngest {
     // cheap projection/posexplode from it)
     val norm = TextFunctions.normalize(col(textCol))
     val sigTable = traced(h.artifactDir, "sig_table") {
-      fusedSigTable(exactFresh, idCol, norm).localCheckpoint()
+      Pin(fusedSigTable(exactFresh, idCol, norm))
     }
     val batchSigs = sigTable.select(col(idCol), verSigCol)
     val batchBands = graft.dedup.MinHashLSH
@@ -1035,10 +1020,9 @@ object StreamingAcceptIngest {
             storedBands0.where(pred)
           } else storedBands0
         val cands = traced(h.artifactDir, "cand_probe") {
-          graft.dedup.MinHashLSH.probeCandidatesBanded(
+          Pin(graft.dedup.MinHashLSH.probeCandidatesBanded(
             storedBands.select(col(idCol), col("band"), col("bucket")),
-            batchBands, idCol, maxIndexPerBucket)
-            .localCheckpoint()
+            batchBands, idCol, maxIndexPerBucket))
         }
         val candIds = traced(h.artifactDir, "cand_ids") {
           cands.select("id_index").distinct()
@@ -1081,7 +1065,7 @@ object StreamingAcceptIngest {
       .join(dupVsAccepted.unionByName(dupVsPeers).distinct(),
         Seq(idCol), "left_anti")
     val survivors = traced(h.artifactDir, "verify_and_pin") {
-      fresh.withColumn("_ib", lit(batchId)).localCheckpoint()
+      Pin(fresh.withColumn("_ib", lit(batchId)))
     }
     if (!survivors.isEmpty) {
       traced(h.artifactDir, "land") {

@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.MinHashLSH
 import graft.functions.TextFunctions
+import graft.operators.Pin
 import graft.sources.ParquetTableIO
 
 /** Streaming near-duplicate detection: every micro-batch of documents
@@ -133,8 +134,7 @@ object StreamingLshDedup {
           val spread = batch.repartition(
             batch.sparkSession.sparkContext.defaultParallelism)
           // signatures computed ONCE per batch, reused for probe + append
-          val bands = MinHashLSH.bandedIndex(spread, idCol, norm)
-            .localCheckpoint(true)
+          val bands = Pin(MinHashLSH.bandedIndex(spread, idCol, norm))
           // cold start probes an empty index of the batch's own schema
           val index = readIndexOpt(batch.sparkSession, indexDir)
             .getOrElse(bands.limit(0))

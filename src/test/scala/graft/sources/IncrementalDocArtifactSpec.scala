@@ -3,10 +3,14 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.IncrementalDocArtifact.{MergePiece, Piece}
+import graft.sources.IncrementalDocArtifact.{AdvanceCtx, MergePiece, Piece}
 
 /** Engine-level crash-atomicity of compaction: the folded-gen list
   * commits inside the base snapshot with the pointer flip, so an
@@ -233,7 +237,7 @@ class IncrementalDocArtifactSpec extends SparkSpec {
       Seq(IncrementalDocArtifact.MergePiece("latest", Seq("doc_id"),
         buildFull = (docs, _) => docs.select("doc_id", "text"),
         advance = ctx => ctx.newDocs.select("doc_id", "text"))),
-      compactEvery = 0, lazyMerges = true, onAdvanceDone = _ => ())
+      compactEvery = 0, lazyMerges = true)
     Seq((1L, "one")).toDF("doc_id", "text").coalesce(1).write.parquet(corpus)
     h.serve(spark, "latest").count() shouldBe 1
     Seq((2L, "two")).toDF("doc_id", "text")
@@ -389,7 +393,7 @@ class IncrementalDocArtifactSpec extends SparkSpec {
             .select(col("grp"), greatest(col("mx"),
               coalesce(col("mx0"), lit(Long.MinValue))).as("mx"))
         })),
-      compactEvery = 0, lazyMerges = true, onAdvanceDone = _ => ())
+      compactEvery = 0, lazyMerges = true)
     val rootKey = Paths.get(ArtifactStore.root,
       ArtifactStore.pathKey(corpus) + "_lmc").toString
 
@@ -424,6 +428,70 @@ class IncrementalDocArtifactSpec extends SparkSpec {
       h.serve(spark, "gmax").as[(Long, Long)].collect().toMap shouldBe
         Map(1L -> 7L, 0L -> 4L))
     IncrementalDocArtifact.fsReadsOf(rootKey) shouldBe afterAppend
+    deleteTree(Paths.get(sf))
+  }
+
+  test("ctx scratch is released when the advance ends, also when a piece throws; a memo builds once per advance") {
+    val sf = Files.createTempDirectory("graft-engine-scratch").toString
+    val corpus = s"$sf/documents.parquet"
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val current = new java.util.concurrent.atomic.AtomicReference(Set.empty[Int])
+    val liveInAdvance = new java.util.concurrent.atomic.AtomicBoolean()
+    val failB = new java.util.concurrent.atomic.AtomicBoolean()
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    def shared(docs: DataFrame, ctx: AdvanceCtx): DataFrame =
+      ctx.memo("shared") {
+        builds.incrementAndGet()
+        val p = ctx.pin(docs.select("doc_id"))
+        current.set(p.queryExecution.analyzed.collect {
+          case l: LogicalRDD => l.rdd.id
+        }.toSet)
+        current.get.foreach(pinned.add)
+        p
+      }
+    // both pieces read the memo; the second checks the pin is still
+    // live mid-advance, then throws on demand
+    def h = IncrementalDocArtifact(corpus, "scratch",
+      Seq(Piece("a", (docs, ctx) => shared(docs, ctx)),
+        Piece("b", (docs, ctx) => {
+          val p = shared(docs, ctx)
+          liveInAdvance.set(current.get.forall(persisted))
+          if (failB.get) throw new IllegalStateException("piece b failed")
+          p
+        })), compactEvery = 0)
+
+    Seq((1L, "one"), (2L, "two")).toDF("doc_id", "text")
+      .coalesce(1).write.parquet(corpus)
+    h.serve(spark, "b").count() shouldBe 2 // rebuild
+    builds.get shouldBe 1
+    pinned.size should be > 0
+    liveInAdvance.get shouldBe true
+    pinned.asScala.filter(persisted) shouldBe empty
+
+    Seq((3L, "three")).toDF("doc_id", "text")
+      .coalesce(1).write.mode("append").parquet(corpus)
+    liveInAdvance.set(false)
+    h.serve(spark, "b").count() shouldBe 3 // append advance
+    builds.get shouldBe 2
+    liveInAdvance.get shouldBe true
+    pinned.asScala.filter(persisted) shouldBe empty
+
+    Seq((4L, "four")).toDF("doc_id", "text")
+      .coalesce(1).write.mode("append").parquet(corpus)
+    failB.set(true)
+    liveInAdvance.set(false)
+    val e = intercept[IllegalStateException](h.serve(spark, "b").count())
+    e.getMessage shouldBe "piece b failed"
+    builds.get shouldBe 3
+    liveInAdvance.get shouldBe true
+    pinned.asScala.filter(persisted) shouldBe empty
+
+    // the failed advance committed nothing: the next one replays it
+    failB.set(false)
+    h.serve(spark, "b").count() shouldBe 4
+    builds.get shouldBe 4
+    pinned.asScala.filter(persisted) shouldBe empty
     deleteTree(Paths.get(sf))
   }
 }

@@ -54,7 +54,7 @@ class IncrementalMaintenanceStressSpec extends SparkSpec {
               greatest(col("mx"), coalesce(col("mx0"), lit(Long.MinValue)))
                 .as("mx"))
         })),
-      compactEvery = 2, lazyMerges = lazyMerges, onAdvanceDone = _ => ())
+      compactEvery = 2, lazyMerges = lazyMerges)
 
   private def checkAll(corpus: String, lazyMerges: Boolean,
       expected: Seq[(Long, String)]): Unit = {

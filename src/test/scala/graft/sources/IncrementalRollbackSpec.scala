@@ -191,7 +191,7 @@ class IncrementalRollbackSpec extends SparkSpec {
             .select(col("grp"), greatest(col("mx"),
               coalesce(col("mx0"), lit(Long.MinValue))).as("mx"))
         })),
-      compactEvery = 0, lazyMerges = true, onAdvanceDone = _ => ())
+      compactEvery = 0, lazyMerges = true)
     Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
       .coalesce(1).write.parquet(corpus)
     lazyHandle.serve(spark, "gmax").as[(Long, Long)].collect().toMap shouldBe

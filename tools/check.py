@@ -6,8 +6,11 @@ Usage: python3 tools/check.py [sfDir] [verifyOutDir] [name-filter]
 Reads each SparkEntry query's parquet dump (written by graft.Verify)
 and the corresponding oracle SQL from oracle_sql.json, runs the oracle
 in DuckDB over the same source tables, sorts columns by name and rows
-by all columns, and compares values exactly. Dev tool only — the
-shipped Scala library has no Python dependency.
+by all columns, and compares values exactly. Every name with an output
+dir or an oracle counts: an oracle whose query left no output (it
+threw; Verify deletes each output dir before running the query) is a
+FAIL. Dev tool only — the shipped Scala library has no Python
+dependency.
 """
 import duckdb, json, sys, glob, os
 import pandas as pd
@@ -22,7 +25,8 @@ for p in glob.glob(f"{sf}/*.parquet"):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
-declared = sorted(d for d in os.listdir(out) if os.path.isdir(f"{out}/{d}"))
+declared = sorted({d for d in os.listdir(out) if os.path.isdir(f"{out}/{d}")}
+                  | set(oracle))
 fails = []
 
 for name in declared:
@@ -30,6 +34,10 @@ for name in declared:
         continue
     if name not in oracle:
         print(f"SKIP {name}: no oracle (rows-only check)")
+        continue
+    if not os.path.isdir(f"{out}/{name}"):
+        print(f"FAIL {name}: no output (the query failed)")
+        fails.append(name)
         continue
     try:
         sdf = con.execute(f"SELECT * FROM '{out}/{name}/*.parquet'").fetchdf()
@@ -71,5 +79,6 @@ for name in declared:
     else:
         print(f"PASS {name} ({len(sdf)} rows)")
 
-print(f"\n{len(declared) - len(fails)}/{len([d for d in declared if not only or only in d])} pass")
+checked = [d for d in declared if not only or only in d]
+print(f"\n{len(checked) - len(fails)}/{len(checked)} pass")
 sys.exit(1 if fails else 0)
