@@ -60,15 +60,18 @@ object Bench {
     // one pass, and a fast-failing pass can never mask a slow success.
     // Pass 2 re-plans from scratch — only JIT and the OS page cache
     // are warm, which is the steady state a long-running cluster job
-    // sees anyway. All passes failed => sentinel -1.
+    // sees anyway. All passes failed => sentinel -1 in the per-query
+    // map, the error class of its last failure in `failed`, and no
+    // share of the total.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
     val results = names.map { name =>
       val times = (1 to math.max(passes, 1)).flatMap { _ =>
         val t0 = System.nanoTime()
-        val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
-        if (ok) Some((System.nanoTime() - t0) / 1e9) else None
+        try { SparkEntry.queries(name)(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable => failed(name) = e.getClass.getName; None }
       }
+      if (times.nonEmpty) failed -= name
       name -> (if (times.nonEmpty) times.min else -1.0)
     }
     // Streaming throughput block: micro-batch rows/s for the two
@@ -89,7 +92,7 @@ object Bench {
       else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = results.map { case (k, v) => "\"" + k + "\":" + ms3(v) }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val total = results.map(_._2).filter(_ >= 0).sum
     // "sf" numeric (parsed from the dir name) so the JSON matches the
     // driver contract's `"sf":N`; the raw dir rides along separately.
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir)
@@ -101,7 +104,11 @@ object Bench {
     // with no parsed bench. LAST line is therefore a compact summary
     // that always survives tail capture on its own (the streaming
     // block is ~100 bytes, small enough to ride along).
-    println(s"""{"metric":"total","value":${ms3(total)},"unit":"sec","sf":$sfNum,"queries_run":${results.size}$streamJson}""")
+    // failed queries by name and error class ride on the last line;
+    // the first 12 keep it under 1.8 kB, queries_failed counts all
+    val failedJson = failed.take(12)
+      .map { case (n, e) => "\"" + n + "\":\"" + e + "\"" }.mkString("{", ",", "}")
+    println(s"""{"metric":"total","value":${ms3(total)},"unit":"sec","sf":$sfNum,"queries_run":${results.size - failed.size},"queries_failed":${failed.size},"failed":$failedJson$streamJson}""")
     spark.stop()
   }
 

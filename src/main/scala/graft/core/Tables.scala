@@ -3,6 +3,8 @@ package graft.core
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.ImmutableParquet
+
 /** Uniform access to the driver-provided parquet tables
   * (`/root/testdata/sf*`; see TESTDATA.md). At cluster scale the same
   * interface fronts a catalog table or connector-backed source — the
@@ -10,38 +12,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
 
-  /** PLAN cache for the immutable driver-provided tables: one
-    * `spark.read.parquet` resolution (file listing + footer schema
-    * read) per (session, path) instead of one per query function call
-    * — measured 91 ms of pure driver time per call at sf0.1, paid
-    * hundreds of times across a bench run (r16; guide §6 names the
-    * file-listing cache as the knob for catalog tables — path reads
-    * get none, this is its moral equivalent). NO results are cached:
-    * the value is an unexecuted logical plan; every action still
-    * scans parquet. Keyed on the exact session because child sessions
-    * carry scoped confs (nanosAsLong) that change how the file reads.
-    * The testdata tables are immutable for the life of a process by
-    * the driver contract, which is what makes the cached listing
-    * sound.
+  /** The driver-provided tables are immutable for the life of a
+    * process by the driver contract, so they read through
+    * [[graft.sources.ImmutableParquet]]: the footer schema is inferred
+    * once per file, and the resolved plan (file listing + schema,
+    * measured 91 ms of pure driver time per call at sf0.1) is kept
+    * per (session, file) instead of re-resolved per query function
+    * call. NO results are cached: the value is an unexecuted logical
+    * plan; every action still scans parquet. Child sessions carry
+    * scoped confs (nanosAsLong) that change how the file reads, so
+    * their plans sit under their own key (`#nanos`).
     *
-    * SHARED SESSIONS ONLY: keys hold strong references to their
-    * SparkSession (and the '#nanos' entries to the scoped child
-    * session their plan carries), so entries live for the process.
-    * That is the intended shape for the process-long sessions every
-    * entry point (Bench/Verify/PlanDump, the test harness) uses; a
-    * caller spinning up short-lived child sessions must not route
-    * them through [[load]]/[[cachedRead]] or each one is pinned for
-    * process lifetime (r16 advisory).
+    * SHARED SESSIONS ONLY: plan keys hold strong references to their
+    * SparkSession, so entries live for the process (or until the file
+    * is deleted through `ParquetTableIO.deleteTree`). That is the
+    * intended shape for the process-long sessions every entry point
+    * (Bench/Verify/PlanDump, the test harness) uses; a caller spinning
+    * up short-lived child sessions must not route them through
+    * [[load]] or each one is pinned for process lifetime.
     */
-  private val planCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private[graft] def cachedRead(spark: SparkSession, path: String): DataFrame =
-    planCache.computeIfAbsent((spark, path),
-      _ => spark.read.parquet(path))
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    cachedRead(spark, s"$sfDir/$name.parquet")
+    ImmutableParquet.cached(spark, s"$sfDir/$name.parquet")
 
   /** `events` with normalized time columns, adaptive to the generator's
     * `ts` physical type (it has shipped both TIMESTAMP(NANOS) and
@@ -89,26 +80,24 @@ object Tables {
   def readMaybeNanos(spark: SparkSession, path: String): DataFrame = {
     // negative-cache the nanos determination: once a path has resolved
     // as nanos, the plain read below would re-run (and re-fail) the
-    // footer read + exception-chain walk on EVERY call — only the
-    // fallback's second read was cached before (r16 advisory)
-    val nanosHit = planCache.get((spark, path + "#nanos"))
-    if (nanosHit != null) return nanosHit
-    try cachedRead(spark, path)
-    catch {
-      // the nanos rejection surfaces as AnalysisException from a
-      // driver-side footer read, or wrapped in a SparkException when
-      // schema inference ran as a job — walk the cause chain
-      case e: Throwable if {
-        Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
-          .flatMap(t => Option(t.getMessage))
-          .exists(m => m.contains("PARQUET_TYPE_ILLEGAL") && m.contains("NANOS"))
-      } =>
-        // cache the nanos fallback under the PARENT session's key (a
-        // fresh scoped child session per call would defeat the cache
-        // and leak sessions); the '#nanos' suffix cannot collide with
-        // a real path key because paths never carry the fragment
-        planCache.computeIfAbsent((spark, path + "#nanos"),
-          _ => eventsSession(spark).read.parquet(path))
+    // footer read + exception-chain walk on EVERY call
+    val nanosKey = ImmutableParquet.key(path) + "#nanos"
+    Option(ImmutableParquet.plans.get((spark, nanosKey))).getOrElse {
+      try ImmutableParquet.cached(spark, path)
+      catch {
+        // the nanos rejection surfaces as AnalysisException from a
+        // driver-side footer read, or wrapped in a SparkException when
+        // schema inference ran as a job — walk the cause chain
+        case e: Throwable if {
+          Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
+            .flatMap(t => Option(t.getMessage))
+            .exists(m => m.contains("PARQUET_TYPE_ILLEGAL") && m.contains("NANOS"))
+        } =>
+          // cached under the PARENT session's key (a fresh scoped child
+          // session per call would defeat the cache and leak sessions)
+          ImmutableParquet.cachedAs(spark, nanosKey)(
+            eventsSession(spark).read.parquet(path))
+      }
     }
   }
 

@@ -107,11 +107,13 @@ final class Pin private[operators] () {
     * iterative loops' emptiness probe used to be a second job on top
     * of the eager pin): lazily mark, then count — count touches every
     * partition, so the truncation-safety condition of [[pinLazy]]
-    * holds by construction.
+    * holds by construction. The rows are counted on the pinned RDD
+    * itself: `Dataset.count` plans an aggregate, a second job under
+    * AQE.
     */
   def pinCount(df: DataFrame, stream: String): (DataFrame, Long) = {
     val pinned = pinLazy(df, stream)
-    (pinned, pinned.count())
+    (pinned, pinned.queryExecution.toRdd.count())
   }
 
   /** End-of-loop cleanup for knob-on mode: reliably checkpoint the

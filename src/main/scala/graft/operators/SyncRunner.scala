@@ -189,7 +189,7 @@ object SyncRunner {
     * thread-local, so `cancelJobGroup` and listener attribution keep
     * covering the work; it also runs with the caller's session active.
     */
-  private def concurrently[T](spark: SparkSession,
+  private[graft] def concurrently[T](spark: SparkSession,
       thunks: Seq[() => T]): Seq[Try[T]] = {
     val out = new Array[Try[T]](thunks.size)
     val next = new AtomicInteger()

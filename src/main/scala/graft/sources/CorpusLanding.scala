@@ -84,7 +84,8 @@ object CorpusLanding {
     Files.createDirectories(corpus)
     val staging = Paths.get(corpusDir + "_staging", s"b$batchId")
     deleteTree(staging) // stale debris from a crashed attempt
-    rows.repartition(parts, col(hashCol))
+    // one part needs no hash exchange: every row goes to part 0
+    (if (parts == 1) rows.coalesce(1) else rows.repartition(parts, col(hashCol)))
       .write.mode("overwrite").parquet(staging.toString)
     // deterministic names by SPARK part index (parsed from the task's
     // own part-NNNNN prefix — empty partitions write no file, and the
@@ -130,10 +131,15 @@ object CorpusLanding {
           "value would silently lose or double rows; retry with the " +
           "original parts")
     }
+    // a landed file's schema is the batch's: recorded under the file's
+    // (path, size, mtime) identity, so the advance that reads it next
+    // runs no footer-inference job
     targets.take(keepParts).foreach { case (f, name) =>
       val target = corpus.resolve(name)
-      if (!Files.exists(target))
+      if (!Files.exists(target)) {
         Files.move(f, target, StandardCopyOption.ATOMIC_MOVE)
+        ImmutableParquet.record(target.toString, rows.schema)
+      }
     }
     deleteTree(staging)
   }

@@ -712,7 +712,10 @@ object IncrementalDocArtifact {
         Files.createDirectories(retiredDir(piece))
         val dst = retiredDir(piece).resolve("_gen=" + g)
         if (Files.exists(dst)) deleteTree(src)
-        else Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
+        else {
+          Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
+          ImmutableParquet.evictUnder(src)
+        }
       } else deleteTree(src)
     }
 
@@ -905,15 +908,15 @@ object IncrementalDocArtifact {
         .filterNot(g => exclude.contains(g.stripPrefix("_gen=")))
 
     /** Union scan of exactly `gens` (path-level: absorbed directories
-      * are never even listed).
+      * are never even listed; the schemas [[writeDelta]] recorded mean
+      * no footer-inference job).
       */
     private def deltaOfGens(spark: SparkSession, piece: String,
         gens: Seq[String]): Option[DataFrame] =
       if (gens.isEmpty) None
-      else Some(spark.read
-        .option("basePath", deltaDir(piece).toString)
-        .parquet(gens.map(g => deltaDir(piece).resolve(g).toString): _*)
-        .drop("_gen"))
+      else Some(ImmutableParquet.read(spark,
+        gens.map(g => deltaDir(piece).resolve(g).toString),
+        basePath = Some(deltaDir(piece).toString)).drop("_gen"))
 
     /** Additive piece view: base ∪ the given delta gens. */
     private def readPieceGens(spark: SparkSession, piece: String,
@@ -984,12 +987,15 @@ object IncrementalDocArtifact {
         }
     }
 
-    private def writeDelta(df: DataFrame, piece: String, gen: String): Unit =
-      df.withColumn("_gen", lit(gen))
-        .write.mode("overwrite")
+    private def writeDelta(df: DataFrame, piece: String, gen: String): Unit = {
+      val out = df.withColumn("_gen", lit(gen))
+      out.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("_gen")
         .parquet(deltaDir(piece).toString)
+      ImmutableParquet.record(deltaDir(piece).resolve("_gen=" + gen).toString,
+        out.drop("_gen").schema)
+    }
 
     // -----------------------------------------------------------------
     // Serve-path reconcile cache: a hot artifact (the composed screen
@@ -1108,7 +1114,7 @@ object IncrementalDocArtifact {
             val corpusRoot = Paths.get(corpusPath)
             val newFiles = newEntries.map(e =>
               corpusRoot.resolve(e.split('|').head).toString)
-            val newDocs = spark.read.parquet(newFiles: _*)
+            val newDocs = ImmutableParquet.read(spark, newFiles)
             val gen = genId(newEntries)
             // seq = covered-file count before this increment: strictly
             // increasing across appends, deterministic under replay
@@ -1131,8 +1137,11 @@ object IncrementalDocArtifact {
               else
                 merges.foreach(mp => writeDelta(
                   mp.advance(ctx).withColumn("_seq", lit(seq)), mp.name, gen))
-              pieces.filterNot(_.pinned)
-                .foreach(p => writeDelta(p.build(newDocs, ctx), p.name, gen))
+              // additive pieces read only newDocs and the pre-increment
+              // views, never each other's new gen: their writes overlap
+              // (a per-batch advance is latency-bound small jobs)
+              graft.operators.SyncRunner.concurrently(spark, pieces.filterNot(_.pinned)
+                .map(p => () => writeDelta(p.build(newDocs, ctx), p.name, gen))).foreach(_.get)
             } finally ctx.release()
             // refresh #pieces to what actually materialized: an EMPTY
             // delta writes no partition dir (partitionBy writes
@@ -1443,7 +1452,7 @@ object IncrementalDocArtifact {
           val corpusRoot = Paths.get(corpusPath)
           val newFiles = pending.map(e =>
             corpusRoot.resolve(e.split('|').head).toString)
-          val newDocs = spark.read.parquet(newFiles: _*)
+          val newDocs = ImmutableParquet.read(spark, newFiles)
           val seq = coveredSet.size.toLong
           // views pinned to the SNAPSHOT's committed cut (st), not the
           // live ledger: gens committed concurrently with this staging
@@ -1558,6 +1567,7 @@ object IncrementalDocArtifact {
             folded: Seq[String]): (() => Unit, () => Unit) = {
           val staged = io.stage()
           df.write.mode("overwrite").parquet(staged.vDir.toString)
+          ImmutableParquet.record(staged.vDir.toString, df.schema)
           Files.writeString(staged.vDir.resolve("_folded_gens"),
             folded.mkString("\n"))
           (() => io.commitStaged(staged), () => io.abortStaged(staged))
@@ -1719,10 +1729,10 @@ object IncrementalDocArtifact {
         else if (Files.exists(retD)) retD
         else gone(s"generation $g")
       }
-      val baseDf = baseDir.map(d => spark.read.parquet(d.toString))
+      val baseDf = baseDir.map(d => ImmutableParquet.read(spark, Seq(d.toString)))
       val deltaDf =
         if (genDirs.isEmpty) None
-        else Some(genDirs.map(d => spark.read.parquet(d.toString))
+        else Some(genDirs.map(d => ImmutableParquet.read(spark, Seq(d.toString)))
           .reduce(_.unionByName(_)).drop("_gen"))
       merges.find(_.name == piece) match {
         case Some(mp) =>
@@ -1841,6 +1851,12 @@ object IncrementalDocArtifact {
     def serve(spark: SparkSession, piece: String): DataFrame =
       serveWithFoldState(spark, piece)._1
 
+    /** Reconcile only: advance over new corpus entries (and queue the
+      * detached fold when due) without building any piece's read plan
+      * — the door for a caller that only needs the artifact current.
+      */
+    def advance(spark: SparkSession): Unit = { reconcile(spark); () }
+
     /** This artifact's storage directory under the global store root
       * — the address an operator (or a bench teardown) needs to
       * inspect or drop the artifact without reconstructing the
@@ -1876,7 +1892,7 @@ object IncrementalDocArtifact {
         if (stamp.mutCount == counter.get()) stamp.liveGens(piece)
         else liveGens(piece, Set.empty, committedOf(readLedger()))
       val base = baseIO(piece)
-      val baseHalf = base.currentDir.map(d => (d, spark.read.parquet(d)))
+      val baseHalf = base.currentDir.map(d => (d, ImmutableParquet.cached(spark, d)))
       if (baseHalf.isEmpty && gens.isEmpty)
         throw new IllegalStateException(s"no $piece artifact for $corpusPath")
       (baseHalf, deltaOfGens(spark, piece, gens))

@@ -136,19 +136,15 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
       throw new IllegalStateException(s"no published snapshot at $path"))
     // Versioned snapshot dirs are IMMUTABLE by the commit protocol (a
     // fold/overwrite publishes a NEW v-<n>-<uid> dir and swaps the
-    // pointer; nothing ever rewrites a published dir in place), so the
-    // resolved plan — file listing + footer schema, ~80-90 ms of
-    // driver time per spark.read.parquet at bench scale (r16) — is
-    // cacheable per (session, dir). The pointer is still re-read on
-    // EVERY call, so a new snapshot is picked up immediately (its dir
-    // is a different cache key). The adopted plain layout (dir ==
-    // path) is not versioned and stays uncached. No results are
-    // cached: the value is an unexecuted plan. The key is the dir's
-    // normalized location, so a store opened through another spelling
-    // of its path shares the entry and its eviction.
+    // pointer; nothing ever rewrites a published dir in place), so
+    // they read through ImmutableParquet: the schema [[prepare]]
+    // recorded (no footer-inference job) and one resolved plan per
+    // (session, dir). The pointer is still re-read on EVERY call, so a
+    // new snapshot is picked up immediately (its dir is a different
+    // key). The adopted plain layout (dir == path) is not versioned
+    // and reads plainly.
     if (dir == path) spark.read.parquet(dir)
-    else ParquetTableIO.planCache.computeIfAbsent((spark, TableIO.key(dir)),
-      _ => spark.read.parquet(dir))
+    else ImmutableParquet.cached(spark, dir)
   }
 
   /** A staged (not yet published) snapshot version: a per-writer
@@ -193,10 +189,8 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
           System.err.println(s"graft table cleanup: skipping foreign " +
             s"version-less entry $f (not a v-<n> snapshot)")
         else if (n.startsWith("v-") && versionOf(n) < s.prev &&
-            !keepVersionDir(n)) {
+            !keepVersionDir(n))
           ParquetTableIO.deleteTree(f)
-          ParquetTableIO.evictPlans(f.toString)
-        }
         else if (s.prev >= 1 && !Files.isDirectory(f) && n != "_current")
           Files.deleteIfExists(f)
       } finally ls.close()
@@ -208,9 +202,11 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
 
   override def prepare(df: DataFrame): TableIO.Prepared = {
     val staged = stage()
-    val w = derive(df).write.mode(SaveMode.Overwrite)
+    val out = derive(df)
+    val w = out.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(staged.vDir.toString)
+    ImmutableParquet.record(staged.vDir.toString, out.schema, partitionBy)
     new TableIO.Prepared {
       override def commit(): Unit = commitStaged(staged)
       override def abort(): Unit = abortStaged(staged)
@@ -254,30 +250,16 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
 object ParquetTableIO {
 
   /** Delete `dir` and everything under it, children first; a missing
-    * dir is a no-op. THE recursive delete of the engine's file layouts.
+    * dir is a no-op. THE recursive delete of the engine's file layouts;
+    * it also forgets every [[ImmutableParquet]] key under `dir`.
     */
-  def deleteTree(dir: Path): Unit =
+  def deleteTree(dir: Path): Unit = {
     if (Files.exists(dir)) {
       val s = Files.walk(dir)
       try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
       finally s.close()
     }
-
-  /** Plan cache for immutable versioned snapshot dirs — see
-    * [[ParquetTableIO.read]]. Entries are unexecuted DataFrame plans
-    * (a few KB each). Dirs retired by commit cleanup are EVICTED by
-    * the deleter (commitStaged knows the dir names), so the live
-    * population is bounded by live artifacts × pieces per process —
-    * without eviction a one-publish-per-tick process would retain one
-    * stale plan + file index per version ever read (r16 advisory).
-    */
-  private[sources] val planCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), org.apache.spark.sql.DataFrame]()
-
-  /** Drop every session's cached plan for a retired snapshot dir. */
-  private[sources] def evictPlans(dir: String): Unit = {
-    val k = TableIO.key(dir)
-    planCache.keySet.removeIf(_._2 == k)
+    ImmutableParquet.evictUnder(dir)
   }
 
   /** Version number of a "v-<n>[-uid]" snapshot dir name — THE parser

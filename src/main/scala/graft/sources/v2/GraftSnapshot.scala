@@ -16,7 +16,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.ParquetTableIO
+import graft.sources.{ImmutableParquet, ParquetTableIO}
 
 /** DataSource V2 connector for the engine's versioned snapshot store
   * (`ParquetTableIO` layout: immutable `v-<n>-<uid>/` dirs + a tiny
@@ -127,8 +127,14 @@ final class GraftSnapshotDataSource extends TableProvider
       SparkSession.active, delegateOptions(options),
       Seq(resolveDir(options)), schema, classOf[ParquetFileFormat])
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    delegate(options, None).schema
+  // snapshot dirs are immutable: the schema their writer recorded, or
+  // one inference per dir (ImmutableParquet) — no footer job per load.
+  // An adopted plain dir (dir == store path) is not, and infers per load
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val dir = resolveDir(options)
+    if (dir == storePath(options)) delegate(options, None).schema
+    else ImmutableParquet.read(SparkSession.active, Seq(dir)).schema
+  }
 
   override def inferPartitioning(options: CaseInsensitiveStringMap): Array[Transform] =
     delegate(options, None).partitioning()
@@ -205,6 +211,7 @@ final class GraftSnapshotTable(path: String, parquet: ParquetTable,
               // readers either see the complete old or complete new
               // snapshot, never a mix
               files.commit(messages)
+              ImmutableParquet.record(staged.vDir.toString, info.schema())
               io.commitStaged(staged)
             }
             override def abort(messages: Array[WriterCommitMessage]): Unit =

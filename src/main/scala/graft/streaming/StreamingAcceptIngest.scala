@@ -50,10 +50,16 @@ import graft.sources.IncrementalDocArtifact.Piece
   *  - `digests` (doc id, fp, _ib), fold-clustered BY FINGERPRINT:
   *    only the screen's maybe-hits (true duplicates + ~fpp of the
   *    uniques) pay the exact residue anti-join, and their fps go in
-  *    as a capped In predicate — row-group pruning on the
-  *    fp-clustered layout instead of a full-table join build. Past
-  *    the cap the residue degrades to the plain anti-join (the
-  *    engine's capped-gate discipline).
+  *    as a capped In predicate, so the join's build side holds only
+  *    the maybe-hits' digest rows instead of the whole table. The
+  *    In prunes row groups of the fp-clustered layout only while it
+  *    lists at most `spark.sql.parquet.pushdown.inFilterThreshold`
+  *    (10) fps; above that Spark pushes just the list's min and max,
+  *    which on hashed fps span almost every row group, so a batch
+  *    with thousands of maybe-hits reads every digest row (the scan
+  *    is O(accepted) even though the join is not). Past the cap the
+  *    residue degrades to the plain anti-join (the engine's
+  *    capped-gate discipline).
   *
   * Per batch: (1) in-batch first-wins dedup (min id per fingerprint
   * — the [[graft.dedup.ExactDedup]] convention, deterministic under
@@ -446,7 +452,8 @@ object StreamingAcceptIngest {
     Seq(
       Piece("digests", (docs, _) =>
         docs.select(col(idCol), col("fp"), col("_ib")),
-        // cluster by fp: the capped-In residue probe prunes row groups
+        // cluster by fp: a short capped-In residue probe prunes row
+        // groups (only up to inFilterThreshold fps — class doc)
         fold = Some(_.repartition(col("fp"))
           .sortWithinPartitions("fp", "_ib"))),
       Piece("bloomparts", (docs, ctx) => {
@@ -534,21 +541,19 @@ object StreamingAcceptIngest {
         case None => (null, 0L, false, 0L, BloomCache.cachedBytes)
       }
     // the unfolded tail's SIZE decides how it is probed, BEFORE any
-    // collect pays for it: one tiny aggregate over the (row-count ≤
-    // slices × live-generations) delta frame. The same pass asserts
-    // the no-filter-rows-in-delta invariant the collect used to check
-    // row by row.
+    // collect pays for it: per-row list sizes of the (row-count ≤
+    // slices × live-generations) delta frame in one job, summed on the
+    // driver (an aggregate is two jobs under AQE). The same pass
+    // asserts the no-filter-rows-in-delta invariant the collect used
+    // to check row by row.
     val tailCount: Long = deltaHalf match {
       case Some(d) =>
-        val agg = d.agg(
-          coalesce(sum(size(col("hs"))), lit(0L)).as("n"),
-          sum(when(col("bf").isNotNull, 1L).otherwise(0L)).as("badbf"))
-          .collect()(0)
-        require(agg.isNullAt(1) || agg.getLong(1) == 0L,
+        val rows = d.select(size(col("hs")), col("bf").isNotNull).collect()
+        require(!rows.exists(_.getBoolean(1)),
           "bloomparts delta holds a filter row — generations emit raw " +
             "hashes; a filter in delta means the artifact was written " +
             "by incompatible code")
-        agg.getLong(0)
+        rows.iterator.filterNot(_.isNullAt(0)).map(_.getInt(0).max(0).toLong).sum
       case None => 0L
     }
     val distributedTail = tailCount > recentCollectMax
@@ -576,8 +581,10 @@ object StreamingAcceptIngest {
         lit(true))
     // ONE evaluation of the probe (and ONE embedding of the filter
     // literals in a serialized plan): the probed frame is pinned and
-    // both branches read the precomputed flag
-    val probed =
+    // both branches read the precomputed flag. The pin is LAZY: its
+    // first consumer is the full-scan `fps` distinct below, which
+    // materializes it inside a job that runs anyway
+    val probed = Pin.lazily(
       if (distributedTail) {
         // the tail is too large to collect at all (a stalled
         // maintenance plane or a backfill burst between folds —
@@ -591,10 +598,10 @@ object StreamingAcceptIngest {
         h.compactDetached(spark)
         val deltaHashes = deltaHalf.get
           .select(explode(col("hs")).as("_h64t")).distinct()
-        Pin(inBatch.withColumn("_h64", h64)
+        inBatch.withColumn("_h64", h64)
           .join(deltaHashes, col("_h64") === col("_h64t"), "left_outer")
           .withColumn("_might", sliceProbe || col("_h64t").isNotNull)
-          .drop("_h64", "_h64t"))
+          .drop("_h64", "_h64t")
       } else {
         val might =
           if (baseSlices == 0L && recent.isEmpty)
@@ -624,8 +631,8 @@ object StreamingAcceptIngest {
               }
             sliceProbe || recentProbe
           }
-        Pin(inBatch.withColumn("_might", might))
-      }
+        inBatch.withColumn("_might", might)
+      })
     val definitelyNew = probed.filter(!col("_might")).drop("_might")
     val maybe = probed.filter(col("_might")).drop("_might")
     // the replay anchor: strictly-earlier batches only (class doc)
@@ -635,10 +642,11 @@ object StreamingAcceptIngest {
       .limit(cap + 1).collect().map(_.getString(0))
     val seenSide =
       (if (fps.length <= cap)
-        // capped-In probe: row-group pruning on the fp-clustered
-        // fold layout — the residue never pays a full join build
+        // capped-In probe: the residue never pays a full join build;
+        // row groups prune only up to inFilterThreshold (10) fps —
+        // past it the scan reads every digest row (class doc)
         seen.where(col("fp").isInCollection(fps.toSeq))
-      else seen).select("fp").distinct()
+      else seen).select("fp")
     AcceptStats.record(h.artifactDir,
       sums = Map("sum_ticks" -> 1L,
         "sum_residue_fallbacks" -> (if (fps.length > cap) 1L else 0L),
@@ -822,18 +830,18 @@ object StreamingAcceptIngest {
           spark, inBatch, batchId, expectedItems)
       else inBatch
     // pinned: the emptiness check and the landing must read ONE
-    // evaluation of the screen (not re-run the probe + residue join)
-    val survivors = Pin(fresh.withColumn("_ib", lit(batchId)))
+    // evaluation of the screen (not re-run the probe + residue join);
+    // the count that checks emptiness is the job that materializes it
+    val (survivors, n) =
+      Pin.loop().pinCount(fresh.withColumn("_ib", lit(batchId)), "")
     // survivors can be empty (an all-duplicate batch): nothing lands,
     // nothing advances — the replay of such a batch is trivially
     // idempotent (same screen, same empty survivor set)
-    if (!survivors.isEmpty) {
+    if (n > 0) {
       CorpusLanding.land(survivors, batchId, corpus, hashCol = "fp",
         parts = parts)
       // tick: advance the screen artifact over the landed generation
-      digestHandle(corpus, idCol, textCol, expectedItems)
-        .serve(spark, "digests")
-      ()
+      digestHandle(corpus, idCol, textCol, expectedItems).advance(spark)
     }
   }
 
@@ -1073,9 +1081,8 @@ object StreamingAcceptIngest {
           parts = parts)
       }
       traced(h.artifactDir, "advance") {
-        h.serve(spark, "digests")
+        h.advance(spark)
       }
-      ()
     }
   }
 

@@ -203,7 +203,7 @@ class TableIOSpec extends SparkSpec {
     io.overwrite(Seq((1, "v3")).toDF("id", "v"))
     // v-1 is now deleted by commit cleanup; a long-running one-publish-
     // per-tick process must not retain one stale plan per version read
-    ParquetTableIO.planCache.keySet.stream()
+    ImmutableParquet.plans.keySet.stream()
       .anyMatch(k => k._2 == v1Dir) shouldBe false
     io.read(spark).select("v").as[String].collect() shouldBe Array("v3")
   }
@@ -220,12 +220,12 @@ class TableIOSpec extends SparkSpec {
     io.read(spark).count() // cached through the normalized path...
     alias.read(spark).count() // ...and through the alias: one entry
     val v1Dir = TableIO.key(io.currentDir.get)
-    ParquetTableIO.planCache.keySet.stream()
+    ImmutableParquet.plans.keySet.stream()
       .filter(k => TableIO.key(k._2) == v1Dir).count() shouldBe 1
     // two commits through the alias retire v-1
     alias.overwrite(Seq((1, "v2")).toDF("id", "v"))
     alias.overwrite(Seq((1, "v3")).toDF("id", "v"))
-    ParquetTableIO.planCache.keySet.stream()
+    ImmutableParquet.plans.keySet.stream()
       .anyMatch(k => TableIO.key(k._2) == v1Dir) shouldBe false
     io.read(spark).select("v").as[String].collect() shouldBe Array("v3")
   }

@@ -313,60 +313,6 @@ class StatefulLwwSpec extends SparkSpec {
   }
 }
 
-class StreamJoinSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("interval join matches clicks to impressions within the window only") {
-    implicit val sql = spark.sqlContext
-    val imps = MemoryStream[(Long, java.sql.Timestamp)]
-    val clicks = MemoryStream[(Long, java.sql.Timestamp)]
-    def ts(s: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 00:00:$s%02d")
-
-    val joined = StreamJoin.interval(
-      clicks.toDF().toDF("ad_id", "click_ts"), "click_ts",
-      imps.toDF().toDF("ad_id", "imp_ts"), "imp_ts",
-      keys = Seq("ad_id"), watermarkDelay = "20 seconds", maxDelay = "5 seconds")
-      .select(col("l.ad_id"), col("click_ts"), col("imp_ts"))
-
-    val q = joined.writeStream.format("memory").queryName("sj").outputMode("append").start()
-    try {
-      imps.addData((1L, ts(0)), (2L, ts(0)), (3L, ts(10)))
-      clicks.addData(
-        (1L, ts(3)), // within 5s of imp 1 -> match
-        (2L, ts(9)), // 9s after imp 2 -> outside window
-        (3L, ts(8)), // BEFORE imp 3 -> no match (click precedes impression)
-        (3L, ts(12))) // 2s after imp 3 -> match
-      q.processAllAvailable()
-      spark.table("sj").select("ad_id").as[Long].collect().sorted shouldBe
-        Array(1L, 3L)
-    } finally q.stop()
-  }
-
-  test("state is keyed and watermark-bounded: plan carries both constraints") {
-    implicit val sql = spark.sqlContext
-    val imps = MemoryStream[(Long, java.sql.Timestamp)]
-    val clicks = MemoryStream[(Long, java.sql.Timestamp)]
-    val joined = StreamJoin.interval(
-      clicks.toDF().toDF("ad_id", "click_ts"), "click_ts",
-      imps.toDF().toDF("ad_id", "imp_ts"), "imp_ts",
-      keys = Seq("ad_id"), watermarkDelay = "20 seconds", maxDelay = "5 seconds")
-    val q = joined.writeStream.format("memory").queryName("sj2").outputMode("append").start()
-    try {
-      imps.addData((1L, java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
-      q.processAllAvailable()
-      q.lastProgress.sources.length shouldBe 2 // both streams registered
-      val out = new java.io.ByteArrayOutputStream()
-      Console.withOut(new java.io.PrintStream(out))(q.explain())
-      val plan = out.toString
-      // symmetric hash join with watermark-driven state cleanup on both
-      // sides: the shape that keeps state bounded at scale
-      plan should include("StreamingSymmetricHashJoin")
-      plan should include("EventTimeWatermark")
-      plan should include("state cleanup") // watermark-derived eviction bounds
-    } finally q.stop()
-  }
-}
-
 class StreamEnrichSpec extends SparkSpec {
   import spark.implicits._
 
