@@ -96,7 +96,7 @@ object Daemon {
       reports.foreach { r =>
         val status = r.error.map(e => s"FAILED: $e").getOrElse("ok")
         System.err.println(s"[daemon] ${r.spec}: $status " +
-          r.legs.map(l => s"${l.name}=${l.rows}").mkString(" "))
+          r.legs.map(l => s"${l.name}=${l.rows} (${l.conflicts} conflicts)").mkString(" "))
       }
       n += 1
       if (maxTicks.forall(n < _))

@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.{LegReport, SyncSpec, Watermark}
@@ -21,10 +20,13 @@ import graft.sources.TableIO
   *      version column when `filterDate` (S2, :205-212), drop rows
   *      that originated at the destination (anti-echo S4, :386-399);
   *   3. LWW-merge each leg's incoming rows into the destination
-  *      snapshot; ties keep the incumbent (ES external-version rule,
-  *      :340-341). Conflict losers simply don't appear in the next
-  *      snapshot — the declarative form of the reference's 409-parse +
-  *      DELETE (:508-582);
+  *      store; ties keep the incumbent (ES external-version rule,
+  *      :340-341). Over a window the leg stages only the rows that
+  *      win, as one delta the store resolves on read; otherwise it
+  *      stages the full merge as a new base ([[TableIO.pin]]).
+  *      Conflict losers simply don't appear in the next version — the
+  *      declarative form of the reference's 409-parse + DELETE
+  *      (:508-582) — and are counted as the leg's `conflicts`;
   *   4. stage BOTH outputs concurrently, then commit both
   *      concurrently, then commit the watermark — and only on success,
   *      fixing the reference's write-even-on-error gap (:138). Each
@@ -37,12 +39,17 @@ import graft.sources.TableIO
   * specs, form one group that runs one after another in config order,
   * so a hub store (A↔H, H↔B) never loses an update.
   *
-  * Scale: each leg is one shuffle on the id columns (the LWW hash
-  * aggregate with map-side combine); the window filter is a pushed
-  * predicate; with a date-partitioned TableIO layout it becomes
-  * partition pruning. Nothing is collected to the driver. A tick's
-  * jobs are small (AQE folds each leg to a task or two), so running
-  * independent legs and specs side by side is what fills the cores.
+  * Scale: the window filter is a pushed predicate; with a
+  * date-partitioned TableIO layout it becomes partition pruning. A
+  * windowed leg probes the destination with the window's ids
+  * (broadcast), ranks only the window and the destination rows it hits
+  * (no shuffle at all when both stores fit one read task), then writes
+  * only the winners — a tick writes O(window), not O(store). A leg
+  * that folds (no window, or too many deltas) is one shuffle of the
+  * whole destination (the LWW aggregate with map-side combine) and a
+  * full rewrite. Nothing is collected to the driver. A tick's jobs are
+  * small, so running independent legs and specs side by side is what
+  * fills the cores.
   */
 object SyncRunner {
 
@@ -65,41 +72,37 @@ object SyncRunner {
       span: Option[Watermark.Span],
       collectStats: Boolean = true): RunReport = {
     val t0 = System.nanoTime()
-    val (l0, r0) = (sides.left.read(spark), sides.right.read(spark))
+    val (pl, pr) = (sides.left.pin(spark), sides.right.pin(spark))
     // 1. additive schema evolution, both directions
-    val (l, r, _) = SchemaTools.alignBoth(l0, r0)
-    val ids = Seq(spec.idCol)
+    val (l, r, _) = SchemaTools.alignBoth(pl.df, pr.df)
+    val windowed = span.isDefined && spec.filterDate
 
     def incoming(src: DataFrame, destSourceId: Option[String]): DataFrame = {
-      val windowed = span match {
+      val in = span match {
         case Some(s) if spec.filterDate =>
           IncrementalScan(src, spec.versionCol, s, dayCol = spec.dayCol)
         case _ => src
       }
       destSourceId.filter(_ => spec.ignoreSameSource) match {
-        case Some(sid) => AntiEcho(windowed, spec.sourceCol, sid)
-        case None => windowed
+        case Some(sid) => AntiEcho(in, spec.sourceCol, sid)
+        case None => in
       }
     }
 
-    // 2+3. legs: L→R and R→L, each one LWW hash-aggregate. Leg row
-    // counts ride the write pass as CollectMetrics observations
+    // 2+3. legs: L→R and R→L, each one LWW aggregate. Leg row and
+    // conflict counts ride the write pass as CollectMetrics observations
     // (A2 counters, reference pyCassElastic.py:262-314) — no extra
     // count() jobs re-executing the lineage.
-    val (obsL, obsR) =
-      (org.apache.spark.sql.Observation(s"${spec.name}-inL"),
-        org.apache.spark.sql.Observation(s"${spec.name}-inR"))
-    val inL = incoming(l, spec.right.sourceId) // rows moving left → right
-      .observe(obsL, count(lit(1)).as("rows"))
-    val inR = incoming(r, spec.left.sourceId) // rows moving right → left
-      .observe(obsR, count(lit(1)).as("rows"))
-    val newR = LwwMerge.merge(dest = r, incoming = inL, ids, spec.versionCol)
-    val newL = LwwMerge.merge(dest = l, incoming = inR, ids, spec.versionCol)
+    val (toR, toL) = (new LwwMerge.Counts(s"${spec.name}-inL"),
+      new LwwMerge.Counts(s"${spec.name}-inR"))
+    def leg(p: TableIO.Pinned, dest: DataFrame, in: DataFrame, c: LwwMerge.Counts) =
+      () => p.upsert(dest, in, TableIO.Upsert(Seq(spec.idCol), spec.versionCol, windowed, c))
 
     // 4. stage both before committing either: each output is computed
     // from both stores' OLD snapshots, so the two stages run together.
-    val staged = concurrently(spark,
-      Seq(() => sides.right.prepare(newR), () => sides.left.prepare(newL)))
+    val staged = concurrently(spark, Seq(
+      leg(pr, r, incoming(l, spec.right.sourceId), toR), // rows moving left → right
+      leg(pl, l, incoming(r, spec.left.sourceId), toL))) // rows moving right → left
     staged.collectFirst { case Failure(e) => e }.foreach { e =>
       staged.foreach(_.foreach(_.abort()))
       throw e
@@ -107,15 +110,12 @@ object SyncRunner {
     concurrently(spark, staged.map(p => () => p.get.commit())).foreach(_.get)
 
     // the staging writes were the observed actions; metrics are ready
-    val stats =
-      if (collectStats)
-        Seq(obsL.get("rows").asInstanceOf[Long], obsR.get("rows").asInstanceOf[Long])
-      else Seq(-1L, -1L)
-
     val ms = (System.nanoTime() - t0) / 1000000
+    def report(name: String, c: LwwMerge.Counts) =
+      if (collectStats) LegReport(name, c.rows, c.conflicts, ms)
+      else LegReport(name, -1L, -1L, ms)
     RunReport(spec.name, Seq(
-      LegReport(s"${spec.name}:L->R", stats.head, -1L, ms),
-      LegReport(s"${spec.name}:R->L", stats(1), -1L, ms)))
+      report(s"${spec.name}:L->R", toR), report(s"${spec.name}:R->L", toL)))
   }
 
   /** Per-spec watermark file: `<wmPath>.<spec name>` (sanitized). */

@@ -3,6 +3,9 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
@@ -37,6 +40,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 object ImmutableParquet {
 
   private val schemas = new ConcurrentHashMap[String, StructType]()
+  private val rowCounts = new ConcurrentHashMap[String, java.lang.Long]()
   private[graft] val plans = new ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   /** Identity of a location: normalized path, plus `#size@mtime` for
@@ -87,12 +91,31 @@ object ImmutableParquet {
   def cachedAs(spark: SparkSession, k: String)(build: => DataFrame): DataFrame =
     plans.computeIfAbsent((spark, k), _ => build)
 
-  /** Forget every schema and resolved frame at or under `tree`. */
+  /** Rows in the parquet files at or under `location`, summed from
+    * their footers on the driver (no Spark job); once per location.
+    */
+  def rows(spark: SparkSession, location: String): Long =
+    rowCounts.computeIfAbsent(key(location), _ => {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val s = Files.walk(Paths.get(location))
+      val files =
+        try s.toArray.toSeq.map(_.asInstanceOf[Path])
+          .filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet"))
+        finally s.close()
+      java.lang.Long.valueOf(files.map { f =>
+        val r = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new HPath(f.toUri), conf))
+        try r.getRecordCount finally r.close()
+      }.sum)
+    })
+
+  /** Forget every schema, row count and resolved frame at or under `tree`. */
   def evictUnder(tree: Path): Unit = {
     val t = tree.toAbsolutePath.normalize.toString
     def under(k: String) =
       k == t || k.startsWith(t + "/") || k.startsWith(t + "#")
     schemas.keySet.removeIf(under(_))
+    rowCounts.keySet.removeIf(under(_))
     plans.keySet.removeIf(k => under(k._2))
   }
 

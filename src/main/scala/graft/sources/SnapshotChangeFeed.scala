@@ -86,7 +86,7 @@ final class SnapshotChangeFeed(storePath: String, cursorDir: String,
     val cur = io.currentVersion
     if (cur == last) None
     else {
-      if (io.versionDir(last).isEmpty)
+      if (io.versionManifest(last).isEmpty)
         throw new IllegalStateException(
           s"change feed fell behind: version $last of $storePath was " +
             "cleaned up (retention keeps current + previous only) — " +

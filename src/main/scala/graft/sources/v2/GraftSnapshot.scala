@@ -5,22 +5,26 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.ScanBuilder
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.sources
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, TableScan}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.operators.SchemaTools
 import graft.sources.{ImmutableParquet, ParquetTableIO}
 
 /** DataSource V2 connector for the engine's versioned snapshot store
   * (`ParquetTableIO` layout: immutable `v-<n>-<uid>/` dirs + a tiny
-  * `_current` pointer) — the Spark-native form of the connector seam
+  * `_current` manifest of one base and its deltas) — the Spark-native form of the connector seam
   * the reference fills with live Cassandra / Elasticsearch drivers
   * (pyCassElastic.py:172-186; this sandbox has no connector jars, so
   * the store IS the storage tier, SURVEY §7.1).
@@ -34,23 +38,29 @@ import graft.sources.{ImmutableParquet, ParquetTableIO}
   * }}}
   *
   * Design, Spark-first:
-  *  - the scan DELEGATES to Spark's own DSv2 [[ParquetTable]] over the
-  *    resolved snapshot dir — predicate pushdown, column pruning,
-  *    partition pruning and the vectorized reader are the stock
-  *    parquet path, not re-implemented;
-  *  - the pointer is resolved ONCE per provider instance, so a
-  *    DataFrame is pinned to the snapshot that was live when it was
+  *  - a version with no deltas DELEGATES its scan to Spark's own DSv2
+  *    [[ParquetTable]] over the base dir — predicate pushdown, column
+  *    pruning, partition pruning and the vectorized reader are the
+  *    stock parquet path, not re-implemented;
+  *  - a version with deltas reads the store's merge-on-read frame
+  *    (`ParquetTableIO.resolve`) through a `V1Scan`, the fallback
+  *    Spark's own JDBC v2 connector uses: the scan takes the pushed
+  *    filters and pruned columns into that frame, so they still reach
+  *    every dir's parquet scan, and Spark re-checks every filter;
+  *  - the manifest is resolved ONCE per provider instance, so a
+  *    DataFrame is pinned to the version that was live when it was
   *    defined — a concurrent `commit` never changes (or half-changes)
   *    what an already-built plan reads, which is exactly the
-  *    snapshot-isolation guarantee the pointer layout exists for;
-  *  - `mode("overwrite")` stages a fresh version dir, hands it to
+  *    snapshot-isolation guarantee the manifest layout exists for;
+  *  - `mode("overwrite")` stages a fresh base dir, hands it to
   *    parquet's own `BatchWrite` (task commits, job commit, abort
-  *    cleanup all stock), and publishes the pointer only AFTER the
+  *    cleanup all stock), and publishes the manifest only AFTER the
   *    file-level job commit succeeds — a failed write leaves the
   *    store on the old version with no partial state;
-  *  - `mode("append")` is refused: the store's contract is
-  *    whole-snapshot replace (append-shaped maintenance goes through
-  *    the engine's merge operators, e.g. `LwwMerge` → overwrite).
+  *  - `mode("append")` is refused: a caller replaces the whole
+  *    snapshot (append-shaped maintenance goes through the engine's
+  *    merge operators — `LwwMerge` → overwrite, or a sync leg's delta
+  *    through `ParquetTableIO`).
   *
   * Bootstrap note: the FIRST snapshot must exist before the format can
   * infer a schema — create it with `ParquetTableIO.overwrite` (or
@@ -77,10 +87,10 @@ final class GraftSnapshotDataSource extends TableProvider
 
   override def shortName(): String = GraftSnapshotDataSource.Name
 
-  // one resolution per provider instance = one snapshot per
+  // one resolution per provider instance = one version per
   // DataFrameReader.load() — inferSchema/inferPartitioning/getTable
-  // all see the same pinned dir even if a commit lands between calls
-  @volatile private var pinned: Option[(String, String)] = None
+  // all see the same pinned manifest even if a commit lands between calls
+  @volatile private var pinned: Option[(String, ParquetTableIO.Manifest)] = None
 
   private def storePath(options: CaseInsensitiveStringMap): String = {
     val raw = Option(options.get("path")).getOrElse(throw new IllegalArgumentException(
@@ -92,25 +102,32 @@ final class GraftSnapshotDataSource extends TableProvider
     else raw
   }
 
-  private def resolveDir(options: CaseInsensitiveStringMap): String = {
+  private def resolveManifest(options: CaseInsensitiveStringMap): ParquetTableIO.Manifest = {
     val path = storePath(options)
     pinned match {
-      case Some((p, dir)) if p == path => dir
+      case Some((p, m)) if p == path => m
       case _ =>
         val io = new ParquetTableIO(path)
-        val dir = Option(options.get("version")) match {
+        val m = Option(options.get("version")) match {
           case Some(v) =>
-            io.versionDir(v.toLong).getOrElse(throw new IllegalArgumentException(
+            io.versionManifest(v.toLong).getOrElse(throw new IllegalArgumentException(
               s"graft-snapshot: version $v not present at $path (only the " +
                 "current and previous versions survive commit cleanup)"))
           case None =>
-            io.currentDir.getOrElse(throw new IllegalStateException(
+            io.currentManifest.getOrElse(throw new IllegalStateException(
               s"graft-snapshot: no published snapshot at $path — bootstrap " +
                 "the store with ParquetTableIO.overwrite first"))
         }
-        pinned = Some((path, dir))
-        dir
+        pinned = Some((path, m))
+        m
     }
+  }
+
+  /** The pinned version's merge-on-read frame, when it has deltas. */
+  private def resolved(options: CaseInsensitiveStringMap): Option[DataFrame] = {
+    val m = resolveManifest(options)
+    if (m.deltas.isEmpty) None
+    else Some(new ParquetTableIO(storePath(options)).resolve(SparkSession.active, m))
   }
 
   // the delegate gets the user's options minus the keys this provider
@@ -125,15 +142,17 @@ final class GraftSnapshotDataSource extends TableProvider
       schema: Option[StructType]): ParquetTable =
     ParquetTable(s"graft-snapshot `${storePath(options)}`",
       SparkSession.active, delegateOptions(options),
-      Seq(resolveDir(options)), schema, classOf[ParquetFileFormat])
+      Seq(resolveManifest(options).base), schema, classOf[ParquetFileFormat])
 
-  // snapshot dirs are immutable: the schema their writer recorded, or
+  // published dirs are immutable: the schema their writer recorded, or
   // one inference per dir (ImmutableParquet) — no footer job per load.
   // An adopted plain dir (dir == store path) is not, and infers per load
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val dir = resolveDir(options)
-    if (dir == storePath(options)) delegate(options, None).schema
-    else ImmutableParquet.read(SparkSession.active, Seq(dir)).schema
+    val base = resolveManifest(options).base
+    resolved(options).map(_.schema).getOrElse {
+      if (base == storePath(options)) delegate(options, None).schema
+      else ImmutableParquet.read(SparkSession.active, Seq(base)).schema
+    }
   }
 
   override def inferPartitioning(options: CaseInsensitiveStringMap): Array[Transform] =
@@ -143,7 +162,9 @@ final class GraftSnapshotDataSource extends TableProvider
       properties: util.Map[String, String]): Table = {
     val options = new CaseInsensitiveStringMap(properties)
     new GraftSnapshotTable(storePath(options),
-      delegate(options, Option(schema)), options)
+      delegate(options, Option(schema)), options,
+      resolved(options).map(df => if (schema == null || df.schema == schema) df
+        else SchemaTools.align(df, schema)))
   }
 
   override def supportsExternalMetadata(): Boolean = true
@@ -158,16 +179,17 @@ object GraftSnapshotDataSource {
   val Name = "graft-snapshot"
 }
 
-/** The resolved table: reads delegate wholesale to the pinned-version
-  * [[ParquetTable]]; overwrites stage a new version and publish it
-  * with the store's atomic pointer commit.
+/** The resolved table: reads delegate wholesale to the pinned base's
+  * [[ParquetTable]], or scan the pinned version's merge-on-read frame
+  * (`resolved`) when it has deltas; overwrites stage a new base and
+  * publish it with the store's atomic manifest commit.
   */
 final class GraftSnapshotTable(path: String, parquet: ParquetTable,
-    options: CaseInsensitiveStringMap)
+    options: CaseInsensitiveStringMap, resolved: Option[DataFrame] = None)
     extends Table with SupportsRead with SupportsWrite {
 
   override def name(): String = s"graft-snapshot `$path`"
-  override def schema(): StructType = parquet.schema
+  override def schema(): StructType = resolved.fold(parquet.schema)(_.schema)
   override def partitioning(): Array[Transform] = parquet.partitioning()
   override def properties(): util.Map[String, String] =
     options.asCaseSensitiveMap()
@@ -177,7 +199,8 @@ final class GraftSnapshotTable(path: String, parquet: ParquetTable,
       TableCapability.TRUNCATE)
 
   override def newScanBuilder(caseInsensitiveStringMap: CaseInsensitiveStringMap): ScanBuilder =
-    parquet.newScanBuilder(caseInsensitiveStringMap)
+    resolved.fold[ScanBuilder](parquet.newScanBuilder(caseInsensitiveStringMap))(
+      new ResolvedScan(_))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate {
@@ -207,9 +230,9 @@ final class GraftSnapshotTable(path: String, parquet: ParquetTable,
             override def useCommitCoordinator: Boolean =
               files.useCommitCoordinator
             override def commit(messages: Array[WriterCommitMessage]): Unit = {
-              // pointer flips only after every data file is committed:
-              // readers either see the complete old or complete new
-              // snapshot, never a mix
+              // the manifest flips only after every data file is
+              // committed: readers either see the complete old or
+              // complete new version, never a mix
               files.commit(messages)
               ImmutableParquet.record(staged.vDir.toString, info.schema())
               io.commitStaged(staged)
@@ -221,4 +244,60 @@ final class GraftSnapshotTable(path: String, parquet: ParquetTable,
         }
       }
     }
+}
+
+/** Scan of a merge-on-read frame as a `V1Scan`: filters and columns
+  * are applied inside the frame (so they reach each dir's parquet
+  * scan); every filter is also handed back for Spark to re-check, so
+  * one this scan cannot translate is still exact. The relation hands
+  * Spark the frame's internal rows (`needConversion = false`).
+  */
+private final class ResolvedScan(df: DataFrame) extends ScanBuilder
+    with SupportsPushDownFilters with SupportsPushDownRequiredColumns with V1Scan {
+  private var pushed = Array.empty[sources.Filter]
+  private var required = df.schema
+
+  override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
+    pushed = filters.filter(ResolvedScan.column(_).isDefined)
+    filters
+  }
+  override def pushedFilters(): Array[sources.Filter] = pushed
+  override def pruneColumns(s: StructType): Unit =
+    required = StructType(s.fieldNames.map(df.schema(_)))
+  override def build(): Scan = this
+  override def readSchema(): StructType = required
+
+  override def toV1TableScan[T <: BaseRelation with TableScan](ctx: SQLContext): T = {
+    val out = pushed.flatMap(ResolvedScan.column).foldLeft(df)(_ filter _)
+      .select(required.fieldNames.map(n => df.col(s"`$n`")): _*)
+    new BaseRelation with TableScan {
+      override def sqlContext: SQLContext = ctx
+      override def schema: StructType = required
+      override def needConversion: Boolean = false
+      override def buildScan(): RDD[Row] =
+        out.queryExecution.toRdd.asInstanceOf[RDD[Row]]
+    }.asInstanceOf[T]
+  }
+}
+
+private object ResolvedScan {
+  /** A data-source filter as a Column, when it has a direct form. */
+  def column(f: sources.Filter): Option[Column] = f match {
+    case sources.EqualTo(a, v) => Some(col(a) === lit(v))
+    case sources.EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
+    case sources.GreaterThan(a, v) => Some(col(a) > lit(v))
+    case sources.GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
+    case sources.LessThan(a, v) => Some(col(a) < lit(v))
+    case sources.LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
+    case sources.In(a, vs) => Some(col(a).isin(vs.toIndexedSeq: _*))
+    case sources.IsNull(a) => Some(col(a).isNull)
+    case sources.IsNotNull(a) => Some(col(a).isNotNull)
+    case sources.StringStartsWith(a, v) => Some(col(a).startsWith(v))
+    case sources.StringEndsWith(a, v) => Some(col(a).endsWith(v))
+    case sources.StringContains(a, v) => Some(col(a).contains(v))
+    case sources.And(l, r) => for (x <- column(l); y <- column(r)) yield x && y
+    case sources.Or(l, r) => for (x <- column(l); y <- column(r)) yield x || y
+    case sources.Not(c) => column(c).map(!_)
+    case _ => None
+  }
 }
