@@ -23,8 +23,4 @@ object GraftQuery {
   def apply(name: String, oracle: String)(
       run: (SparkSession, String) => DataFrame): GraftQuery =
     GraftQuery(name, run, Some(oracle))
-
-  def noOracle(name: String)(
-      run: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, run, None)
 }

@@ -3085,12 +3085,8 @@ object RelationalQueries {
     val bytes = growingLeaves.map { t =>
       val p = java.nio.file.Paths.get(s"$dir/$t.parquet")
       if (!java.nio.file.Files.exists(p)) Long.MaxValue
-      else {
-        val st = java.nio.file.Files.walk(p)
-        try st.filter(f => java.nio.file.Files.isRegularFile(f))
-          .mapToLong(f => java.nio.file.Files.size(f)).sum
-        finally st.close()
-      }
+      else graft.sources.Fs.walk(p).filter(java.nio.file.Files.isRegularFile(_))
+        .map(java.nio.file.Files.size(_)).sum
     }.sum
     if (thr > 0 && bytes >= 0 && bytes <= thr) broadcast(df) else df
   }

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, LocalDateTime, ZoneOffset}
 
@@ -43,13 +43,8 @@ object Watermark {
     if (Files.exists(p)) Some(decode(Files.readString(p))) else None
   }
 
-  def write(path: String, epochMillis: Long): Unit = {
-    val p = Paths.get(path).toAbsolutePath
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.writeString(tmp, encode(epochMillis))
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  def write(path: String, epochMillis: Long): Unit =
+    graft.sources.Fs.replace(Paths.get(path), encode(epochMillis))
 
   /** New window ending now (minute-truncated), starting at the persisted
     * watermark. Reference computes the same pair at pyCassElastic.py:156-163.

@@ -18,10 +18,15 @@ import org.apache.spark.sql.internal.SQLConf
   * Two physical forms, same semantics:
   *
   *  - `latestAgg` — `groupBy(id).agg(max_by(struct(*), orderKey))`.
-  *    Hash aggregate with MAP-SIDE PARTIAL aggregation: each input
-  *    partition reduces to one candidate row per key before the
-  *    shuffle, so bytes shuffled ≈ |distinct keys|, not |rows|. This is
-  *    the 100 TB-scale default.
+  *    A SORT aggregate (`max_by` keeps a struct in its aggregation
+  *    buffer, which Spark's hash aggregate cannot hold): each input
+  *    partition is sorted by key and reduced to one candidate row per
+  *    key (`partial_max_by`) before the shuffle, so bytes shuffled ≈
+  *    |distinct keys per partition|, not |rows|; after the shuffle a
+  *    second sort feeds the final aggregate. Every input row is sorted
+  *    once. [[merge]] and [[winners]] rank through the same aggregate
+  *    (`winners` in one task has no shuffle: one sort, then the partial
+  *    and final aggregates). This is the 100 TB-scale default.
   *  - `latestWindow` — `row_number` over (partitionBy id, orderBy
   *    version desc). Shuffles EVERY row then sorts per partition;
   *    kept because it also yields losers (rank > 1) for conflictSplit,
@@ -33,7 +38,7 @@ object LwwMerge {
   private def orderKey(versionCol: String, tieBreak: Seq[Column]): Column =
     struct((col(versionCol) +: tieBreak): _*)
 
-  /** Keep the newest row per key — aggregate form (map-side combine). */
+  /** Keep the newest row per key — aggregate form (sort aggregate with map-side partials). */
   def latestAgg(
       df: DataFrame,
       idCols: Seq[String],

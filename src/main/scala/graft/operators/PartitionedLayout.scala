@@ -1,10 +1,10 @@
 package graft.operators
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.ArtifactStore
+import graft.sources.{ArtifactStore, Fs}
 import graft.sources.ParquetTableIO.deleteTree
 
 /** Directory-partitioned (hive-style) table layout — the scan-time
@@ -124,13 +124,7 @@ object PartitionedLayout {
     */
   private def ensureHistoryCopy(table: String, m: Manifest): Unit = {
     val p = historyPath(table, m.version)
-    if (!Files.exists(p)) {
-      Files.createDirectories(historyDir(table))
-      val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-      Files.writeString(tmp, render(m))
-      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
+    if (!Files.exists(p)) Fs.replace(p, render(m))
   }
 
   /** Atomic-rename manifest commit — THE commit point of every layout
@@ -139,14 +133,10 @@ object PartitionedLayout {
     * on both sides of the rename.
     */
   private def writeManifest(table: String, m: Manifest): Unit = {
-    Files.createDirectories(Paths.get(loc(table)))
     val prior = readManifest(table)
     prior.foreach(ensureHistoryCopy(table, _)) // heal a crashed copy
     val vm = m.copy(version = prior.map(_.version + 1).getOrElse(1L))
-    val tmp = manifestPath(table).resolveSibling("_manifest.tmp")
-    Files.writeString(tmp, render(vm))
-    Files.move(tmp, manifestPath(table), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Fs.replace(manifestPath(table), render(vm))
     ensureHistoryCopy(table, vm)
   }
 
@@ -158,12 +148,9 @@ object PartitionedLayout {
     * retracted gen's files where a raised [[retainVersions]] still
     * serves them to time travelers.
     */
-  private def genId(newEntries: Seq[String], baseVersion: Long): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    md.update(java.nio.ByteBuffer.allocate(8).putLong(baseVersion).array())
-    newEntries.sorted.foreach(e => md.update(e.getBytes("UTF-8")))
-    md.digest().take(8).map(b => f"$b%02x").mkString
-  }
+  private[graft] def genId(newEntries: Seq[String], baseVersion: Long): String =
+    Fs.digest(java.nio.ByteBuffer.allocate(8).putLong(baseVersion).array(),
+      newEntries.sorted)
 
   /** How many trailing versions' DATA files the GC passes must keep
     * servable, live included (`graft.layout.retainVersions`, default
@@ -269,27 +256,21 @@ object PartitionedLayout {
       .write.mode("overwrite").partitionBy(partCol)
       .parquet(staging.toString)
     // move staged part-files to deterministic names in the live root
+    // (the names are free: the replay sweep above deleted every g<gen>- file)
     val moved = scala.collection.mutable.ArrayBuffer[String]()
-    val dirs = Files.list(staging)
-    try dirs.forEach { d =>
+    Fs.list(staging).foreach { d =>
       val dn = d.getFileName.toString
       if (Files.isDirectory(d) && dn.contains("=")) {
         val tgt = dataRoot.resolve(dn)
         Files.createDirectories(tgt)
-        val fs = Files.list(d)
-        val parts =
-          try fs.toArray.toSeq.map(_.asInstanceOf[Path])
-            .filter(f => f.getFileName.toString.endsWith(".parquet"))
-            .sortBy(_.getFileName.toString)
-          finally fs.close()
-        parts.zipWithIndex.foreach { case (f, i) =>
-          val name = f"g$gen-$i%05d.parquet"
-          Files.move(f, tgt.resolve(name),
-            StandardCopyOption.REPLACE_EXISTING)
-          moved += s"$dn/$name"
-        }
+        Fs.list(d).filter(_.getFileName.toString.endsWith(".parquet"))
+          .sortBy(_.getFileName.toString).zipWithIndex.foreach { case (f, i) =>
+            val name = f"g$gen-$i%05d.parquet"
+            Files.move(f, tgt.resolve(name))
+            moved += s"$dn/$name"
+          }
       }
-    } finally dirs.close()
+    }
     deleteTree(staging)
     writeManifest(table, Manifest(m.dataRoot, m.files ++ moved, current,
       m.genEntries + (gen -> newEntries)))
@@ -340,14 +321,9 @@ object PartitionedLayout {
     derive(spark.read.parquet(sourcePath))
       .write.mode("overwrite").partitionBy(partCol)
       .parquet(dataRoot.toString)
-    val files = {
-      val s = Files.walk(dataRoot)
-      try s.filter(f => Files.isRegularFile(f) &&
-          f.getFileName.toString.endsWith(".parquet"))
-        .toArray.toSeq.map(_.asInstanceOf[Path])
-        .map(f => dataRoot.relativize(f).toString)
-      finally s.close()
-    }
+    val files = Fs.walk(dataRoot)
+      .filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet"))
+      .map(f => dataRoot.relativize(f).toString)
     writeManifest(table, Manifest(newRoot, files, current))
     // the superseded root is invisible the instant the rename lands —
     // but an in-flight reader that resolved the OLD manifest may still
@@ -357,16 +333,11 @@ object PartitionedLayout {
     // retainVersions) still serves it to time travelers
     val keep = Set(newRoot) ++ old ++
       retainedManifests(table).map(_.dataRoot)
-    val tableRoot = Paths.get(loc(table))
-    if (Files.exists(tableRoot)) {
-      val s = Files.list(tableRoot)
-      try s.toArray.toSeq.map(_.asInstanceOf[Path])
-        .filter(d => Files.isDirectory(d) &&
-          d.getFileName.toString.startsWith("data-") &&
-          !keep(d.getFileName.toString))
-        .foreach(deleteTree)
-      finally s.close()
-    }
+    Fs.list(Paths.get(loc(table)))
+      .filter(d => Files.isDirectory(d) &&
+        d.getFileName.toString.startsWith("data-") &&
+        !keep(d.getFileName.toString))
+      .foreach(deleteTree)
   }
 
   /** GC every orphaned `_staging_*` directory of `table` — the debris
@@ -380,26 +351,17 @@ object PartitionedLayout {
     * process is either; the lease-free serve path never sweeps, so it
     * can never delete what a foreign writer is staging.
     */
-  private def sweepStaging(table: String): Unit = {
-    val tableRoot = Paths.get(loc(table))
-    if (Files.exists(tableRoot)) {
-      val s = Files.list(tableRoot)
-      try s.toArray.toSeq.map(_.asInstanceOf[Path])
-        .filter(d => Files.isDirectory(d) &&
-          d.getFileName.toString.startsWith("_staging_"))
-        .foreach(deleteTree)
-      finally s.close()
-    }
-  }
+  private def sweepStaging(table: String): Unit =
+    Fs.list(Paths.get(loc(table)))
+      .filter(d => Files.isDirectory(d) &&
+        d.getFileName.toString.startsWith("_staging_"))
+      .foreach(deleteTree)
 
   private def sweepGen(dataRoot: Path, gen: String): Unit =
-    if (Files.exists(dataRoot)) {
-      val s = Files.walk(dataRoot)
-      try s.filter(f => Files.isRegularFile(f) &&
-          f.getFileName.toString.startsWith(s"g$gen-"))
-        .toArray.toSeq.map(_.asInstanceOf[Path]).foreach(Files.delete)
-      finally s.close()
-    }
+    Fs.walk(dataRoot)
+      .filter(f => Files.isRegularFile(f) &&
+        f.getFileName.toString.startsWith(s"g$gen-"))
+      .foreach(Files.delete)
 
   /** Read a layout back — EXACTLY the committed manifest's files (an
     * orphan from a crashed writer is never listed, so it is never
@@ -433,16 +395,9 @@ object PartitionedLayout {
     * may not still exist; readVersion checks that at serve time).
     */
   def versions(table: String): Seq[Long] = {
-    val hist =
-      if (!Files.exists(historyDir(table))) Seq.empty[Long]
-      else {
-        val s = Files.list(historyDir(table))
-        try s.toArray.toSeq.map(_.asInstanceOf[Path])
-          .map(_.getFileName.toString)
-          .filter(_.matches("v\\d+")) // stray/tmp files are not versions
-          .map(_.stripPrefix("v").toLong)
-        finally s.close()
-      }
+    val hist = Fs.list(historyDir(table)).map(_.getFileName.toString)
+      .filter(_.matches("v\\d+")) // stray/tmp files are not versions
+      .map(_.stripPrefix("v").toLong)
     (hist ++ readManifest(table).map(_.version)).distinct.sorted
   }
 
@@ -513,35 +468,23 @@ object PartitionedLayout {
         val keptByRoot = kept.groupBy(_.dataRoot)
           .map { case (r, ms) => r -> ms.flatMap(_.files).toSet }
         var deleted = 0
-        val tableRoot = Paths.get(loc(table))
-        if (Files.exists(tableRoot)) {
-          val s = Files.list(tableRoot)
-          val roots =
-            try s.toArray.toSeq.map(_.asInstanceOf[Path])
-              .filter(d => Files.isDirectory(d) &&
-                d.getFileName.toString.startsWith("data-"))
-            finally s.close()
-          roots.foreach { d =>
+        Fs.list(Paths.get(loc(table)))
+          .filter(d => Files.isDirectory(d) &&
+            d.getFileName.toString.startsWith("data-"))
+          .foreach { d =>
             val name = d.getFileName.toString
             if (!keptRoots(name)) {
-              val w = Files.walk(d)
-              val n =
-                try w.filter(Files.isRegularFile(_)).count().toInt
-                finally w.close()
-              deleteTree(d); deleted += n
+              deleted += Fs.walk(d).count(Files.isRegularFile(_))
+              deleteTree(d)
             } else {
               val referenced = keptByRoot(name)
-              val w = Files.walk(d)
-              val victims =
-                try w.filter(f => Files.isRegularFile(f) &&
-                    f.getFileName.toString.endsWith(".parquet"))
-                  .toArray.toSeq.map(_.asInstanceOf[Path])
-                  .filterNot(f => referenced(d.relativize(f).toString))
-                finally w.close()
+              val victims = Fs.walk(d)
+                .filter(f => Files.isRegularFile(f) &&
+                  f.getFileName.toString.endsWith(".parquet"))
+                .filterNot(f => referenced(d.relativize(f).toString))
               victims.foreach(Files.delete); deleted += victims.size
             }
           }
-        }
         deleted
       }
     }

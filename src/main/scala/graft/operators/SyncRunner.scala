@@ -46,10 +46,11 @@ import graft.sources.TableIO
   * (no shuffle at all when both stores fit one read task), then writes
   * only the winners — a tick writes O(window), not O(store). A leg
   * that folds (no window, or too many deltas) is one shuffle of the
-  * whole destination (the LWW aggregate with map-side combine) and a
-  * full rewrite. Nothing is collected to the driver. A tick's jobs are
-  * small, so running independent legs and specs side by side is what
-  * fills the cores.
+  * whole destination (the LWW sort aggregate: each partition sorted
+  * and reduced per id before the shuffle, sorted and reduced again
+  * after it) and a full rewrite. Nothing is collected to the driver.
+  * A tick's jobs are small, so running independent legs and specs side
+  * by side is what fills the cores.
   */
 object SyncRunner {
 

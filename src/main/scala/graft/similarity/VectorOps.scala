@@ -26,13 +26,6 @@ object VectorOps {
   /** Cosine similarity; callers pass `asDouble`-prepared columns. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Dot against a CONSTANT plane (literal array baked into the plan —
-    * broadcast-free, codegen'd).
-    */
-  def dotConst(plane: Seq[Double], emb: Column): Column =
-    aggregate(zip_with(typedlit(plane), emb, (x, y) => x * y),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Native codegen'd forms (graft.plans.VectorExpressions) — bit-
     * identical to the HOF forms above but a primitive loop instead of
     * per-element lambda dispatch, and single-pass for cosine. They

@@ -56,14 +56,6 @@ object CountMin {
       .filter(m => m.contains(DepthKey) && m.contains(WidthKey))
       .map(m => (m.getLong(DepthKey).toInt, m.getLong(WidthKey).toInt))
 
-  /** Cell index of `item` under hash row `d`. */
-  def cellOf(item: Column, d: Int, width: Int): Column = {
-    val (a, b, c) = MinHashLSH.hashParams(d)
-    ((lit(a) * MinHashLSH.baseHash(item) % MinHashLSH.P
-      + lit(b) * MinHashLSH.baseHash2(item) % MinHashLSH.P
-      + lit(c)) % MinHashLSH.P) % width
-  }
-
   /** One md5 per ITEM, not per (item, depth, base): the digest is the
     * dominant per-row cost (measured 7.7 s → expected ~2 s over 16 M
     * tokens at 20×), so the hex text materializes once and every

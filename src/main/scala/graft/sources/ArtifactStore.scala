@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 /** Keying discipline for persisted derived artifacts (postings
   * indexes, trained codebooks): every artifact lives under a key that
@@ -29,24 +29,17 @@ object ArtifactStore {
   def entries(tablePath: String): Seq[String] = {
     val p = Paths.get(tablePath)
     require(Files.exists(p), s"no source table at $tablePath")
-    val s = Files.walk(p)
-    try s.filter(f => Files.isRegularFile(f)).toArray.toSeq
-      .map(_.asInstanceOf[Path])
+    Fs.walk(p).filter(Files.isRegularFile(_))
       .map(f => s"${p.relativize(f)}|${Files.size(f)}|" +
         Files.getLastModifiedTime(f).toMillis)
       .sorted
-    finally s.close()
   }
 
   /** Content fingerprint of a source table path (file or directory):
     * 16 hex chars over the sorted (relative path, size, mtime-millis)
     * file entries.
     */
-  def fingerprint(tablePath: String): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    entries(tablePath).foreach(e => md.update(e.getBytes("UTF-8")))
-    md.digest().take(8).map(b => f"$b%02x").mkString
-  }
+  def fingerprint(tablePath: String): String = Fs.digest(entries(tablePath))
 
   /** Sanitized store key segment for a table path WITHOUT the content
     * fingerprint — the root for artifacts that version their content
@@ -84,14 +77,5 @@ object ArtifactStore {
       coalesce(bxor(xxhash64(df.columns.map(col): _*)), lit(0L)).as("x"),
       count(lit(1)).as("n")).first()
     f"${r.getLong(0)}%016x-${r.getLong(1)}%x"
-  }
-
-  /** [[io]] with the exact content-hash key instead of the filesystem
-    * fingerprint — same layout, `_ch<hash>` key segment.
-    */
-  def ioContentKeyed(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, piece: String): ParquetTableIO = {
-    val key = pathKey(tablePath) + "_ch" + contentFingerprint(spark, tablePath)
-    new ParquetTableIO(s"$root/$key/$piece")
   }
 }

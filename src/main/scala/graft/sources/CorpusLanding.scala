@@ -58,14 +58,8 @@ object CorpusLanding {
         "mount them) before ingesting")
 
   /** Whether `corpusDir` holds any landed parquet yet. */
-  def hasData(corpusDir: String): Boolean = {
-    val p = Paths.get(corpusDir)
-    Files.exists(p) && {
-      val s = Files.list(p)
-      try s.anyMatch(f => f.getFileName.toString.endsWith(".parquet"))
-      finally s.close()
-    }
-  }
+  def hasData(corpusDir: String): Boolean =
+    Fs.list(Paths.get(corpusDir)).exists(_.getFileName.toString.endsWith(".parquet"))
 
   /** Land one batch's rows (all columns, as given) into `corpusDir`.
     *
@@ -90,12 +84,9 @@ object CorpusLanding {
     // deterministic names by SPARK part index (parsed from the task's
     // own part-NNNNN prefix — empty partitions write no file, and the
     // index, not the listing position, is what replay reproduces)
-    val s = Files.list(staging)
-    val staged =
-      try s.toArray.toSeq.map(_.asInstanceOf[Path])
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .sortBy(_.getFileName.toString)
-      finally s.close()
+    val staged = Fs.list(staging)
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .sortBy(_.getFileName.toString)
     val targets = staged.map { f =>
       val idx = f.getFileName.toString.stripPrefix("part-")
         .takeWhile(_.isDigit)
@@ -105,11 +96,8 @@ object CorpusLanding {
     // PARTS-MISMATCH GUARD (see class doc)
     val landedOfBatch = {
       val prefix = f"b$batchId%09d_p"
-      val ls = Files.list(corpus)
-      try ls.toArray.toSeq.map(_.asInstanceOf[Path])
-        .map(_.getFileName.toString)
+      Fs.list(corpus).map(_.getFileName.toString)
         .filter(n => n.startsWith(prefix) && n.endsWith(".parquet"))
-      finally ls.close()
     }
     val foreign = landedOfBatch.filterNot(_.endsWith(s"of$parts.parquet"))
     if (foreign.nonEmpty) {

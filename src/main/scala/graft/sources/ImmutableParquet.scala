@@ -97,11 +97,8 @@ object ImmutableParquet {
   def rows(spark: SparkSession, location: String): Long =
     rowCounts.computeIfAbsent(key(location), _ => {
       val conf = spark.sparkContext.hadoopConfiguration
-      val s = Files.walk(Paths.get(location))
-      val files =
-        try s.toArray.toSeq.map(_.asInstanceOf[Path])
-          .filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet"))
-        finally s.close()
+      val files = Fs.walk(Paths.get(location))
+        .filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet"))
       java.lang.Long.valueOf(files.map { f =>
         val r = ParquetFileReader.open(
           HadoopInputFile.fromPath(new HPath(f.toUri), conf))

@@ -230,6 +230,13 @@ object IncrementalDocArtifact {
     fsReadCounters.computeIfAbsent(rootKey,
       _ => new java.util.concurrent.atomic.AtomicLong()).incrementAndGet()
 
+  /** Generation id of a set of corpus entries (order-insensitive): the
+    * `_gen=<id>` dir name a replayed advance reproduces, and the
+    * corpus-listing hash of the reconcile stamp.
+    */
+  private[sources] def genId(entries: Seq[String]): String =
+    Fs.digest(entries.sorted)
+
   /** Detached maintenance: auto-compactions run here so an ingest
     * tick's latency never includes a fold — the advance returns after
     * its ledger rename and the fold publishes later behind the
@@ -623,19 +630,12 @@ object IncrementalDocArtifact {
       val footer = Seq("#v2", s"#ver:$ver") ++
         gens.toSeq.sorted.map("#gen:" + _) ++
         baseMarkers().toSeq.sortBy(_._1).map { case (p, v) => s"#base:$p:$v" }
-      val tmp = statePath.resolveSibling("state.tmp")
       val content = (entries ++ footer).mkString("\n")
-      Files.writeString(tmp, content)
-      Files.move(tmp, statePath, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
+      Fs.replace(statePath, content)
       // the history copy is atomic too: a crash mid-write must not
       // leave a TRUNCATED v<n> that still parses as a smaller ledger
       // (retention would under-protect and serveVersion under-serve)
-      Files.createDirectories(historyDir)
-      val htmp = historyDir.resolve(s"v$ver.tmp")
-      Files.writeString(htmp, content)
-      Files.move(htmp, historyDir.resolve(s"v$ver"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      Fs.replace(historyDir.resolve(s"v$ver"), content)
       // optional ops bound on history metadata (default: keep all,
       // mirroring PartitionedLayout — append-only artifacts stay
       // travelable to v1; vacuumVersions is the explicit reclaim):
@@ -654,14 +654,9 @@ object IncrementalDocArtifact {
     private def historyDir: Path = root.resolve("_history")
 
     private def historyVersionNums(): Seq[Long] =
-      if (!Files.exists(historyDir)) Nil
-      else {
-        val s = Files.list(historyDir)
-        try s.toArray.toSeq.map(_.asInstanceOf[Path].getFileName.toString)
-          .filter(_.matches("v\\d+")) // stray/tmp files are not versions
-          .map(_.stripPrefix("v").toLong)
-        finally s.close()
-      }
+      Fs.list(historyDir).map(_.getFileName.toString)
+        .filter(_.matches("v\\d+")) // stray/tmp files are not versions
+        .map(_.stripPrefix("v").toLong)
 
     /** Time-travel DATA retention: 1 (default) = only the live
       * version's data is protected — appends stay travelable for free
@@ -723,14 +718,10 @@ object IncrementalDocArtifact {
       * ledger references anymore.
       */
     private def gcRetired(piece: String, protectedGens: Set[String]): Unit =
-      if (Files.exists(retiredDir(piece))) {
-        val s = Files.list(retiredDir(piece))
-        try s.toArray.toSeq.map(_.asInstanceOf[Path])
-          .filter(d => d.getFileName.toString.startsWith("_gen=") &&
-            !protectedGens(d.getFileName.toString.stripPrefix("_gen=")))
-          .foreach(deleteTree)
-        finally s.close()
-      }
+      Fs.list(retiredDir(piece))
+        .filter(d => d.getFileName.toString.startsWith("_gen=") &&
+          !protectedGens(d.getFileName.toString.stripPrefix("_gen=")))
+        .foreach(deleteTree)
 
     // per-generation entry lists (root/_gens/<id>) — written before the
     // ledger commit; an orphan file from a crashed advance is harmless.
@@ -797,19 +788,8 @@ object IncrementalDocArtifact {
         .filter(_.nonEmpty))
     }
 
-    private def writeCovered(piece: String, entries: Seq[String]): Unit = {
-      Files.createDirectories(root.resolve(piece))
-      val tmp = coveredPath(piece).resolveSibling("covered.tmp")
-      Files.writeString(tmp, entries.mkString("\n"))
-      Files.move(tmp, coveredPath(piece), StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-
-    private def genId(newEntries: Seq[String]): String = {
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      newEntries.sorted.foreach(e => md.update(e.getBytes("UTF-8")))
-      md.digest().take(8).map(b => f"$b%02x").mkString
-    }
+    private def writeCovered(piece: String, entries: Seq[String]): Unit =
+      Fs.replace(coveredPath(piece), entries.mkString("\n"))
 
     /** Gen names the CURRENT base snapshot already folded in — written
       * inside the base version dir, so the list commits atomically
@@ -834,11 +814,8 @@ object IncrementalDocArtifact {
       else {
         IncrementalDocArtifact.fsRead(rootKey)
         val folded = foldedGens(piece)
-        val s = Files.list(d)
-        try s.filter(_.getFileName.toString.startsWith("_gen="))
-          .toArray.toSeq.map(_.asInstanceOf[Path].getFileName.toString)
-          .filterNot(folded)
-        finally s.close()
+        Fs.list(d).map(_.getFileName.toString)
+          .filter(_.startsWith("_gen=")).filterNot(folded)
       }
     }
 
@@ -1043,7 +1020,7 @@ object IncrementalDocArtifact {
         : IncrementalDocArtifact.ReconcileStamp = {
       val stamp = lock.synchronized {
         val current = ArtifactStore.entries(corpusPath).filter(isDataEntry)
-        val curHash = genId(current)
+        val curHash = IncrementalDocArtifact.genId(current)
         val cached = IncrementalDocArtifact.reconcileStamps.get(rootKey)
         if (cached != null && stampValid(cached, curHash)) cached
         else recordStamp(curHash, reconcileLocked(spark, current))
@@ -1115,7 +1092,7 @@ object IncrementalDocArtifact {
             val newFiles = newEntries.map(e =>
               corpusRoot.resolve(e.split('|').head).toString)
             val newDocs = ImmutableParquet.read(spark, newFiles)
-            val gen = genId(newEntries)
+            val gen = IncrementalDocArtifact.genId(newEntries)
             // seq = covered-file count before this increment: strictly
             // increasing across appends, deterministic under replay
             val seq = st.entries.size.toLong
@@ -1327,23 +1304,15 @@ object IncrementalDocArtifact {
       // instead of dying (their metadata survives with them).
       val protectedG = retainedHistory().flatMap(_.gens).toSet
       allNames.foreach { n =>
-        if (Files.exists(deltaDir(n))) {
-          val s = Files.list(deltaDir(n))
-          try s.toArray.toSeq.map(_.asInstanceOf[Path])
-            .map(_.getFileName.toString).filter(_.startsWith("_gen="))
-            .foreach(g => retireGen(n, g, protectedG))
-          finally s.close()
-        }
+        Fs.list(deltaDir(n)).map(_.getFileName.toString)
+          .filter(_.startsWith("_gen="))
+          .foreach(g => retireGen(n, g, protectedG))
         deleteTree(deltaDir(n))
       }
       if (protectedG.isEmpty) deleteTree(root.resolve("_gens"))
-      else if (Files.exists(root.resolve("_gens"))) {
-        val s = Files.list(root.resolve("_gens"))
-        try s.toArray.toSeq.map(_.asInstanceOf[Path])
-          .filterNot(f => protectedG(f.getFileName.toString))
-          .foreach(f => Files.deleteIfExists(f))
-        finally s.close()
-      }
+      else Fs.list(root.resolve("_gens"))
+        .filterNot(f => protectedG(f.getFileName.toString))
+        .foreach(f => Files.deleteIfExists(f))
       val docs = spark.read.parquet(corpusPath)
       val ctx = new AdvanceCtx(spark, docs, view(spark, Set.empty),
         isRebuild = true)
@@ -1438,7 +1407,7 @@ object IncrementalDocArtifact {
         val entrySet = st.entries.toSet
         var gens = st.gens
         groups.foreach { case (pending, mps) =>
-          val gen = genId(pending)
+          val gen = IncrementalDocArtifact.genId(pending)
           val pendingSet = pending.toSet
           val coveredSet = entrySet -- pendingSet
           // exclude: committed gens not fully covered by this group
@@ -1774,21 +1743,12 @@ object IncrementalDocArtifact {
           .map(v => parseLedger(historyDir.resolve(s"v$v"))) :+ live
         val keptGens = kept.flatMap(_.gens).toSet
         var deleted = 0
-        def countFiles(d: Path): Int = {
-          val s = Files.walk(d)
-          try s.filter(Files.isRegularFile(_)).count().toInt
-          finally s.close()
-        }
+        def countFiles(d: Path): Int = Fs.walk(d).count(Files.isRegularFile(_))
         allNames.foreach { n =>
-          if (Files.exists(retiredDir(n))) {
-            val s = Files.list(retiredDir(n))
-            val victims =
-              try s.toArray.toSeq.map(_.asInstanceOf[Path])
-                .filter(d => d.getFileName.toString.startsWith("_gen=") &&
-                  !keptGens(d.getFileName.toString.stripPrefix("_gen=")))
-              finally s.close()
-            victims.foreach { d => deleted += countFiles(d); deleteTree(d) }
-          }
+          Fs.list(retiredDir(n))
+            .filter(d => d.getFileName.toString.startsWith("_gen=") &&
+              !keptGens(d.getFileName.toString.stripPrefix("_gen=")))
+            .foreach { d => deleted += countFiles(d); deleteTree(d) }
           // superseded base snapshots: keep the live pointer target,
           // every marker a kept ledger names, AND the one-commit
           // grace window (an in-flight LIVE reader that resolved the
@@ -1801,44 +1761,34 @@ object IncrementalDocArtifact {
             .map(d => Paths.get(d).getFileName.toString)
           val curVer = io.currentVersion
           def verOf(nm: String): Long = ParquetTableIO.versionOfDir(nm)
-          val baseRoot = root.resolve(n).resolve("base")
-          if (Files.exists(baseRoot)) {
-            val s = Files.list(baseRoot)
-            val victims =
-              try s.toArray.toSeq.map(_.asInstanceOf[Path])
-                .filter { d =>
-                  val nm = d.getFileName.toString
-                  // digit-less v- names are foreign (every writer of
-                  // this contract stamps a number) — never vacuum
-                  // them, and say so (same skip+log contract as the
-                  // TableIO commit cleanup, §8.15)
-                  val foreign = nm.startsWith("v-") &&
-                    !ParquetTableIO.hasVersionDigits(nm)
-                  if (foreign)
-                    System.err.println("graft artifact vacuum: " +
-                      s"skipping foreign version-less entry $d " +
-                      "(not a v-<n> snapshot)")
-                  nm.startsWith("v-") && Files.isDirectory(d) &&
-                    !foreign &&
-                    !curName.contains(nm) && !keptMarkers(nm) &&
-                    verOf(nm) < curVer - 1 // grace window survives
-                }
-              finally s.close()
-            victims.foreach { d => deleted += countFiles(d); deleteTree(d) }
-          }
+          Fs.list(root.resolve(n).resolve("base"))
+            .filter { d =>
+              val nm = d.getFileName.toString
+              // digit-less v- names are foreign (every writer of
+              // this contract stamps a number) — never vacuum
+              // them, and say so (same skip+log contract as the
+              // TableIO commit cleanup, §8.15)
+              val foreign = nm.startsWith("v-") &&
+                !ParquetTableIO.hasVersionDigits(nm)
+              if (foreign)
+                System.err.println("graft artifact vacuum: " +
+                  s"skipping foreign version-less entry $d " +
+                  "(not a v-<n> snapshot)")
+              nm.startsWith("v-") && Files.isDirectory(d) &&
+                !foreign &&
+                !curName.contains(nm) && !keptMarkers(nm) &&
+                verOf(nm) < curVer - 1 // grace window survives
+            }
+            .foreach { d => deleted += countFiles(d); deleteTree(d) }
         }
         // gen metadata no kept ledger references and no live dir needs
         val liveGenIds = deltaGens().map(_.stripPrefix("_gen=")).toSet
-        if (Files.exists(root.resolve("_gens"))) {
-          val s = Files.list(root.resolve("_gens"))
-          try s.toArray.toSeq.map(_.asInstanceOf[Path])
-            .filter { f =>
-              val g = f.getFileName.toString
-              !keptGens(g) && !liveGenIds(g)
-            }
-            .foreach(f => Files.deleteIfExists(f))
-          finally s.close()
-        }
+        Fs.list(root.resolve("_gens"))
+          .filter { f =>
+            val g = f.getFileName.toString
+            !keptGens(g) && !liveGenIds(g)
+          }
+          .foreach(f => Files.deleteIfExists(f))
         deleted
       }
     }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -41,13 +41,7 @@ final class SnapshotChangeFeed(storePath: String, cursorDir: String,
       Some(Files.readString(cursorPath).trim.toLong)
     else None
 
-  private def advance(v: Long): Unit = {
-    Files.createDirectories(cursorPath.getParent)
-    val tmp = cursorPath.resolveSibling(s"_feed_version.tmp")
-    Files.writeString(tmp, v.toString)
-    Files.move(tmp, cursorPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def advance(v: Long): Unit = Fs.replace(cursorPath, v.toString)
 
   private def at(spark: SparkSession, v: Long): DataFrame =
     spark.read.format("graft-snapshot").option("version", v).load(storePath)

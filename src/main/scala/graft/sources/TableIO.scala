@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -140,11 +139,7 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
     */
   def currentManifest: Option[Manifest] =
     if (Files.exists(pointer)) Some(parse(Files.readString(pointer)))
-    else if (Files.exists(root) && {
-        val s = Files.list(root)
-        try s.anyMatch(f => f.getFileName.toString.endsWith(".parquet"))
-        finally s.close()
-      })
+    else if (Fs.list(root).exists(_.getFileName.toString.endsWith(".parquet")))
       Some(Manifest(path, Nil))
     else None
 
@@ -181,18 +176,11 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
   def versionDir(n: Long): Option[String] = {
     val cur = currentManifest.filter(_.base != path).map(_.dirs.last)
     if (cur.exists(d => versionOfDir(nameOf(d)) == n)) cur
-    else if (!Files.exists(root)) None
-    else {
-      val s = Files.list(root)
-      val hits =
-        try s.toArray.toSeq.map(_.asInstanceOf[Path])
-          .filter(f => Files.isDirectory(f) &&
-            f.getFileName.toString.startsWith("v-") &&
-            versionOfDir(f.getFileName.toString) == n)
-          .map(_.toString).sorted
-        finally s.close()
-      hits.headOption
-    }
+    else Fs.list(root)
+      .filter(f => Files.isDirectory(f) &&
+        f.getFileName.toString.startsWith("v-") &&
+        versionOfDir(f.getFileName.toString) == n)
+      .map(_.toString).sorted.headOption
   }
 
   /** The manifest of published version `n` — the time-travel hook for
@@ -270,11 +258,8 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
   }
 
   private[graft] def commitStaged(s: Staged): Unit = {
-    val tmp = root.resolve(s"_current.tmp-${s.vName}")
     val before = if (Files.exists(pointer)) Files.readString(pointer) else ""
-    Files.writeString(tmp, s.manifest)
-    Files.move(tmp, pointer,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Fs.replace(pointer, s.manifest)
     // retire every dir older than the previous version that neither
     // the new manifest nor the one it replaced names — the previous
     // manifest is kept one commit as a grace window for readers that
@@ -287,19 +272,16 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
     // data loss — skip it and leave a log line instead.
     val named = (s.manifest + "\n" + before).linesIterator
       .map(_.trim.takeWhile(_ != '\t')).toSet
-    if (Files.exists(root)) {
-      val ls = Files.list(root)
-      try ls.forEach { f =>
-        val n = f.getFileName.toString
-        if (n.startsWith("v-") && !hasVersionDigits(n))
-          System.err.println(s"graft table cleanup: skipping foreign " +
-            s"version-less entry $f (not a v-<n> snapshot)")
-        else if (n.startsWith("v-") && versionOfDir(n) < s.prev &&
-            !named(n) && !keepVersionDir(n))
-          deleteTree(f)
-        else if (s.prev >= 1 && !Files.isDirectory(f) && n != "_current")
-          Files.deleteIfExists(f)
-      } finally ls.close()
+    Fs.list(root).foreach { f =>
+      val n = f.getFileName.toString
+      if (n.startsWith("v-") && !hasVersionDigits(n))
+        System.err.println(s"graft table cleanup: skipping foreign " +
+          s"version-less entry $f (not a v-<n> snapshot)")
+      else if (n.startsWith("v-") && versionOfDir(n) < s.prev &&
+          !named(n) && !keepVersionDir(n))
+        deleteTree(f)
+      else if (s.prev >= 1 && !Files.isDirectory(f) && n != "_current")
+        Files.deleteIfExists(f)
     }
   }
 
@@ -394,12 +376,8 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     val m = currentManifest.getOrElse(
       throw new IllegalStateException(s"no published snapshot at $path"))
-    def parquetFiles(d: String) = {
-      val s = Files.walk(Paths.get(d))
-      try s.filter(f => f.getFileName.toString.endsWith(".parquet"))
-        .toArray.toSeq.map(_.asInstanceOf[Path])
-      finally s.close()
-    }
+    def parquetFiles(d: String) =
+      Fs.walk(Paths.get(d)).filter(_.getFileName.toString.endsWith(".parquet"))
     val files = m.dirs.flatMap(parquetFiles)
     val bytes = files.map(Files.size).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
@@ -439,11 +417,7 @@ object ParquetTableIO {
     * it also forgets every [[ImmutableParquet]] key under `dir`.
     */
   def deleteTree(dir: Path): Unit = {
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-      finally s.close()
-    }
+    Fs.walk(dir).reverse.foreach(Files.delete)
     ImmutableParquet.evictUnder(dir)
   }
 

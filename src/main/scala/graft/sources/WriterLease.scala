@@ -215,12 +215,10 @@ object WriterLease {
     * under a freshly-held lease, when no takeover can be mid-flight.
     */
   private def sweepTombs(root: Path): Unit =
-    // broad catch: stream iteration wraps IO errors in
-    // UncheckedIOException — an escape here would leak a held,
+    // broad catch: a listing error (IOException or its unchecked
+    // wrapper) must not escape — it would leak a held,
     // heartbeat-refreshed lease (acquire throws after held.put)
-    try {
-      val s = Files.list(root)
-      try s.filter { f =>
+    try Fs.list(root).filter { f =>
         val n = f.getFileName.toString
         n.startsWith(LeaseName + ".stale.") &&
           // only genuinely-stale tombs: a fresh one is a stolen live
@@ -228,10 +226,9 @@ object WriterLease {
           (try System.currentTimeMillis() -
             Files.getLastModifiedTime(f).toMillis > staleMs
           catch { case _: java.io.IOException => false })
-      }.forEach(f => try Files.deleteIfExists(f)
+      }.foreach(f => try Files.deleteIfExists(f)
         catch { case _: java.io.IOException => () })
-      finally s.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
+    catch { case scala.util.control.NonFatal(_) => () }
 
   /** Release one hold; the file is deleted when the outermost hold of
     * this JVM releases.

@@ -46,13 +46,11 @@ object StreamSync {
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val deduped = LwwMerge.latestAgg(batch, Seq(spec.idCol), spec.versionCol)
-        val merged =
-          if (dest.exists)
-            LwwMerge.merge(dest.read(batch.sparkSession), deduped,
-              Seq(spec.idCol), spec.versionCol)
-          else deduped
-        dest.overwrite(merged)
+        // the batch goes straight into the merge, whose payload-hash
+        // tie-break also ranks rows of ONE batch sharing (id, version)
+        // — a first-run store is an empty frame of the batch's schema
+        val store = if (dest.exists) dest.read(batch.sparkSession) else batch.limit(0)
+        dest.overwrite(LwwMerge.merge(store, batch, Seq(spec.idCol), spec.versionCol))
       }
       .start()
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.dedup.MinHashLSH
 import graft.functions.TextFunctions
 import graft.operators.Pin
-import graft.sources.ParquetTableIO
+import graft.sources.{Fs, ParquetTableIO}
 
 /** Streaming near-duplicate detection: every micro-batch of documents
   * is probed against the PERSISTED MinHash band index (d10's
@@ -56,13 +56,7 @@ object StreamingLshDedup {
     val delta = deltaDir(indexDir)
     val parts = Seq(
       if (base.exists) Some(base.read(spark)) else None,
-      if (Files.exists(delta) && {
-          // close the DirectoryStream — this runs once per micro-batch,
-          // an unclosed listing leaks one fd per batch until GC
-          val s = Files.list(delta)
-          try s.anyMatch(_.getFileName.toString.startsWith("_batch="))
-          finally s.close()
-        })
+      if (Fs.list(delta).exists(_.getFileName.toString.startsWith("_batch=")))
         Some(spark.read.parquet(delta.toString).drop("_batch"))
       else None).flatten
     parts.reduceOption(_.unionByName(_))
@@ -81,13 +75,7 @@ object StreamingLshDedup {
     */
   def compactIndex(spark: SparkSession, indexDir: String): Unit = {
     val delta = deltaDir(indexDir)
-    if (!Files.exists(delta)) return
-    val absorbed = {
-      val s = Files.list(delta)
-      try s.filter(_.getFileName.toString.startsWith("_batch="))
-        .toArray.toSeq.map(_.asInstanceOf[Path])
-      finally s.close()
-    }
+    val absorbed = Fs.list(delta).filter(_.getFileName.toString.startsWith("_batch="))
     if (absorbed.isEmpty) return
     val base = baseIO(indexDir)
     val deltaDf = spark.read.parquet(delta.toString).drop("_batch")

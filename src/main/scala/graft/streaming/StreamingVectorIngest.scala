@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.similarity.{IvfKnn, ProductQuantizer}
-import graft.sources.ParquetTableIO
+import graft.sources.{Fs, ParquetTableIO}
 
 /** Streaming ANN-index growth: every micro-batch of vectors is encoded
   * with the STORED coarse codebook + PQ books (fixed artifacts — the
@@ -65,15 +65,12 @@ object StreamingVectorIngest {
     }
 
   private def liveBatches(indexDir: String): Seq[Path] = {
-    val delta = deltaDir(indexDir)
-    if (!Files.exists(delta)) Nil
+    val batches = Fs.list(deltaDir(indexDir))
+      .filter(_.getFileName.toString.startsWith("_batch="))
+    if (batches.isEmpty) Nil
     else {
       val folded = foldedBatches(indexDir)
-      val s = Files.list(delta)
-      try s.filter(_.getFileName.toString.startsWith("_batch="))
-        .toArray.toSeq.map(_.asInstanceOf[Path])
-        .filterNot(p => folded(p.getFileName.toString))
-      finally s.close()
+      batches.filterNot(p => folded(p.getFileName.toString))
     }
   }
 

@@ -37,7 +37,8 @@ class WatermarkSpec extends AnyFunSuite with Matchers {
     val p = tmpFile
     Watermark.write(p, 1705314225678L)
     Watermark.read(p) shouldBe Some(1705314180000L)
-    Files.exists(java.nio.file.Paths.get(p + ".tmp")) shouldBe false
+    val dir = java.nio.file.Paths.get(p).getParent
+    graft.sources.Fs.list(dir).map(_.getFileName.toString) shouldBe Seq("lastruntime.log")
   }
 
   test("nextSpan is the half-open (last, now-truncated] window") {

@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.core.{SideSpec, SyncSpec}
+import graft.operators.LwwMerge
 import graft.sources.ParquetTableIO
 import graft.streaming.StatefulLww.KeyedVersioned
 
@@ -56,6 +57,33 @@ class StreamSyncSpec extends SparkSpec {
     val q3 = StreamSync.start(spark, in, schema, dest, spec, ckpt, Trigger.AvailableNow())
     q3.awaitTermination()
     dest.read(spark).count() shouldBe 3
+  }
+
+  test("rows of one batch tied on (id, version) resolve by LwwMerge.merge's payload-hash rank, not file order") {
+    val base = Files.createTempDirectory("sstie")
+    val in = base.resolve("incoming")
+    val dest = new ParquetTableIO(base.resolve("dest").toString)
+    // merge ranks ties by xxhash64 over the name-sorted payload columns;
+    // the file holds the smallest hash first, the largest (the merge's
+    // winner) in the middle, so neither the first nor the last row of
+    // the file is the winner
+    val tied = Seq(("k", 4L, "left"), ("k", 4L, "mid"), ("k", 4L, "right"))
+    def hash(r: (String, Long, String)): Long =
+      Seq(r).toDF("id", "version", "text")
+        .select(org.apache.spark.sql.functions.xxhash64(col("id"), col("text"), col("version")))
+        .as[Long].head()
+    val Seq(low, middle, high) = tied.sortBy(hash)
+    val rows = Seq(low, high, middle)
+    val batch = rows.toDF("id", "version", "text")
+    batch.coalesce(1).write.parquet(in.toString)
+    spark.read.parquet(in.toString).as[(String, Long, String)].collect().toSeq shouldBe rows
+
+    val want = LwwMerge.merge(batch.limit(0), batch, Seq("id"), "version")
+      .as[(String, Long, String)].collect().toSeq
+    want shouldBe Seq(high)
+    StreamSync.start(spark, in.toString, batch.schema, dest, spec,
+      base.resolve("ckpt").toString, Trigger.AvailableNow()).awaitTermination()
+    dest.read(spark).as[(String, Long, String)].collect().toSeq shouldBe want
   }
 
   test("ProcessingTime trigger: the continuously-running periodic daemon (T1)") {
