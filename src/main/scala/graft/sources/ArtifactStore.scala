@@ -57,25 +57,4 @@ object ArtifactStore {
       "_" + fingerprint(tablePath)
     new ParquetTableIO(s"$root/$key/$piece")
   }
-
-  /** EXACT content fingerprint: an order-insensitive aggregate
-    * (bit_xor of per-row xxhash64 over every column, plus the row
-    * count) — one Spark scan of the table, deterministic regardless of
-    * partition order or file layout. The filesystem fingerprint trusts
-    * sizes+mtimes, which a metadata-preserving copy (`cp -p` of a
-    * different same-shape corpus) can spoof; this mode cannot be
-    * spoofed without an actual hash collision. The trade is cost: a
-    * full table scan per staleness check instead of a microsecond
-    * directory walk — use it where the corpus arrives through channels
-    * that don't refresh mtimes, and the fs mode everywhere else.
-    */
-  def contentFingerprint(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): String = {
-    import org.apache.spark.sql.functions.{bit_xor => bxor, _}
-    val df = spark.read.parquet(tablePath)
-    val r = df.select(
-      coalesce(bxor(xxhash64(df.columns.map(col): _*)), lit(0L)).as("x"),
-      count(lit(1)).as("n")).first()
-    f"${r.getLong(0)}%016x-${r.getLong(1)}%x"
-  }
 }

@@ -49,17 +49,24 @@ import graft.sources.IncrementalDocArtifact.Piece
   *    only the delta half — never the provisioned bitmap bytes.
   *  - `digests` (doc id, fp, _ib), fold-clustered BY FINGERPRINT:
   *    only the screen's maybe-hits (true duplicates + ~fpp of the
-  *    uniques) pay the exact residue anti-join, and their fps go in
-  *    as a capped In predicate, so the join's build side holds only
-  *    the maybe-hits' digest rows instead of the whole table. The
-  *    In prunes row groups of the fp-clustered layout only while it
-  *    lists at most `spark.sql.parquet.pushdown.inFilterThreshold`
-  *    (10) fps; above that Spark pushes just the list's min and max,
-  *    which on hashed fps span almost every row group, so a batch
-  *    with thousands of maybe-hits reads every digest row (the scan
-  *    is O(accepted) even though the join is not). Past the cap the
-  *    residue degrades to the plain anti-join (the engine's
-  *    capped-gate discipline).
+  *    uniques) pay the exact residue anti-join, and the join's build
+  *    side holds only the maybe-hits' digest rows instead of the
+  *    whole table. Up to `spark.sql.parquet.pushdown.inFilterThreshold`
+  *    fps go in as an In predicate, which prunes row groups of the
+  *    fp-clustered layout; above it Spark would push just the list's
+  *    min and max (on hashed fps that spans almost every row group),
+  *    so the seen side is filtered by a Bloom of the fps' hashes
+  *    instead. Past `residueCap` the residue degrades to the plain
+  *    anti-join (the engine's capped-gate discipline).
+  *
+  * ONE PROBE FORM: every membership probe of the tick — base slices,
+  * the unfolded recent tail, the residue's seen side — is a
+  * driver-built Bloom filter behind a broadcast. Each is only a
+  * "maybe" gate in front of the exact anti-join, so a false positive
+  * costs a residue row, never exactness, and no probe embeds a
+  * thousands-long literal list in a plan (the planning and
+  * explain-string cost of such literals was most of a steady tick's
+  * driver time).
   *
   * Per batch: (1) in-batch first-wins dedup (min id per fingerprint
   * — the [[graft.dedup.ExactDedup]] convention, deterministic under
@@ -67,10 +74,9 @@ import graft.sources.IncrementalDocArtifact.Piece
   * the stored digests of STRICTLY EARLIER batches; (3) survivors
   * land with their fingerprint and an `_ib` (ingest-batch) column.
   * The probe flag is evaluated ONCE per tick (the probed frame is
-  * pinned), so the filter literals embed once per serialized plan,
-  * not once per branch. [[AcceptStats]] gauges each tick's
-  * cap/fallback posture — the operator's early warning BEFORE a
-  * drifting loop degrades to O(accepted) ticks.
+  * pinned). [[AcceptStats]] gauges each tick's cap/fallback posture
+  * — the operator's early warning BEFORE a drifting loop degrades to
+  * O(accepted) ticks.
   *
   * THE `_ib` ANCHOR is what makes replay exact. A crash mid-landing
   * can leave a prefix of batch k's files, and a concurrent serve may
@@ -85,7 +91,7 @@ import graft.sources.IncrementalDocArtifact.Piece
   * bits cannot be subtracted — but a Bloom hit only routes a row to
   * the exact residue, which the anchor keeps correct.)
   *
-  * ONE MODE PER outDir, enforced: the first batch stamps a
+  * ONE MODE PER outDir, enforced: the first batch that lands stamps a
   * `_accept_mode` marker and every later entry point (either mode's
   * door, and the mode-specific accessors) refuses a mismatch —
   * interleaving modes would silently build and maintain a second
@@ -116,15 +122,6 @@ object StreamingAcceptIngest {
     sys.props.get("graft.accept.sliceItems")
       .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
       .filter(_ >= 1).getOrElse(4000000L)
-
-  /** Unfolded recent-hash sets above this size probe through an
-    * ephemeral tick-local Bloom instead of an exact In literal.
-    * Spec knob: `graft.accept.recentCap`.
-    */
-  private def recentCap: Int =
-    sys.props.get("graft.accept.recentCap")
-      .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-      .filter(_ >= 1).getOrElse(100000)
 
   /** Unfolded recent-hash tails ABOVE this count are never collected
     * to the driver at all — the tick probes the delta DISTRIBUTED (a
@@ -235,10 +232,9 @@ object StreamingAcceptIngest {
     * so an operator sees a loop DRIFTING toward the O(accepted)
     * fallbacks before a tick ever pays one. Keyed by the screen
     * artifact's storage dir; `sum_*` keys accumulate across ticks
-    * (`sum_ticks`, `sum_residue_fallbacks`, `sum_recent_over_caps`,
-    * `sum_recent_distributed` — ticks whose unfolded tail was too
-    * large to collect and was probed distributed instead, with a
-    * fold queued; near mode adds `sum_band_over_caps` /
+    * (`sum_ticks`, `sum_residue_fallbacks`, `sum_recent_distributed`
+    * — ticks whose unfolded tail was too large to collect and was
+    * probed distributed instead, with a fold queued; near mode adds `sum_band_over_caps` /
     * `sum_cand_over_caps`), `last_*` keys are the latest tick's
     * posture (`last_base_slices`, `last_base_cache_hit`,
     * `last_base_bytes` / `last_cache_bytes` — this loop's cached
@@ -521,13 +517,30 @@ object StreamingAcceptIngest {
       exactPieces(idCol, expectedItems),
       compactEvery = acceptCompactEvery)
 
+  /** A tick-local Bloom of `hashes` (sized to their count; probe-only,
+    * never merged, so its sizing is free) behind a per-tick broadcast
+    * the ContextCleaner reclaims once the tick's plan is unreachable:
+    * "maybe a member" for `hash`, a null hash claiming maybe.
+    */
+  private def hashesProbe(spark: SparkSession, hashes: Array[Long],
+      hash: Column): Column = {
+    val f = org.apache.spark.util.sketch.BloomFilter.create(
+      hashes.length.toLong, bloomBits(hashes.length.toLong))
+    hashes.foreach(f.putLong)
+    coalesce(graft.plans.SlicedBloomProbe.column(hash, 1,
+      spark.sparkContext.broadcast(Array(f))), lit(true))
+  }
+
   /** THE exact screen: rows of `inBatch` (already in-batch-deduped,
     * fp attached) whose fingerprint no STRICTLY-EARLIER batch
-    * accepted. One implementation for both modes — per-slice Bloom
-    * probe (cached base filters + unfolded recent hashes), capped-In
-    * exact residue on the fp-clustered digest fold, `_ib < batchId`
-    * anchor. The probe flag evaluates ONCE (pinned), so the filter
-    * literals embed once per serialized plan.
+    * accepted. One implementation for both modes: a per-slice Bloom
+    * probe (cached base filters) OR'd with a tick-local Bloom of the
+    * unfolded recent hashes, then the exact residue anti-join on the
+    * fp-clustered digest fold under the `_ib < batchId` anchor. The
+    * residue's seen side is cut by an In of its fps only at or under
+    * the parquet In-pushdown threshold (where it prunes row groups),
+    * by a Bloom of their hashes up to `residueCap`, and not at all
+    * past it. The probe flag evaluates ONCE (pinned).
     */
   private def exactScreen(h: IncrementalDocArtifact.Handle,
       spark: SparkSession, inBatch: DataFrame, batchId: Long,
@@ -567,7 +580,6 @@ object StreamingAcceptIngest {
         case None => Array.empty[Long]
       }
     val h64 = xxhash64(col("fp"))
-    val recentOverCap = tailCount > recentCap
     // a null hash must claim "maybe" (exactness first); an ABSENT
     // slice proves novelty (no seen fp hashes there — the
     // empty-slice lemma). The probe expression holds the filters
@@ -579,10 +591,9 @@ object StreamingAcceptIngest {
       else coalesce(
         graft.plans.SlicedBloomProbe.column(h64, slices, baseBc),
         lit(true))
-    // ONE evaluation of the probe (and ONE embedding of the filter
-    // literals in a serialized plan): the probed frame is pinned and
+    // ONE evaluation of the probe: the probed frame is pinned and
     // both branches read the precomputed flag. The pin is LAZY: its
-    // first consumer is the full-scan `fps` distinct below, which
+    // first consumer is the full-scan residue collect below, which
     // materializes it inside a job that runs anyway
     val probed = Pin.lazily(
       if (distributedTail) {
@@ -609,28 +620,8 @@ object StreamingAcceptIngest {
             // "maybe" for every row — exactness first, the residue
             // join decides
             lit(true)
-          else {
-            val recentProbe =
-              if (recent.isEmpty) lit(false)
-              else if (!recentOverCap)
-                // exact membership literal — small by the fold cadence
-                // (≤ compactEvery generations of batch-sized hash sets)
-                h64.isInCollection(recent.toSeq)
-              else {
-                // backfill-sized unfolded tail (still under the
-                // collect cap): an ephemeral tick-local filter sized
-                // to the actual count (probe-only — never merged, so
-                // its sizing is free); per-tick broadcast, reclaimed
-                // by the ContextCleaner when the tick's plan becomes
-                // unreachable
-                val f = org.apache.spark.util.sketch.BloomFilter.create(
-                  recent.length.toLong, bloomBits(recent.length.toLong))
-                recent.foreach(f.putLong)
-                coalesce(graft.plans.SlicedBloomProbe.column(h64, 1,
-                  spark.sparkContext.broadcast(Array(f))), lit(true))
-              }
-            sliceProbe || recentProbe
-          }
+          else if (recent.isEmpty) sliceProbe
+          else sliceProbe || hashesProbe(spark, recent, h64)
         inBatch.withColumn("_might", might)
       })
     val definitelyNew = probed.filter(!col("_might")).drop("_might")
@@ -638,26 +629,44 @@ object StreamingAcceptIngest {
     // the replay anchor: strictly-earlier batches only (class doc)
     val seen = h.serve(spark, "digests").where(col("_ib") < batchId)
     val cap = residueCap
-    val fps = maybe.select("fp").distinct()
-      .limit(cap + 1).collect().map(_.getString(0))
+    // the residue's (fp, hash) pairs, at most cap + 1 of them, and its
+    // row count in ONE job that scans every partition of `maybe` —
+    // the job that materializes the lazy pin, so it must not stop
+    // early (no `limit`); no `distinct` either: inBatchDedup left one
+    // row per fp
+    val perPart = maybe.select(col("fp"), h64).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val kept =
+          scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+        var n = 0L
+        rows.foreach { r =>
+          if (kept.length <= cap)
+            kept += ((r.getUTF8String(0).toString, r.getLong(1)))
+          n += 1
+        }
+        Iterator.single((n, kept.toArray))
+      }.collect()
+    val residueRows = perPart.iterator.map(_._1).sum
+    val residue = perPart.iterator.flatMap(_._2).take(cap + 1).toArray
+    val inMax = spark.conf
+      .get("spark.sql.parquet.pushdown.inFilterThreshold").toInt
     val seenSide =
-      (if (fps.length <= cap)
-        // capped-In probe: the residue never pays a full join build;
-        // row groups prune only up to inFilterThreshold (10) fps —
-        // past it the scan reads every digest row (class doc)
-        seen.where(col("fp").isInCollection(fps.toSeq))
-      else seen).select("fp")
+      (if (residueRows > cap) seen
+      else if (residueRows <= inMax)
+        seen.where(col("fp").isInCollection(residue.map(_._1).toSeq))
+      else seen.where(
+        hashesProbe(spark, residue.map(_._2), xxhash64(col("fp")))))
+        .select("fp")
     AcceptStats.record(h.artifactDir,
       sums = Map("sum_ticks" -> 1L,
-        "sum_residue_fallbacks" -> (if (fps.length > cap) 1L else 0L),
-        "sum_recent_over_caps" -> (if (recentOverCap) 1L else 0L),
+        "sum_residue_fallbacks" -> (if (residueRows > cap) 1L else 0L),
         "sum_recent_distributed" -> (if (distributedTail) 1L else 0L)),
       lasts = Map("last_base_slices" -> baseSlices,
         "last_base_cache_hit" -> (if (cacheHit) 1L else 0L),
         "last_base_bytes" -> baseBytes,
         "last_cache_bytes" -> cacheBytes,
         "last_recent_hashes" -> tailCount,
-        "last_residue_fps" -> fps.length.toLong))
+        "last_residue_fps" -> residue.length.toLong))
     definitelyNew.unionByName(
       maybe.join(seenSide, Seq("fp"), "left_anti"))
   }
@@ -815,14 +824,15 @@ object StreamingAcceptIngest {
   def applyBatch(batch: DataFrame, batchId: Long, idCol: String,
       textCol: String, outDir: String, parts: Int = 1,
       expectedItems: Long = 4000000L): Unit = {
-    if (batch.isEmpty) return
     requireCleanColumns(batch)
     val spark = batch.sparkSession
     graft.plans.GraftFunctions.ensureRegistered(spark)
     requireBloomCapacity(spark, expectedItems)
     val corpus = corpusDir(outDir)
     CorpusLanding.requireLocal(outDir)
-    stampOrRequireMode(outDir, "exact")
+    // refuse a near-mode sink before any work; the marker itself is
+    // stamped only by a batch that lands (an empty batch leaves none)
+    requireModeIfMarked(outDir, "exact")
     val inBatch = inBatchDedup(batch, idCol, textCol)
     val fresh =
       if (CorpusLanding.hasData(corpus))
@@ -834,10 +844,12 @@ object StreamingAcceptIngest {
     // the count that checks emptiness is the job that materializes it
     val (survivors, n) =
       Pin.loop().pinCount(fresh.withColumn("_ib", lit(batchId)), "")
-    // survivors can be empty (an all-duplicate batch): nothing lands,
-    // nothing advances — the replay of such a batch is trivially
-    // idempotent (same screen, same empty survivor set)
+    // survivors can be empty (an empty or all-duplicate batch): no
+    // marker, nothing lands, nothing advances — the replay of such a
+    // batch is trivially idempotent (same screen, same empty survivor
+    // set)
     if (n > 0) {
+      stampOrRequireMode(outDir, "exact")
       CorpusLanding.land(survivors, batchId, corpus, hashCol = "fp",
         parts = parts)
       // tick: advance the screen artifact over the landed generation

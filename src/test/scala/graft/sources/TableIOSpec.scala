@@ -135,50 +135,6 @@ class TableIOSpec extends SparkSpec {
     ArtifactStore.fingerprint(src.toString) should not be fp1
   }
 
-  test("content-hash key catches a metadata-preserving regrow the fs mode misses") {
-    // a different same-shape corpus copied with preserved size AND
-    // mtime (cp -p): the filesystem fingerprint cannot tell them
-    // apart; the content hash must
-    val dir = Files.createTempDirectory("chfp")
-    val src = dir.resolve("t.parquet").toString
-    Seq((1L, "aaaa"), (2L, "bbbb")).toDF("id", "text")
-      .coalesce(1).write.parquet(src)
-    val dataFile = Files.list(java.nio.file.Paths.get(src))
-      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
-    val mtime = Files.getLastModifiedTime(dataFile)
-    val size = Files.size(dataFile)
-    val fsFp1 = ArtifactStore.fingerprint(src)
-    val ch1 = ArtifactStore.contentFingerprint(spark, src)
-    ArtifactStore.contentFingerprint(spark, src) shouldBe ch1 // stable
-
-    // regrow with different content, then pad to the same size and
-    // restore the mtime — the spoof scenario
-    val tmp2 = dir.resolve("t2.parquet").toString
-    Seq((1L, "aaaa"), (2L, "cccc")).toDF("id", "text")
-      .coalesce(1).write.parquet(tmp2)
-    val newFile = Files.list(java.nio.file.Paths.get(tmp2))
-      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
-    // same logical shape ⇒ (usually) same byte size; if the footer
-    // differs, skip the size identity but still pin the mtime spoof
-    Files.copy(newFile, dataFile,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // a real cp -p copies the local-FS checksum shadow too, mtime
-    // preserved — replicate that so the read verifies and the crc
-    // entry's (size, mtime) stays identical in the fs fingerprint
-    val oldCrc = dataFile.resolveSibling("." + dataFile.getFileName + ".crc")
-    val newCrc = newFile.resolveSibling("." + newFile.getFileName + ".crc")
-    if (Files.exists(newCrc) && Files.exists(oldCrc)) {
-      val crcMtime = Files.getLastModifiedTime(oldCrc)
-      Files.copy(newCrc, oldCrc,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(oldCrc, crcMtime)
-    }
-    Files.setLastModifiedTime(dataFile, mtime)
-    if (Files.size(dataFile) == size)
-      ArtifactStore.fingerprint(src) shouldBe fsFp1 // fs mode fooled
-    ArtifactStore.contentFingerprint(spark, src) should not be ch1 // hash mode not
-  }
-
   test("concurrent prepares stage disjoint dirs; the committed one wins") {
     val io = new ParquetTableIO(tmp)
     io.overwrite(Seq((1, "base")).toDF("id", "v"))

@@ -1,12 +1,17 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
+import graft.sources.Fs
 
 /** The self-referential accept-ingest loop: each micro-batch is
   * exact-deduped against everything previously ACCEPTED, survivors
@@ -134,6 +139,139 @@ class StreamingAcceptIngestSpec extends SparkSpec {
         .select("text").collect().map(_.getString(0)).toSet shouldBe
         (1L to 120L).map(i => s"text $i").toSet
     } finally System.clearProperty("graft.accept.residueCap")
+  }
+
+  /** Literal-list lengths of every In / InSet in the optimized and
+    * executed plans of the SQL executions `body` runs, gathered by a
+    * QueryExecutionListener; a barrier query proves the bus delivered
+    * every execution before the listener is dropped.
+    */
+  private def inListsOf(body: => Unit): Seq[Int] = {
+    val marker = s"in-lists-${java.util.UUID.randomUUID()}"
+    val sizes = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val barrier = new java.util.concurrent.CountDownLatch(1)
+    def physical(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => physical(a.executedPlan)
+      case q: QueryStageExec => physical(q.plan)
+      case _ => p +: (p.children ++ p.subqueries).flatMap(physical)
+    }
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.toString.contains(marker)) barrier.countDown()
+        else (qe.optimizedPlan.collectWithSubqueries { case n => n }
+            .flatMap(_.expressions) ++
+            physical(qe.executedPlan).flatMap(_.expressions))
+          .foreach(_.foreach {
+            case i: In => sizes.add(i.list.size)
+            case i: InSet => sizes.add(i.hset.size)
+            case _ =>
+          })
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(lit(marker)).collect()
+      assert(barrier.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the barrier query")
+      import scala.jdk.CollectionConverters._
+      sizes.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a residue past the In-pushdown threshold stays exact and no executed plan lists more fps than the threshold") {
+    val out = Files.createTempDirectory("graft-accept-inlist").toString
+    val threshold = spark.conf
+      .get("spark.sql.parquet.pushdown.inFilterThreshold").toInt
+    // batch 0 lands 200 texts; batch 1 adds 60 more as an unfolded
+    // generation, so batch 2 probes a recent tail as well as the base
+    StreamingAcceptIngest.applyBatch(
+      (1L to 200L).map(i => (i, s"text $i")).toDF("doc_id", "text"),
+      0L, "doc_id", "text", out)
+    StreamingAcceptIngest.applyBatch(
+      (201L to 260L).map(i => (i, s"text $i")).toDF("doc_id", "text"),
+      1L, "doc_id", "text", out)
+    // batch 2: 80 re-offers of earlier texts, 40 fresh texts, one of
+    // them twice (the smaller id must win)
+    val rows = (1L to 80L).map(i => (1000L + i, s"text ${i * 3}")) ++
+      (1L to 40L).map(i => (2000L + i, s"new $i")) :+ (999L, "new 7")
+    val lists = inListsOf(StreamingAcceptIngest.applyBatch(
+      rows.toDF("doc_id", "text"), 2L, "doc_id", "text", out))
+    val stats = StreamingAcceptIngest.AcceptStats.snapshot(
+      StreamingAcceptIngest.screenArtifactDir(out, "doc_id", "text"))
+    stats("last_residue_fps") should be > threshold.toLong
+    stats("last_recent_hashes") should be > threshold.toLong
+    lists.filter(_ > threshold) shouldBe empty
+    StreamingAcceptIngest.accepted(spark, out).where(col("_ib") === 2L)
+      .select("doc_id", "text").as[(Long, String)].collect().toSet shouldBe
+      (1L to 40L).map(i => (if (i == 7L) 999L else 2000L + i, s"new $i")).toSet
+    StreamingAcceptIngest.accepted(spark, out).count() shouldBe 300L
+  }
+
+  test("a residue over the cap but under the In-pushdown threshold takes the plain anti-join and stays exact") {
+    val out = Files.createTempDirectory("graft-accept-smallcap").toString
+    System.setProperty("graft.accept.residueCap", "2")
+    try {
+      StreamingAcceptIngest.applyBatch(
+        (1L to 30L).map(i => (i, s"text $i")).toDF("doc_id", "text"),
+        0L, "doc_id", "text", out)
+      // 5 re-offers: more than the cap keeps, fewer than the threshold
+      StreamingAcceptIngest.applyBatch(
+        ((1L to 5L).map(i => (100L + i, s"text ${i * 5}")) ++
+          (31L to 35L).map(i => (i, s"text $i"))).toDF("doc_id", "text"),
+        1L, "doc_id", "text", out)
+      val stats = StreamingAcceptIngest.AcceptStats.snapshot(
+        StreamingAcceptIngest.screenArtifactDir(out, "doc_id", "text"))
+      stats("last_residue_fps") shouldBe 3L
+      acceptedIds(out) shouldBe (1L to 35L).toSet
+    } finally System.clearProperty("graft.accept.residueCap")
+  }
+
+  test("an empty exact batch on a fresh outDir stamps no marker and leaves no corpus or artifact; a near sink still refuses it") {
+    val out = Files.createTempDirectory("graft-accept-empty").toString
+    val noRows = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    StreamingAcceptIngest.applyBatch(noRows, 0L, "doc_id", "text", out)
+    Fs.list(Paths.get(out)) shouldBe empty
+    Files.exists(Paths.get(
+      StreamingAcceptIngest.screenArtifactDir(out, "doc_id", "text"))) shouldBe false
+    // the sink is still unclaimed: a near batch stamps it near, and
+    // the exact door then refuses even an empty batch
+    StreamingAcceptIngest.applyBatchNear(Seq((1L, "a")).toDF("doc_id", "text"),
+      0L, "doc_id", "text", out, threshold = 0.7)
+    an[IllegalStateException] should be thrownBy
+      StreamingAcceptIngest.applyBatch(noRows, 1L, "doc_id", "text", out)
+  }
+
+  test("an empty exact batch on a live sink changes no corpus file and no screen generation") {
+    val out = Files.createTempDirectory("graft-accept-empty-live").toString
+    Seq(0L -> (1L to 30L), 1L -> (20L to 50L)).foreach { case (b, range) =>
+      StreamingAcceptIngest.applyBatch(
+        range.map(i => (i + b * 1000L, s"text $i")).toDF("doc_id", "text"),
+        b, "doc_id", "text", out)
+    }
+    StreamingAcceptIngest.awaitScreenMaintenance(out, "doc_id", "text")
+    def files(root: String): Seq[(String, Long)] = {
+      val r = Paths.get(root)
+      Fs.walk(r).filter(Files.isRegularFile(_))
+        .map(f => (r.relativize(f).toString, Files.size(f))).sorted
+    }
+    val corpus = StreamingAcceptIngest.acceptedCorpusPath(out)
+    val screen = StreamingAcceptIngest.screenArtifactDir(out, "doc_id", "text")
+    val (corpusBefore, screenBefore) = (files(corpus), files(screen))
+    screenBefore.exists(_._1.contains("_gen=")) shouldBe true
+    StreamingAcceptIngest.applyBatch(Seq.empty[(Long, String)].toDF("doc_id", "text"),
+      2L, "doc_id", "text", out)
+    StreamingAcceptIngest.awaitScreenMaintenance(out, "doc_id", "text")
+    files(corpus) shouldBe corpusBefore
+    files(screen) shouldBe screenBefore
+    // the loop goes on: the next batch still screens against both
+    StreamingAcceptIngest.applyBatch(
+      (45L to 60L).map(i => (i + 3000L, s"text $i")).toDF("doc_id", "text"),
+      3L, "doc_id", "text", out)
+    StreamingAcceptIngest.accepted(spark, out)
+      .select("text").as[String].collect().sorted shouldBe
+      (1L to 60L).map(i => s"text $i").sorted
   }
 
   test("an unfolded tail past the collect cap is probed DISTRIBUTED (exact, driver-bounded) and a fold is queued; a stalled maintenance plane stays correct") {
@@ -276,10 +414,9 @@ class StreamingAcceptIngestSpec extends SparkSpec {
     val single = run(
       Files.createTempDirectory("graft-accept-s1").toString, 4000000L)
     single shouldBe (1L to 200L).map(i => s"text $i").toSet
-    // 4 tiny slices + the ephemeral-filter recent path (cap forced to
-    // 1): the severely-undersized filters degrade fpp, never exactness
+    // 4 tiny slices + the tick-local recent-tail filter: the
+    // severely-undersized filters degrade fpp, never exactness
     System.setProperty("graft.accept.sliceItems", "16")
-    System.setProperty("graft.accept.recentCap", "1")
     try {
       StreamingAcceptIngest.AcceptStats.reset()
       val out = Files.createTempDirectory("graft-accept-s4").toString
@@ -289,11 +426,10 @@ class StreamingAcceptIngestSpec extends SparkSpec {
           expectedItems = 64L))
       stats("sum_ticks") should be >= 3L // batches 1-3 screened
       stats("last_base_slices") should be >= 2L // sliced base in play
-      stats("sum_recent_over_caps") should be >= 1L // ephemeral path hit
+      stats("last_recent_hashes") should be > 0L // recent-tail filter in play
       stats("last_base_cache_hit") shouldBe 1L // steady state reads no base bytes
     } finally {
       System.clearProperty("graft.accept.sliceItems")
-      System.clearProperty("graft.accept.recentCap")
     }
     // provisioning by slice count: 100 M items pass the capacity guard
     // at the DEFAULT runtime-bloom confs (25 slices of 4 M), where the
