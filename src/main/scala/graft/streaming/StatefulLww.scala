@@ -8,10 +8,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * form of the engine's core merge (SURVEY.md A1), built on
   * `flatMapGroupsWithState`.
   *
-  * Where StreamSync.foreachBatch re-merges against a snapshot each
-  * micro-batch (right for modest key cardinality + columnar dest),
-  * this keeps the per-key max in the state store: O(changed keys) per
-  * batch, no snapshot rewrite, and downstream consumers see exactly
+  * Where StreamSync.foreachBatch probes the destination store with
+  * each micro-batch's ids and stages the winners as a delta (right
+  * for a columnar dest that is also read as a table), this keeps the
+  * per-key max in the state store: O(changed keys) per batch, no
+  * store probe, and downstream consumers see exactly
   * the winning updates — the reference's "409 the losers" behavior
   * (pyCassElastic.py:340-343) as a dataflow operator.
   *

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.core.SyncSpec
-import graft.operators.LwwMerge
+import graft.operators.{LwwMerge, SchemaTools}
 import graft.sources.TableIO
 
 /** Structured-Streaming periodic sync — the engine-native upgrade of
@@ -17,10 +17,13 @@ import graft.sources.TableIO
   *  - the lastruntime.log watermark becomes the engine's atomic
   *    `checkpointLocation` offset log — files are processed exactly
   *    once across restarts with no hand-rolled state;
-  *  - each micro-batch LWW-merges into the destination snapshot via
-  *    foreachBatch; because the merge is idempotent (same version ⇒
-  *    incumbent kept), a replayed batch after a crash converges to
-  *    the same snapshot — at-least-once delivery + idempotent apply =
+  *  - each micro-batch LWW-merges into the destination via
+  *    foreachBatch, committed as a sync leg commits ([[TableIO.pin]]):
+  *    a snapshot store stages only the batch's winners as one delta,
+  *    so a micro-batch writes O(batch), not O(store). Because the
+  *    merge is idempotent (same version ⇒ incumbent kept), a replayed
+  *    batch after a crash converges to the same state —
+  *    at-least-once delivery + idempotent apply =
   *    effectively-once, the same guarantee the reference gets from ES
   *    external versioning (T5) but engine-side;
   *  - late data: the reference silently LOSES rows older than its
@@ -45,12 +48,20 @@ object StreamSync {
     incoming.writeStream
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the batch goes straight into the merge, whose payload-hash
-        // tie-break also ranks rows of ONE batch sharing (id, version)
-        // — a first-run store is an empty frame of the batch's schema
-        val store = if (dest.exists) dest.read(batch.sparkSession) else batch.limit(0)
-        dest.overwrite(LwwMerge.merge(store, batch, Seq(spec.idCol), spec.versionCol))
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (dest.exists) {
+          // a sync leg's commit: the micro-batch is one window, so the
+          // store stages only its LWW winners ([[TableIO.pin]])
+          val p = dest.pin(batch.sparkSession)
+          val (d, in, _) = SchemaTools.alignBoth(p.df, batch)
+          p.upsert(d, in, TableIO.Upsert(Seq(spec.idCol), spec.versionCol,
+            windowed = true, new LwwMerge.Counts(s"${spec.name}-stream-$batchId")))
+            .commit()
+        } else
+          // first run: the merge's payload-hash tie-break also ranks
+          // rows of ONE batch sharing (id, version)
+          dest.overwrite(LwwMerge.merge(batch.limit(0), batch,
+            Seq(spec.idCol), spec.versionCol))
       }
       .start()
   }

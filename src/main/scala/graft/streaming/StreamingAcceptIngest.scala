@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -60,22 +61,27 @@ import graft.sources.IncrementalDocArtifact.Piece
   *    anti-join (the engine's capped-gate discipline).
   *
   * ONE PROBE FORM: every membership probe of the tick — base slices,
-  * the unfolded recent tail, the residue's seen side — is a
-  * driver-built Bloom filter behind a broadcast. Each is only a
-  * "maybe" gate in front of the exact anti-join, so a false positive
-  * costs a residue row, never exactness, and no probe embeds a
-  * thousands-long literal list in a plan (the planning and
-  * explain-string cost of such literals was most of a steady tick's
-  * driver time).
+  * the unfolded recent tail, and every stored-side lookup (the exact
+  * residue's digests; near mode's banded index and signatures) — is a
+  * driver-built Bloom filter behind a broadcast, except that a lookup
+  * of at most `spark.sql.parquet.pushdown.inFilterThreshold` keys uses
+  * the literal keys, the only size at which an In prunes row groups
+  * ([[keyProbe]], the one literal site). Each is only a "maybe" gate
+  * in front of an exact join, so a false positive costs a residue
+  * row, never exactness, and no probe embeds a thousands-long literal
+  * list in a plan (the planning and explain-string cost of such
+  * literals was most of a steady tick's driver time).
   *
-  * Per batch: (1) in-batch first-wins dedup (min id per fingerprint
-  * — the [[graft.dedup.ExactDedup]] convention, deterministic under
-  * replay); (2) sliced-Bloom probe + capped exact residue against
-  * the stored digests of STRICTLY EARLIER batches; (3) survivors
-  * land with their fingerprint and an `_ib` (ingest-batch) column.
-  * The probe flag is evaluated ONCE per tick (the probed frame is
-  * pinned). [[AcceptStats]] gauges each tick's cap/fallback posture
-  * — the operator's early warning BEFORE a drifting loop degrades to
+  * Per batch, one body behind both doors: (1) in-batch first-wins
+  * dedup (min id per fingerprint — the [[graft.dedup.ExactDedup]]
+  * convention, deterministic under replay); (2) sliced-Bloom probe +
+  * capped exact residue against the stored digests of STRICTLY
+  * EARLIER batches; (3) near mode only: the MinHash near-dup screen
+  * over (2)'s survivors ([[applyBatchNear]]); (4) survivors land with
+  * their fingerprint and an `_ib` (ingest-batch) column. The probe
+  * flag is evaluated ONCE per tick (the probed frame is pinned).
+  * [[AcceptStats]] gauges each tick's cap/fallback posture — the
+  * operator's early warning BEFORE a drifting loop degrades to
   * O(accepted) ticks.
   *
   * THE `_ib` ANCHOR is what makes replay exact. A crash mid-landing
@@ -92,10 +98,13 @@ import graft.sources.IncrementalDocArtifact.Piece
   * the exact residue, which the anchor keeps correct.)
   *
   * ONE MODE PER outDir, enforced: the first batch that lands stamps a
-  * `_accept_mode` marker and every later entry point (either mode's
-  * door, and the mode-specific accessors) refuses a mismatch —
+  * `_accept_mode` marker and either mode's door refuses a mismatch —
   * interleaving modes would silently build and maintain a second
-  * full screen-artifact family over the whole corpus.
+  * full screen-artifact family over the whole corpus. The accessors
+  * ([[screenArtifactDir]], [[digests]], [[awaitScreenMaintenance]],
+  * [[compact]]) read the marker and serve its family: `near` → the
+  * near family, otherwise (exact, or an unmarked outDir — nothing has
+  * landed yet) the exact family.
   *
   * At-least-once in, exactly-once accepted corpus out; every store
   * keyed by the accepted-corpus path (co-occurrence, TF-IDF, bands,
@@ -234,14 +243,17 @@ object StreamingAcceptIngest {
     * artifact's storage dir; `sum_*` keys accumulate across ticks
     * (`sum_ticks`, `sum_residue_fallbacks`, `sum_recent_distributed`
     * — ticks whose unfolded tail was too large to collect and was
-    * probed distributed instead, with a fold queued; near mode adds `sum_band_over_caps` /
-    * `sum_cand_over_caps`), `last_*` keys are the latest tick's
+    * probed distributed instead, with a fold queued; near mode adds
+    * `sum_band_over_caps` / `sum_cand_over_caps` — ticks whose band
+    * pairs / candidate ids passed `residueCap`, so the stored bands /
+    * signatures went unfiltered), `last_*` keys are the latest tick's
     * posture (`last_base_slices`, `last_base_cache_hit`,
     * `last_base_bytes` / `last_cache_bytes` — this loop's cached
     * base-filter bytes and the whole [[BloomCache]]'s, the driver-
     * memory gauge for the byte-bounded cache, `last_recent_hashes`,
     * `last_residue_fps`, near mode adds `last_band_pairs` /
-    * `last_cand_ids`). Every value is driver-known already —
+    * `last_cand_ids` — the distinct keys each [[keyProbe]] kept, at
+    * most `residueCap + 1`). Every value is driver-known already —
     * recording costs no extra action (the only exception: the
     * delta-tail size is ONE scalar aggregate per tick, which is what
     * lets the tick decide against a driver collect before paying it).
@@ -531,16 +543,54 @@ object StreamingAcceptIngest {
       spark.sparkContext.broadcast(Array(f))), lit(true))
   }
 
+  /** THE stored-side lookup of the tick — the exact residue's digests,
+    * and near mode's banded index and signatures. ONE job scans every
+    * partition of `probe` (no `limit`: it may be the job that
+    * materializes a lazy pin) and keeps at most `residueCap + 1` of
+    * its distinct rows, the keys (columns named as on the stored side),
+    * with their xxhash64. Returns how many keys it kept and the stored
+    * side's filter: at or under the parquet In-pushdown threshold the
+    * literal keys (the only size at which an In prunes row groups of a
+    * key-clustered fold; a composite key is an OR, per value of its
+    * leading columns, of an In on its last), up to `residueCap` a
+    * Bloom of the keys' hashes, past it none — the caller's exact join
+    * then decides alone (the capped-gate fallback).
+    */
+  private def keyProbe(spark: SparkSession, probe: DataFrame)
+      : (Int, Option[Column]) = {
+    val cap = residueCap
+    val keyCols = probe.columns.toSeq.map(col)
+    val keyHash = xxhash64(keyCols: _*)
+    val keyed = probe.select(keyCols :+ keyHash: _*)
+    val toRow = CatalystTypeConverters.createToScalaConverter(keyed.schema)
+    val keys = keyed.queryExecution.toRdd.mapPartitions { rows =>
+        val kept = scala.collection.mutable.HashSet.empty[InternalRow]
+        rows.foreach(r => if (kept.size <= cap) kept += r.copy())
+        Iterator.single(kept.toArray)
+      }.collect().iterator.flatten.distinct.take(cap + 1)
+      .map(toRow(_).asInstanceOf[Row]).toArray
+    val inMax = spark.conf
+      .get("spark.sql.parquet.pushdown.inFilterThreshold").toInt
+    val last = keyCols.size - 1
+    val cut =
+      if (keys.length > cap) None
+      else if (keys.length <= inMax) Some(
+        keys.groupBy(r => (0 until last).map(r.get)).map { case (lead, rs) =>
+          val in = keyCols(last).isInCollection(rs.map(_.get(last)).toSeq)
+          keyCols.zip(lead).foldRight(in) { case ((c, v), p) => c === lit(v) && p }
+        }.reduceOption(_ || _).getOrElse(lit(false)))
+      else Some(hashesProbe(spark, keys.map(_.getLong(last + 1)), keyHash))
+    (keys.length, cut)
+  }
+
   /** THE exact screen: rows of `inBatch` (already in-batch-deduped,
     * fp attached) whose fingerprint no STRICTLY-EARLIER batch
     * accepted. One implementation for both modes: a per-slice Bloom
     * probe (cached base filters) OR'd with a tick-local Bloom of the
     * unfolded recent hashes, then the exact residue anti-join on the
-    * fp-clustered digest fold under the `_ib < batchId` anchor. The
-    * residue's seen side is cut by an In of its fps only at or under
-    * the parquet In-pushdown threshold (where it prunes row groups),
-    * by a Bloom of their hashes up to `residueCap`, and not at all
-    * past it. The probe flag evaluates ONCE (pinned).
+    * fp-clustered digest fold under the `_ib < batchId` anchor, its
+    * seen side cut by [[keyProbe]] of the residue's fps. The probe
+    * flag evaluates ONCE (pinned).
     */
   private def exactScreen(h: IncrementalDocArtifact.Handle,
       spark: SparkSession, inBatch: DataFrame, batchId: Long,
@@ -628,45 +678,20 @@ object StreamingAcceptIngest {
     val maybe = probed.filter(col("_might")).drop("_might")
     // the replay anchor: strictly-earlier batches only (class doc)
     val seen = h.serve(spark, "digests").where(col("_ib") < batchId)
-    val cap = residueCap
-    // the residue's (fp, hash) pairs, at most cap + 1 of them, and its
-    // row count in ONE job that scans every partition of `maybe` —
-    // the job that materializes the lazy pin, so it must not stop
-    // early (no `limit`); no `distinct` either: inBatchDedup left one
-    // row per fp
-    val perPart = maybe.select(col("fp"), h64).queryExecution.toRdd
-      .mapPartitions { rows =>
-        val kept =
-          scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-        var n = 0L
-        rows.foreach { r =>
-          if (kept.length <= cap)
-            kept += ((r.getUTF8String(0).toString, r.getLong(1)))
-          n += 1
-        }
-        Iterator.single((n, kept.toArray))
-      }.collect()
-    val residueRows = perPart.iterator.map(_._1).sum
-    val residue = perPart.iterator.flatMap(_._2).take(cap + 1).toArray
-    val inMax = spark.conf
-      .get("spark.sql.parquet.pushdown.inFilterThreshold").toInt
-    val seenSide =
-      (if (residueRows > cap) seen
-      else if (residueRows <= inMax)
-        seen.where(col("fp").isInCollection(residue.map(_._1).toSeq))
-      else seen.where(
-        hashesProbe(spark, residue.map(_._2), xxhash64(col("fp")))))
-        .select("fp")
+    // the residue's key probe scans every partition of `maybe`: it is
+    // the job that materializes the lazy pin
+    val (residueFps, residueCut) = keyProbe(spark, maybe.select("fp"))
+    val seenSide = residueCut.fold(seen)(c => seen.where(c)).select("fp")
     AcceptStats.record(h.artifactDir,
       sums = Map("sum_ticks" -> 1L,
-        "sum_residue_fallbacks" -> (if (residueRows > cap) 1L else 0L),
+        "sum_residue_fallbacks" -> (if (residueCut.isEmpty) 1L else 0L),
         "sum_recent_distributed" -> (if (distributedTail) 1L else 0L)),
       lasts = Map("last_base_slices" -> baseSlices,
         "last_base_cache_hit" -> (if (cacheHit) 1L else 0L),
         "last_base_bytes" -> baseBytes,
         "last_cache_bytes" -> cacheBytes,
         "last_recent_hashes" -> tailCount,
-        "last_residue_fps" -> residue.length.toLong))
+        "last_residue_fps" -> residueFps.toLong))
     definitelyNew.unionByName(
       maybe.join(seenSide, Seq("fp"), "left_anti"))
   }
@@ -804,8 +829,8 @@ object StreamingAcceptIngest {
         if (won != mode) refuseMode(outDir, won, mode)
     }
 
-  /** Accessor-side check: refuse a marked mismatch; a pre-marker
-    * corpus (stamped by an older build) is served as addressed.
+  /** Door-side check before any work: refuse a marked mismatch; an
+    * unmarked outDir is claimed by the first batch that lands.
     */
   private def requireModeIfMarked(outDir: String, mode: String): Unit =
     modeOf(outDir).foreach(cur => if (cur != mode)
@@ -823,37 +848,52 @@ object StreamingAcceptIngest {
     */
   def applyBatch(batch: DataFrame, batchId: Long, idCol: String,
       textCol: String, outDir: String, parts: Int = 1,
-      expectedItems: Long = 4000000L): Unit = {
+      expectedItems: Long = 4000000L): Unit =
+    acceptBatch(batch, batchId, idCol, textCol, outDir, parts,
+      expectedItems, near = None)
+
+  /** THE batch body behind both doors: checks, in-batch dedup, the
+    * exact screen, near mode's stage over its survivors, then the
+    * survivors pinned and counted in one job; a batch with survivors
+    * stamps (or re-checks) the mode marker, lands and advances. An
+    * empty or all-duplicate batch stamps no marker, lands nothing and
+    * advances nothing — its replay is trivially idempotent (same
+    * screen, same empty survivor set).
+    */
+  private def acceptBatch(batch: DataFrame, batchId: Long, idCol: String,
+      textCol: String, outDir: String, parts: Int, expectedItems: Long,
+      near: Option[NearScreen]): Unit = {
     requireCleanColumns(batch)
     val spark = batch.sparkSession
     graft.plans.GraftFunctions.ensureRegistered(spark)
     requireBloomCapacity(spark, expectedItems)
     val corpus = corpusDir(outDir)
     CorpusLanding.requireLocal(outDir)
-    // refuse a near-mode sink before any work; the marker itself is
-    // stamped only by a batch that lands (an empty batch leaves none)
-    requireModeIfMarked(outDir, "exact")
+    val mode = if (near.isDefined) "near" else "exact"
+    // refuse the other mode's sink before any work
+    requireModeIfMarked(outDir, mode)
+    val h = handleOf(mode, corpus, idCol, textCol, expectedItems)
+    val hasPrior = CorpusLanding.hasData(corpus)
     val inBatch = inBatchDedup(batch, idCol, textCol)
-    val fresh =
-      if (CorpusLanding.hasData(corpus))
-        exactScreen(digestHandle(corpus, idCol, textCol, expectedItems),
-          spark, inBatch, batchId, expectedItems)
+    val exactFresh = traced(h.artifactDir, "exact_screen") {
+      if (hasPrior) exactScreen(h, spark, inBatch, batchId, expectedItems)
       else inBatch
-    // pinned: the emptiness check and the landing must read ONE
-    // evaluation of the screen (not re-run the probe + residue join);
-    // the count that checks emptiness is the job that materializes it
-    val (survivors, n) =
+    }
+    val fresh = near.fold(exactFresh)(ns => nearScreen(ns, h, spark,
+      exactFresh, batchId, idCol, textCol, hasPrior))
+    // pinned: the landing reads ONE evaluation of the screens; the
+    // count that checks emptiness is the job that materializes it
+    val (survivors, n) = traced(h.artifactDir, "verify_and_pin") {
       Pin.loop().pinCount(fresh.withColumn("_ib", lit(batchId)), "")
-    // survivors can be empty (an empty or all-duplicate batch): no
-    // marker, nothing lands, nothing advances — the replay of such a
-    // batch is trivially idempotent (same screen, same empty survivor
-    // set)
+    }
     if (n > 0) {
-      stampOrRequireMode(outDir, "exact")
-      CorpusLanding.land(survivors, batchId, corpus, hashCol = "fp",
-        parts = parts)
+      stampOrRequireMode(outDir, mode)
+      traced(h.artifactDir, "land") {
+        CorpusLanding.land(survivors, batchId, corpus, hashCol = "fp",
+          parts = parts)
+      }
       // tick: advance the screen artifact over the landed generation
-      digestHandle(corpus, idCol, textCol, expectedItems).advance(spark)
+      traced(h.artifactDir, "advance") { h.advance(spark) }
     }
   }
 
@@ -878,14 +918,14 @@ object StreamingAcceptIngest {
 
   /** Screen artifact for the near mode: the exact pieces (digests +
     * bloomparts) PLUS per-doc MinHash signatures (id-clustered — the
-    * verification lookup pushes a capped In) and the banded LSH index
-    * ((band, bucket)-clustered — the probe pushes the batch's
-    * (band, bucket) pairs). All additive: bands/signatures derive per
-    * doc from the landed text — and from ONE shared shingle pass per
-    * advanced generation: both builders read one memoized, pinned
-    * signature table of the advance. Rebuilds skip the pin — a
-    * whole-corpus shingle materialization is exactly the thing a
-    * streamed rebuild must not hold.
+    * verification lookup's key probe is the candidate ids) and the
+    * banded LSH index ((band, bucket)-clustered — the candidate probe's
+    * key is the batch's (band, bucket) pairs). All additive:
+    * bands/signatures derive per doc from the landed text — and from
+    * ONE shared shingle pass per advanced generation: both builders
+    * read one memoized, pinned signature table of the advance.
+    * Rebuilds skip the pin — a whole-corpus shingle materialization is
+    * exactly the thing a streamed rebuild must not hold.
     */
   private def nearHandle(corpusPath: String, idCol: String,
       textCol: String, expectedItems: Long) = {
@@ -924,24 +964,36 @@ object StreamingAcceptIngest {
       compactEvery = acceptCompactEvery)
   }
 
+  /** The screen artifact of `mode`'s family: `near` → [[nearHandle]],
+    * otherwise [[digestHandle]].
+    */
+  private def handleOf(mode: String, corpusPath: String, idCol: String,
+      textCol: String, expectedItems: Long): IncrementalDocArtifact.Handle =
+    if (mode == "near") nearHandle(corpusPath, idCol, textCol, expectedItems)
+    else digestHandle(corpusPath, idCol, textCol, expectedItems)
+
+  /** Near mode's parameters ([[applyBatchNear]]). */
+  private final case class NearScreen(threshold: Double,
+      maxIndexPerBucket: Int)
+
   /** [[applyBatch]] with a SECOND screen: a doc is rejected if its
     * ESTIMATED Jaccard (matching INDEPENDENT-SEED MinHash components
     * / 32 — the textbook estimator, see [[VerK]] for why the
     * banding signature cannot be used here) against ANY
     * previously-accepted doc, or any surviving smaller-id doc of its
-    * own batch, reaches `threshold`. Candidates come from
-    * the stored banded index (probe pushes the batch's (band, bucket)
-    * pairs as a capped per-band In on the (band, bucket)-clustered
-    * fold — the probe key, so the prune matches the clustering;
-    * verification pushes candidate ids on the id-clustered signature
-    * fold — the tick never scans the stored index). The batch's
-    * banding signature AND verification signature come out of ONE
-    * explode + ONE per-id aggregate, pinned at doc granularity (the
-    * near tick's dominant constant was paying the shingle explode
-    * and its shuffle once per signature family — and pinning the
-    * EXPLODED rows instead measured WORSE than the recompute, §9.37).
-    * `maxIndexPerBucket` is the candidate-volume knob
-    * ([[StreamingLshDedup]]'s): hot buckets keep their earliest
+    * own batch, reaches `threshold`. Candidates come from the stored
+    * banded index, cut to the batch's (band, bucket) pairs on the
+    * (band, bucket)-clustered fold; verification fetches the
+    * candidates' signatures from the id-clustered signature fold —
+    * both through the tick's one probe form ([[keyProbe]]), so the
+    * tick never scans the stored index unfiltered below `residueCap`.
+    * The batch's banding signature AND verification signature come
+    * out of ONE explode + ONE per-id aggregate, pinned at doc
+    * granularity (the near tick's dominant constant was paying the
+    * shingle explode and its shuffle once per signature family — and
+    * pinning the EXPLODED rows instead measured WORSE than the
+    * recompute, §9.37). `maxIndexPerBucket` is the candidate-volume
+    * knob ([[StreamingLshDedup]]'s): hot buckets keep their earliest
     * witnesses, so a genuinely-new doc colliding with a crowd still
     * verifies against the crowd's representatives; a near-dup whose
     * only similar witness was capped out can slip through (documented
@@ -968,34 +1020,31 @@ object StreamingAcceptIngest {
       maxIndexPerBucket: Int = 64): Unit = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
-    if (batch.isEmpty) return
-    requireCleanColumns(batch)
-    val spark = batch.sparkSession
-    graft.plans.GraftFunctions.ensureRegistered(spark)
-    requireBloomCapacity(spark, expectedItems)
-    val corpus = corpusDir(outDir)
-    CorpusLanding.requireLocal(outDir)
-    stampOrRequireMode(outDir, "near")
-    val h = nearHandle(corpus, idCol, textCol, expectedItems)
-    val inBatch = inBatchDedup(batch, idCol, textCol)
-    val hasPrior = CorpusLanding.hasData(corpus)
-    // exact screen first (ONE implementation with applyBatch), pinned:
-    // the signature table AND the final anti-join both read it — an
-    // unpinned frame would re-run the bloom probe + residue join
-    val exactFresh = traced(h.artifactDir, "exact_screen") {
-      Pin(if (hasPrior) exactScreen(h, spark, inBatch, batchId, expectedItems)
-      else inBatch)
-    }
+    acceptBatch(batch, batchId, idCol, textCol, outDir, parts,
+      expectedItems, Some(NearScreen(threshold, maxIndexPerBucket)))
+  }
+
+  /** Near mode's stage of the batch body ([[applyBatchNear]]): the rows
+    * of `exactFresh` (the exact screen's survivors) that no
+    * previously-accepted doc and no smaller-id row of `exactFresh`
+    * estimates at or above the threshold.
+    */
+  private def nearScreen(n: NearScreen, h: IncrementalDocArtifact.Handle,
+      spark: SparkSession, screened: DataFrame, batchId: Long,
+      idCol: String, textCol: String, hasPrior: Boolean): DataFrame = {
+    // pinned: the signature table AND the final anti-join read it too —
+    // an unpinned frame would re-run the exact screen. Lazily: the id
+    // check's aggregate is its first, full scan
+    val exactFresh = Pin.lazily(screened)
     val dupId = traced(h.artifactDir, "dup_id_check") {
       exactFresh.groupBy(col(idCol)).count()
-        .where(col("count") > 1).limit(1).collect()
+        .where(col("count") > 1).select(col(idCol)).collect()
     }
     if (dupId.nonEmpty) throw new IllegalArgumentException(
       s"near-mode accept requires unique $idCol values per batch " +
         s"(duplicate: ${dupId.head.get(0)}) — duplicate ids would merge " +
         "into one bogus MinHash signature and the id-keyed joins would " +
         "drop or keep the shared rows together; re-key the batch")
-    // ---- near screen over the exact survivors ----
     // candidates from the loop's seeded-mix banding (same k=8/r=2
     // band structure as the engine default); VERIFICATION by the
     // independent-seed signature — both signature families from
@@ -1012,61 +1061,39 @@ object StreamingAcceptIngest {
     def estimate(a: Column, b: Column) =
       aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
         lit(0), (acc, v) => acc + v).cast("double") / lit(VerK.toDouble)
-    // vs the ACCEPTED index (anchored): capped (band, bucket)-pair
-    // probe, then capped id lookup on the signature fold, then the
-    // estimator
-    val dupVsAccepted: DataFrame =
-      if (hasPrior) {
-        val pairRows = traced(h.artifactDir, "pair_collect") {
-          batchBands.select(col("band"), col("bucket"))
-            .distinct().limit(residueCap + 1).collect()
-        }
-        val storedBands0 = h.serve(spark, "bands")
-          .where(col("_ib") < batchId)
-        val pairsOverCap = pairRows.length > residueCap
-        val storedBands =
-          if (!pairsOverCap) {
-            // per-band bucket In, OR'd: the fold clusters by
-            // (band, bucket), so pruning on the composite probe key
-            // skips row groups a bucket-only In would still read
-            // (identical bucket digests occur across bands); an EMPTY
-            // probe (all-exact-dup batch) filters to nothing — never
-            // scan the stored index against no probes
-            val pred = pairRows.groupBy(_.getInt(0)).map { case (b, rs) =>
-              col("band") === lit(b) &&
-                col("bucket").isInCollection(
-                  rs.map(_.getString(1)).toSeq)
-            }.reduceOption(_ || _).getOrElse(lit(false))
-            storedBands0.where(pred)
-          } else storedBands0
-        val cands = traced(h.artifactDir, "cand_probe") {
-          Pin(graft.dedup.MinHashLSH.probeCandidatesBanded(
-            storedBands.select(col(idCol), col("band"), col("bucket")),
-            batchBands, idCol, maxIndexPerBucket))
-        }
-        val candIds = traced(h.artifactDir, "cand_ids") {
-          cands.select("id_index").distinct()
-            .limit(residueCap + 1).collect().map(_.get(0))
-        }
-        val sigs0 = h.serve(spark, "sigs").where(col("_ib") < batchId)
-        val storedSigs =
-          (if (candIds.length <= residueCap)
-            sigs0.where(col(idCol).isInCollection(candIds.toSeq))
-          else sigs0).select(col(idCol).as("id_index"),
-            col("sig").as("sig_a"))
-        AcceptStats.record(h.artifactDir,
-          sums = Map(
-            "sum_band_over_caps" -> (if (pairsOverCap) 1L else 0L),
-            "sum_cand_over_caps" ->
-              (if (candIds.length > residueCap) 1L else 0L)),
-          lasts = Map("last_band_pairs" -> pairRows.length.toLong,
-            "last_cand_ids" -> candIds.length.toLong))
-        cands.join(storedSigs, "id_index")
-          .join(batchSigs.select(col(idCol).as("id_probe"),
-            col("sig").as("sig_b")), "id_probe")
-          .where(estimate(col("sig_a"), col("sig_b")) >= threshold)
-          .select(col("id_probe").as(idCol)).distinct()
-      } else exactFresh.limit(0).select(col(idCol))
+    // vs the ACCEPTED index (anchored): the batch's (band, bucket)
+    // pairs cut the stored bands, the candidates' ids cut the stored
+    // signatures, then the estimator
+    def dupVsAccepted: DataFrame = {
+      val (pairs, pairCut) = traced(h.artifactDir, "pair_collect") {
+        keyProbe(spark, batchBands.select(col("band"), col("bucket")))
+      }
+      val bands = h.serve(spark, "bands").where(col("_ib") < batchId)
+      // lazily pinned: the candidate-id probe's scan materializes it
+      val cands = traced(h.artifactDir, "cand_probe") {
+        Pin.lazily(graft.dedup.MinHashLSH.probeCandidatesBanded(
+          pairCut.fold(bands)(c => bands.where(c))
+            .select(col(idCol), col("band"), col("bucket")),
+          batchBands, idCol, n.maxIndexPerBucket))
+      }
+      val (candIds, candCut) = traced(h.artifactDir, "cand_ids") {
+        keyProbe(spark, cands.select(col("id_index").as(idCol)))
+      }
+      val sigs = h.serve(spark, "sigs").where(col("_ib") < batchId)
+      AcceptStats.record(h.artifactDir,
+        sums = Map(
+          "sum_band_over_caps" -> (if (pairCut.isEmpty) 1L else 0L),
+          "sum_cand_over_caps" -> (if (candCut.isEmpty) 1L else 0L)),
+        lasts = Map("last_band_pairs" -> pairs.toLong,
+          "last_cand_ids" -> candIds.toLong))
+      cands.join(candCut.fold(sigs)(c => sigs.where(c))
+          .select(col(idCol).as("id_index"), col("sig").as("sig_a")),
+          "id_index")
+        .join(batchSigs.select(col(idCol).as("id_probe"),
+          col("sig").as("sig_b")), "id_probe")
+        .where(estimate(col("sig_a"), col("sig_b")) >= n.threshold)
+        .select(col("id_probe").as(idCol))
+    }
     // vs SMALLER-ID batch peers (deterministic in-batch resolution)
     // capped like the stored-index probe: a boilerplate-heavy batch
     // colliding in one bucket must not expand quadratically — the
@@ -1074,42 +1101,17 @@ object StreamingAcceptIngest {
     // truncation semantics as maxIndexPerBucket)
     val peerPairs = graft.dedup.PairGen.pairsWithin(
         batchBands.select(col("band"), col("bucket"), col(idCol)),
-        Seq("band", "bucket"), col(idCol), maxIndexPerBucket)
+        Seq("band", "bucket"), col(idCol), n.maxIndexPerBucket)
       .select(col("a"), col("b")).distinct()
     val dupVsPeers = peerPairs
       .join(batchSigs.select(col(idCol).as("a"), col("sig").as("sig_a")), "a")
       .join(batchSigs.select(col(idCol).as("b"), col("sig").as("sig_b")), "b")
-      .where(estimate(col("sig_a"), col("sig_b")) >= threshold)
-      .select(col("b").as(idCol)).distinct() // b is the larger id
-    val fresh = exactFresh
-      .join(dupVsAccepted.unionByName(dupVsPeers).distinct(),
-        Seq(idCol), "left_anti")
-    val survivors = traced(h.artifactDir, "verify_and_pin") {
-      Pin(fresh.withColumn("_ib", lit(batchId)))
-    }
-    if (!survivors.isEmpty) {
-      traced(h.artifactDir, "land") {
-        CorpusLanding.land(survivors, batchId, corpus, hashCol = "fp",
-          parts = parts)
-      }
-      traced(h.artifactDir, "advance") {
-        h.advance(spark)
-      }
-    }
+      .where(estimate(col("sig_a"), col("sig_b")) >= n.threshold)
+      .select(col("b").as(idCol)) // b is the larger id
+    val dups = if (hasPrior) dupVsAccepted.unionByName(dupVsPeers)
+      else dupVsPeers
+    exactFresh.join(dups.distinct(), Seq(idCol), "left_anti")
   }
-
-  /** [[start]] in near-dup mode. */
-  def startNear(docs: DataFrame, idCol: String, textCol: String,
-      outDir: String, checkpoint: String, trigger: Trigger,
-      threshold: Double, expectedItems: Long = 4000000L): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchNear(batch, batchId, idCol, textCol, outDir,
-          threshold, expectedItems = expectedItems)
-      }
-      .start()
 
   /** The accepted corpus — every surviving document row (original
     * columns + `fp` + `_ib`). This IS a corpus directory: any
@@ -1141,85 +1143,45 @@ object StreamingAcceptIngest {
     */
   def acceptedCorpusPath(outDir: String): String = corpusDir(outDir)
 
-  /** The EXACT-mode screen artifact's storage directory — the
-    * address for inspection ([[AcceptStats]] keys on it) and teardown
-    * (drop it to force a fresh screen build from the corpus).
-    * Mode-checked like every mode-specific accessor: against a
-    * near-mode sink this would silently return a path that does not
-    * exist — a teardown script would delete nothing and gauge
-    * lookups would read as "no ticks ran".
+  /** The screen artifact `outDir`'s mode marker names (class doc): an
+    * unmarked outDir gets the exact family.
+    */
+  private def markedHandle(outDir: String, idCol: String,
+      textCol: String, expectedItems: Long): IncrementalDocArtifact.Handle =
+    handleOf(modeOf(outDir).getOrElse("exact"), corpusDir(outDir), idCol,
+      textCol, expectedItems)
+
+  /** The screen artifact's storage directory — the address for
+    * inspection ([[AcceptStats]] keys on it) and teardown (drop it to
+    * force a fresh screen build from the corpus). The marked mode's
+    * family: a teardown script or gauge lookup never addresses a
+    * family the sink does not maintain.
     */
   def screenArtifactDir(outDir: String, idCol: String, textCol: String,
-      expectedItems: Long = 4000000L): String = {
-    requireModeIfMarked(outDir, "exact")
-    digestHandle(corpusDir(outDir), idCol, textCol, expectedItems)
-      .artifactDir
-  }
+      expectedItems: Long = 4000000L): String =
+    markedHandle(outDir, idCol, textCol, expectedItems).artifactDir
 
-  /** [[screenArtifactDir]] for a near-mode sink. */
-  def screenArtifactDirNear(outDir: String, idCol: String,
-      textCol: String, expectedItems: Long = 4000000L): String = {
-    requireModeIfMarked(outDir, "near")
-    nearHandle(corpusDir(outDir), idCol, textCol, expectedItems)
-      .artifactDir
-  }
-
-  /** Stored digest view (id, fp, _ib) of the EXACT-mode screen
-    * artifact (near-mode sinks: [[digestsNear]] — the families are
-    * separate, and the mode marker refuses the wrong accessor
-    * before it would build a redundant second screen).
+  /** Stored digest view (id, fp, _ib) of the marked mode's screen
+    * artifact.
     */
   def digests(spark: SparkSession, outDir: String, idCol: String,
-      textCol: String, expectedItems: Long = 4000000L): DataFrame = {
-    requireModeIfMarked(outDir, "exact")
-    digestHandle(corpusDir(outDir), idCol, textCol, expectedItems)
+      textCol: String, expectedItems: Long = 4000000L): DataFrame =
+    markedHandle(outDir, idCol, textCol, expectedItems)
       .serve(spark, "digests")
-  }
 
-  /** [[digests]] for a near-mode sink. */
-  def digestsNear(spark: SparkSession, outDir: String, idCol: String,
-      textCol: String, expectedItems: Long = 4000000L): DataFrame = {
-    requireModeIfMarked(outDir, "near")
-    nearHandle(corpusDir(outDir), idCol, textCol, expectedItems)
-      .serve(spark, "digests")
-  }
-
-  /** Join any in-flight detached fold of the EXACT-mode screen
+  /** Join any in-flight detached fold of the marked mode's screen
     * artifact (the distributed-tail path queues one) — the
     * determinism hook for specs, probes and shutdown paths.
     */
   def awaitScreenMaintenance(outDir: String, idCol: String,
-      textCol: String, expectedItems: Long = 4000000L): Unit = {
-    requireModeIfMarked(outDir, "exact")
-    digestHandle(corpusDir(outDir), idCol, textCol, expectedItems)
-      .awaitMaintenance()
-  }
+      textCol: String, expectedItems: Long = 4000000L): Unit =
+    markedHandle(outDir, idCol, textCol, expectedItems).awaitMaintenance()
 
-  /** [[awaitScreenMaintenance]] for a near-mode sink. */
-  def awaitScreenMaintenanceNear(outDir: String, idCol: String,
-      textCol: String, expectedItems: Long = 4000000L): Unit = {
-    requireModeIfMarked(outDir, "near")
-    nearHandle(corpusDir(outDir), idCol, textCol, expectedItems)
-      .awaitMaintenance()
-  }
-
-  /** Fold the EXACT-mode screen artifact now (also runs on the store
-    * cadence); near-mode sinks: [[compactNear]].
-    */
-  def compact(spark: SparkSession, outDir: String, idCol: String,
-      textCol: String, expectedItems: Long = 4000000L): Unit = {
-    requireModeIfMarked(outDir, "exact")
-    digestHandle(corpusDir(outDir), idCol, textCol, expectedItems)
-      .compact(spark)
-  }
-
-  /** [[compact]] for a near-mode sink (folds digests, bloom partials,
+  /** Fold the marked mode's screen artifact now (also runs on the
+    * store cadence; near mode folds digests, bloom partials,
     * signatures and the banded index together).
     */
-  def compactNear(spark: SparkSession, outDir: String, idCol: String,
-      textCol: String, expectedItems: Long = 4000000L): Unit = {
-    requireModeIfMarked(outDir, "near")
-    nearHandle(corpusDir(outDir), idCol, textCol, expectedItems)
-      .compact(spark)
-  }
+  def compact(spark: SparkSession, outDir: String, idCol: String,
+      textCol: String, expectedItems: Long = 4000000L): Unit =
+    markedHandle(outDir, idCol, textCol, expectedItems).compact(spark)
 }

@@ -207,6 +207,26 @@ class StreamingAcceptIngestSpec extends SparkSpec {
       .select("doc_id", "text").as[(Long, String)].collect().toSet shouldBe
       (1L to 40L).map(i => (if (i == 7L) 999L else 2000L + i, s"new $i")).toSet
     StreamingAcceptIngest.accepted(spark, out).count() shouldBe 300L
+    // a near batch whose band pairs and candidate ids both pass the
+    // threshold: its stored-side lookups list no more keys either
+    val outN = Files.createTempDirectory("graft-accept-inlist-near").toString
+    def words(i: Int): String = (0 until 30).map(j =>
+      f"${scala.util.hashing.MurmurHash3.stringHash(s"w$i-$j")}%08x").mkString(" ")
+    StreamingAcceptIngest.applyBatchNear(
+      (1 to 20).map(i => (i.toLong, words(i))).toDF("doc_id", "text"),
+      0L, "doc_id", "text", outN, threshold = 0.7)
+    // batch 1: near copies of 15 accepted docs, and 5 new docs
+    val nearRows = (1 to 15).map(i => (100L + i, s"${words(i)} zz")) ++
+      (21 to 25).map(i => (i.toLong, words(i)))
+    val nearLists = inListsOf(StreamingAcceptIngest.applyBatchNear(
+      nearRows.toDF("doc_id", "text"), 1L, "doc_id", "text", outN,
+      threshold = 0.7))
+    nearLists.filter(_ > threshold) shouldBe empty
+    val nearStats = StreamingAcceptIngest.AcceptStats.snapshot(
+      StreamingAcceptIngest.screenArtifactDir(outN, "doc_id", "text"))
+    nearStats("last_band_pairs") should be > threshold.toLong
+    nearStats("last_cand_ids") should be > threshold.toLong
+    acceptedIds(outN) shouldBe (1L to 25L).toSet
   }
 
   test("a residue over the cap but under the In-pushdown threshold takes the plain anti-join and stays exact") {
@@ -241,6 +261,13 @@ class StreamingAcceptIngestSpec extends SparkSpec {
       0L, "doc_id", "text", out, threshold = 0.7)
     an[IllegalStateException] should be thrownBy
       StreamingAcceptIngest.applyBatch(noRows, 1L, "doc_id", "text", out)
+    // and an exact sink refuses an empty near batch
+    val outE = Files.createTempDirectory("graft-accept-empty-e").toString
+    StreamingAcceptIngest.applyBatch(Seq((1L, "a")).toDF("doc_id", "text"),
+      0L, "doc_id", "text", outE)
+    an[IllegalStateException] should be thrownBy
+      StreamingAcceptIngest.applyBatchNear(noRows, 1L, "doc_id", "text",
+        outE, threshold = 0.7)
   }
 
   test("an empty exact batch on a live sink changes no corpus file and no screen generation") {
@@ -446,7 +473,7 @@ class StreamingAcceptIngestSpec extends SparkSpec {
       Set(1L, 2L, 4L)
   }
 
-  test("one mode per outDir: the marker refuses the other mode's doors and accessors") {
+  test("one mode per outDir: the marker refuses the other mode's doors; the accessors serve the marked family") {
     val out = Files.createTempDirectory("graft-accept-mode-e").toString
     StreamingAcceptIngest.applyBatch(
       Seq((1L, "a")).toDF("doc_id", "text"), 0L, "doc_id", "text", out)
@@ -454,10 +481,6 @@ class StreamingAcceptIngestSpec extends SparkSpec {
       StreamingAcceptIngest.applyBatchNear(
         Seq((2L, "b")).toDF("doc_id", "text"), 1L, "doc_id", "text",
         out, threshold = 0.7)
-    an[IllegalStateException] should be thrownBy
-      StreamingAcceptIngest.digestsNear(spark, out, "doc_id", "text")
-    an[IllegalStateException] should be thrownBy
-      StreamingAcceptIngest.compactNear(spark, out, "doc_id", "text")
     val outN = Files.createTempDirectory("graft-accept-mode-n").toString
     StreamingAcceptIngest.applyBatchNear(
       Seq((1L, "a")).toDF("doc_id", "text"), 0L, "doc_id", "text",
@@ -465,12 +488,21 @@ class StreamingAcceptIngestSpec extends SparkSpec {
     an[IllegalStateException] should be thrownBy
       StreamingAcceptIngest.applyBatch(
         Seq((2L, "b")).toDF("doc_id", "text"), 1L, "doc_id", "text", outN)
-    an[IllegalStateException] should be thrownBy
-      StreamingAcceptIngest.digests(spark, outN, "doc_id", "text")
-    an[IllegalStateException] should be thrownBy
-      StreamingAcceptIngest.compact(spark, outN, "doc_id", "text")
+    // each sink's accessors serve the family its marker names
+    def family(outDir: String, key: String): String =
+      Paths.get(graft.sources.ArtifactStore.root, graft.sources.ArtifactStore
+        .pathKey(StreamingAcceptIngest.acceptedCorpusPath(outDir)) + "_" + key)
+        .toString
+    StreamingAcceptIngest.screenArtifactDir(outN, "doc_id", "text") shouldBe
+      family(outN, "acceptnear_doc_id_text_e4000000_s1_m1")
+    StreamingAcceptIngest.compact(spark, outN, "doc_id", "text")
+    StreamingAcceptIngest.digests(spark, outN, "doc_id", "text")
+      .count() shouldBe acceptedIds(outN).size.toLong
+    acceptedIds(outN) shouldBe Set(1L)
     // the exact sink still serves through its own doors after the
     // refused attempts (no partial second family was created)
+    StreamingAcceptIngest.screenArtifactDir(out, "doc_id", "text") shouldBe
+      family(out, "accept_doc_id_text_e4000000_s1")
     acceptedIds(out) shouldBe Set(1L)
     StreamingAcceptIngest.digests(spark, out, "doc_id", "text")
       .count() shouldBe 1L
@@ -563,7 +595,7 @@ class StreamingAcceptIngestSpec extends SparkSpec {
     // instances to one build (the grouped-by-id-alone bug merged
     // their shingles into a signature matching neither text)
     val art = java.nio.file.Paths.get(
-      StreamingAcceptIngest.screenArtifactDirNear(out, "doc_id", "text"))
+      StreamingAcceptIngest.screenArtifactDir(out, "doc_id", "text"))
     val s = java.nio.file.Files.walk(art)
     try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
       .forEach(f => java.nio.file.Files.delete(f))

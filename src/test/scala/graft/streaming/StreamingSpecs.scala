@@ -52,6 +52,8 @@ class StreamSyncSpec extends SparkSpec {
     q2.awaitTermination()
     dest.read(spark).as[(String, Long, String)].collect().toSet shouldBe
       Set(("a", 2L, "a-v2"), ("b", 5L, "b-v5"), ("c", 9L, "c-v9"))
+    // the second drop committed its winners as one delta, not a rewrite
+    dest.currentManifest.get.deltas.size shouldBe 1
 
     // third run with NO new files: checkpoint prevents reprocessing
     val q3 = StreamSync.start(spark, in, schema, dest, spec, ckpt, Trigger.AvailableNow())

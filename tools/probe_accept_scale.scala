@@ -4,7 +4,7 @@
 // fp-hash-SLICED stored Bloom (per-slice filters in the base
 // snapshot, cached driver-side by snapshot identity; per-generation
 // raw-hash deltas; each row probes only its own slice) plus a
-// capped-In exact residue on the fp-clustered digest fold. Per-batch
+// capped exact residue on the fp-clustered digest fold. Per-batch
 // cost must be FLAT in accepted size; the naive form (rebuild the
 // bloom from the digest table + full anti-join build per batch) is
 // O(accepted) per tick by construction. Phase 2 re-runs the exact
@@ -122,8 +122,10 @@ plog.println("accept stats (100M provisioning): " +
 // smaller batches (signature + banding work per doc is heavier), 30
 // batches, ~20% near-dup re-offers (sampled accepted texts with a
 // tail perturbation) + a few exact re-offers. Cost must stay flat:
-// the probe pushes the batch bucket set as a capped In and the
-// verification fetches signatures by capped-In id lookup.
+// the batch's (band, bucket) pairs cut the stored bands and the
+// candidate ids cut the stored signatures, each through the loop's
+// one probe form (literal In only at or under the parquet In-pushdown
+// threshold, a broadcast Bloom of the keys' hashes up to the cap).
 val outN = "/tmp/accept_scale_probe_near"
 new java.lang.ProcessBuilder("rm", "-rf", outN).start().waitFor()
 val nBatchesN = 30
